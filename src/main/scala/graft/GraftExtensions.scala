@@ -200,7 +200,7 @@ object GraftExtensions {
       // every commit whose recorded #ts lies in [from, to]. Bounds
       // must not mix kinds. Resolution is the streaming source's:
       // the lower bound anchors at the first commit at-or-after the
-      // instant (strict — legacy manifests refuse loudly), the upper
+      // instant, the upper
       // at the newest commit at-or-before it.
       val isInstant = (e: Expression) => e match {
         case org.apache.spark.sql.catalyst.expressions.Literal(_,

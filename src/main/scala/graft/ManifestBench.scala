@@ -131,27 +131,15 @@ object ManifestBench {
           .latestVersion(spark, dir).contains(n - 1)))
         headResults += (s"""{"versions":$n,""" +
           f""""pointer_ms":$pointerMs%.3f,"list_ms":$listMs%.3f}""")
-        // exactly-once guard series (round 16): a SEALED #txnhw
+        // exactly-once guard series (round 16): the sealed #txnhw
         // ledger answers the idempotence probe from ONE header read
-        // of the head — flat at any retention; a pre-ledger table
-        // pays the newest-first header scan of every retained
-        // version, which is the cost (and the expire-soundness hole)
-        // the ledger retired.
+        // of the head — flat at any retention.
         java.nio.file.Files.write(mdir.resolve("_head"),
           (n - 1).toString.getBytes("UTF-8"))
         val sealedMs = timeMs(20)(require(graft.lake.Versioned
           .txnHighWater(spark, dir, "nobody").isEmpty))
-        // strip the seal from the head: the legacy-table shape
-        val headPath = mdir.resolve(f"v${n - 1}%05d.txt")
-        val noSeal = new String(java.nio.file.Files
-          .readAllBytes(headPath), "UTF-8").linesIterator
-          .filterNot(_.startsWith("#txnseal"))
-          .mkString("", "\n", "\n")
-        java.nio.file.Files.write(headPath, noSeal.getBytes("UTF-8"))
-        val scanMs = timeMs(1)(require(graft.lake.Versioned
-          .txnHighWater(spark, dir, "nobody").isEmpty))
         txnResults += (s"""{"versions":$n,""" +
-          f""""sealed_ms":$sealedMs%.3f,"scan_ms":$scanMs%.3f}""")
+          f""""sealed_ms":$sealedMs%.3f}""")
       }
       // ledger-retention series (round 17): per-commit header bytes
       // under WRITER CHURN — n distinct stamped identities in the

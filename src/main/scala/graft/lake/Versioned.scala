@@ -89,7 +89,13 @@ import org.apache.spark.sql.types.{BooleanType, DataType, StructField, StructTyp
   * exists+rename under a per-table JVM lock ([[RenameCasStore]]: the
   * rename itself refuses an existing destination across JVMs). An
   * object store would plug its conditional-put (`If-None-Match`) in
-  * here. `SPARK_GRAFT_CAS=rename|link` overrides the selection.
+  * here.
+  *
+  * Format epoch: every manifest file carries `#schema`, `#ts` and
+  * `#txnseal\t1`, and every checkpoint sidecar ends in a valid `#eof`
+  * trailer. A table written before those markers existed is refused
+  * by name at parse time (see `docs/FORMAT.md`), never read through a
+  * fallback.
   */
 object Versioned {
 
@@ -283,34 +289,19 @@ object Versioned {
     }
   }
 
-  /** A parsed manifest: the version's recorded table schema (None only
-    * for manifests written before schema tracking — round-11 commits
-    * always record one), the optional (appId, batchId) transaction
-    * stamp of the commit that created it (streaming exactly-once),
-    * and its data-file lines.
-    *
-    * LEGACY-FALLBACK INVARIANT (pinned by GraftCatalogSpec's "a
-    * metadata commit on a LEGACY manifest (no #ts) must not erase the
-    * pointer-derived bloom fallback"): a MODERN manifest
-    * is one carrying a `#ts` commit instant; only pre-`#ts` manifests
-    * may DERIVE policy from their lines/pointers ([[statColsOf]] /
-    * [[bloomCfgOf]]). Two rules every future header consumer must
-    * copy: (1) a "legacy means derive" fallback keys on `ts.isEmpty`,
-    * never on the header being absent in a modern manifest (absent
-    * there means EXPLICITLY NONE); (2) every metadata commit
-    * republishes the RESOLVED policy (`statColsOf`/`bloomCfgOf`
-    * output), never the raw `m.statColsPolicy`/`m.bloomCfg` fields —
-    * republishing raw fields erases the legacy fallback at the
-    * instant the commit stamps `#ts`.
-    */
-  private final case class Manifest(schema: Option[StructType],
+  /** A parsed manifest: the version's recorded table schema and `#ts`
+    * commit instant, the optional (appId, batchId) transaction stamp
+    * of the commit that created it (streaming exactly-once), and its
+    * data-file lines. An absent `#statcols` / `#bloomcfg` header means
+    * the table declares none. */
+  private final case class Manifest(schema: StructType,
       txn: Option[(String, Long)], checks: Seq[(String, String)],
       lines: Seq[String], dvs: Seq[(String, String)] = Nil,
       blooms: Seq[(String, String, String)] = Nil,
       op: Option[String] = None,
       bloomCfg: Seq[(String, Long, Double)] = Nil,
       statColsPolicy: Seq[String] = Nil,
-      ts: Option[Long] = None,
+      ts: Long,
       commitUuid: Option[String] = None,
       chainDepth: Int = 0,
       colMap: Seq[(String, String)] = Nil,
@@ -318,7 +309,6 @@ object Versioned {
       colDrops: Seq[String] = Nil,
       colMapMode: Option[String] = None,
       txnHw: Seq[(String, Long, Option[Long])] = Nil,
-      txnSealed: Boolean = false,
       clusterCols: Seq[String] = Nil,
       txnRetention: Option[Long] = None,
       minWriter: Option[Int] = None,
@@ -382,8 +372,7 @@ object Versioned {
   // staged files under the union of this policy and its caller's
   // declaration, so one untracked writer can never silently kill
   // metadata-only COUNT(*) or degrade the stats pruner toward
-  // O(table). Pre-policy manifests derive it from the columns
-  // observed on their data lines.
+  // O(table).
   private val StatColsHeader = "#statcols\t"
   // commit instant: `#ts\t<epochMillis>` — recorded at publish time as
   // max(wall clock, parent instant + 1), so TIMESTAMP AS OF resolution
@@ -575,30 +564,23 @@ object Versioned {
 
   // `#txnseal\t1` — marks the high-water map COMPLETE (it covers every
   // stamp in the table's whole history). Fresh tables are sealed from
-  // v0 by construction; a table whose history predates the map gets
-  // sealed by the first [[idempotentCommit]] that pays the one-time
-  // legacy scan and publishes the union. An UNSEALED map is merely a
-  // cache: an appId missing from it sends the guard to the scan.
+  // v0 and every commit inherits the seal; a manifest without it
+  // predates the format epoch and refuses at parse time.
   private val TxnSealHeader = "#txnseal\t"
 
-  /** PROCESS-DEFAULT snapshot cadence of the manifest log: a delta
-    * chain never grows past this many links before a commit publishes
-    * a full snapshot (Delta's checkpoint-every-N shape). Env-tunable
-    * for stress runs; `<= 1` disables deltas entirely (every commit a
-    * snapshot — the pre-round-14 behavior). A TABLE overrides it with
-    * the `#ckptevery` manifest header (TBLPROPERTIES
+  /** DEFAULT snapshot cadence of the manifest log: a delta chain never
+    * grows past this many links before a commit publishes a full
+    * snapshot (Delta's checkpoint-every-N shape). A TABLE overrides it
+    * with the `#ckptevery` manifest header (TBLPROPERTIES
     * `graft.manifest.checkpointEvery` / [[setPolicy]]): a read-hot
     * table declares 1 and never pays chain reconstruction, a
     * write-hot one declares 10+ and keeps commits O(delta). */
-  private def manifestCheckpointEvery: Int =
-    sys.env.get("SPARK_GRAFT_MANIFEST_CHECKPOINT")
-      .map(_.trim.toInt).getOrElse(10)
+  private val manifestCheckpointEvery = 10
 
   // manifest-checkpoint cadence header: `#ckptevery\t<n>` — the
   // TABLE's declared snapshot cadence, carried like the stats/bloom
   // policy (every commit republishes it in full). Absent = use the
-  // process default above; this field has no legacy line-derived
-  // fallback, so no `#ts` gating applies.
+  // default above.
   private val CkptEveryHeader = "#ckptevery\t"
 
   // WRITE-TIME CLUSTERING policy: `#clustercols\t<c1>\t<c2>…` (names
@@ -666,22 +648,31 @@ object Versioned {
     * stays immutable forever. Snapshot nodes never pay the sidecar
     * exists() probe. */
   private def readRaw(fs: FileSystem, dir: String, v: Int): RawNode = {
-    val node = parseManifestFile(fs, manifestPath(dir, v))
+    val node = parseManifestFile(fs, dir, v)
     if (node.base.isEmpty) node
-    else parseSidecar(fs, ckptPath(dir, v)).getOrElse {
-      // LEGACY-SIDECAR RESCUE: a sidecar written before the `#eof`
-      // trailer existed fails validation above, and the normal
-      // fallback is the delta chain — but expire under that same
-      // pre-trailer release installed its sidecar and then DROPPED
-      // the chain it replaced. When the parent manifest is gone, the
-      // trailer-less sidecar is the only complete state left: accept
-      // it rather than throwing FileNotFound at every read, history
-      // fold, and change window crossing the oldest-kept version of
-      // a table expired under the previous release.
-      if (fs.exists(manifestPath(dir, node.base.get._1))) node
-      else parseSidecarLegacy(fs, ckptPath(dir, v)).getOrElse(node)
+    else parseSidecar(fs, dir, v).getOrElse {
+      // no valid sidecar: the delta chain answers. [[expire]] installs
+      // a trailered sidecar before it drops the chain, so a chain that
+      // is gone under a sidecar without a valid `#eof` is the end
+      // state of a pre-epoch expire — refuse it by name instead of
+      // failing on the missing parent file
+      if (!fs.exists(manifestPath(dir, node.base.get._1)))
+        throw preEpoch(dir, v,
+          "its delta chain is expired and it has no checkpoint " +
+            "sidecar with a valid #eof")
+      node
     }
   }
+
+  /** The refusal of a table written before the format epoch (see the
+    * class doc): like the reader gate's refusal of an unknown
+    * feature, it names what is missing instead of reading through a
+    * fallback. */
+  private def preEpoch(dir: String, v: Int,
+      what: String): UnsupportedTableFeatureException =
+    new UnsupportedTableFeatureException(
+      s"$dir v$v predates the graft format epoch ($what); rewrite it " +
+        "with a current release")
 
   // end-of-file trailer of a checkpoint sidecar: `#eof\t<n>` where n
   // counts the non-empty lines before it. Committed manifests land by
@@ -693,11 +684,13 @@ object Versioned {
   // reader back to the delta chain — slower, never wrong.
   private val EofHeader = "#eof\t"
 
-  /** Parse `path` as a checkpoint sidecar IFF it exists and its
+  /** Parse version `v`'s checkpoint sidecar IFF it exists and its
     * `#eof` trailer validates (last line, correct count); None sends
     * the reader to the delta chain. */
-  private def parseSidecar(fs: FileSystem, path: Path): Option[RawNode] =
+  private def parseSidecar(fs: FileSystem, dir: String,
+      v: Int): Option[RawNode] =
     try {
+      val path = ckptPath(dir, v)
       if (!fs.exists(path)) None
       else {
         val in = fs.open(path)
@@ -709,49 +702,21 @@ object Versioned {
           case Some(l) if l.startsWith(EofHeader) &&
               l.stripPrefix(EofHeader).trim.toIntOption
                 .contains(raw.length - 1) =>
-            Some(parseManifestLines(raw.init))
-          case _ => None // torn / pre-trailer sidecar: walk the chain
+            Some(parseManifestLines(raw.init, dir, v))
+          case _ => None // torn sidecar: walk the chain
         }
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** LAST-RESORT parse of a PRE-`#eof` (legacy-release) checkpoint
-    * sidecar, consulted by [[readRaw]] ONLY when the delta chain the
-    * sidecar replaced is no longer reconstructible (the parent
-    * manifest is expired) — exactly the sidecars [[expire]] wrote
-    * before the trailer existed, at the oldest-kept version whose
-    * chain it then dropped. Accepts only a trailer-LESS file that
-    * parses as a full snapshot: a sidecar that carries an `#eof` line
-    * that failed validation is provably torn and stays refused (the
-    * modern release never drops a chain before its verified,
-    * trailered sidecar is installed, so that case has no rescue to
-    * offer). A trailer-less file is indistinguishable from complete;
-    * with the chain gone it is the only state left, and accepting it
-    * beats an unconditional FileNotFound on every read of the
-    * version. */
-  private def parseSidecarLegacy(fs: FileSystem,
-      path: Path): Option[RawNode] =
-    try {
-      if (!fs.exists(path)) None
-      else {
-        val in = fs.open(path)
-        val raw =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .filter(_.nonEmpty).toList
-          finally in.close()
-        if (raw.nonEmpty && !raw.exists(_.startsWith(EofHeader)))
-          Some(parseManifestLines(raw)).filter(_.base.isEmpty)
-        else None
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def parseManifestFile(fs: FileSystem, path: Path): RawNode = {
-    val in = fs.open(path)
+  /** Parse version `v`'s manifest FILE as written. */
+  private def parseManifestFile(fs: FileSystem, dir: String,
+      v: Int): RawNode = {
+    val in = fs.open(manifestPath(dir, v))
     val raw =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .filter(_.nonEmpty).toList
       finally in.close()
-    parseManifestLines(raw)
+    parseManifestLines(raw, dir, v)
   }
 
   /** HEADER-ONLY parse of version `v`'s manifest FILE: reads until the
@@ -768,10 +733,14 @@ object Versioned {
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .filter(_.nonEmpty).takeWhile(_.startsWith("#")).toList
       finally in.close()
-    parseManifestLines(raw).m
+    parseManifestLines(raw, dir, v).m
   }
 
-  private def parseManifestLines(raw: List[String]): RawNode = {
+  /** Parse one manifest's (or checkpoint sidecar's) lines — the one
+    * place a header block is read, so both gates below cover
+    * [[readManifest]] and [[readHeaderOnly]] alike. */
+  private def parseManifestLines(raw: List[String], dir: String,
+      v: Int): RawNode = {
     // THE GATE, checked before anything else is trusted: a version
     // whose state uses a semantics-bearing feature this engine does
     // not implement must refuse BY NAME, never parse-and-skip —
@@ -798,9 +767,7 @@ object Versioned {
           " — upgrade the reader; refusing beats silently skipping" +
           " semantics-bearing metadata (deleted rows would resurrect," +
           " mapped columns would misbind)")
-    val schema = raw.collectFirst { case l if l.startsWith(SchemaHeader) =>
-      DataType.fromJson(l.stripPrefix(SchemaHeader)).asInstanceOf[StructType]
-    }
+    val schemaLine = raw.find(_.startsWith(SchemaHeader))
     val txn = raw.collectFirst { case l if l.startsWith(TxnHeader) =>
       // appId is uri-encoded at write so the two tabs here are the
       // only tabs on the line
@@ -849,9 +816,7 @@ object Versioned {
           .filter(_.nonEmpty)
           .map(java.net.URLDecoder.decode(_, "UTF-8"))
     }.getOrElse(Nil)
-    val ts = raw.collectFirst { case l if l.startsWith(TsHeader) =>
-      l.stripPrefix(TsHeader).trim.toLong
-    }
+    val tsLine = raw.find(_.startsWith(TsHeader))
     val commitUuid = raw.collectFirst {
       case l if l.startsWith(CommitUuidHeader) =>
         l.stripPrefix(CommitUuidHeader).trim
@@ -899,7 +864,17 @@ object Versioned {
             t.toLongOption)
       }
     }
-    val txnSealed = raw.exists(_.startsWith(TxnSealHeader))
+    // THE EPOCH: every current writer stamps all three; a manifest
+    // missing one was written before them and refuses by name
+    val missing = Seq(schemaLine.isEmpty -> "#schema",
+      tsLine.isEmpty -> "#ts",
+      !raw.exists(_.startsWith(TxnSealHeader)) -> "#txnseal")
+      .collect { case (true, h) => h }
+    if (missing.nonEmpty)
+      throw preEpoch(dir, v, "no " + missing.mkString(", "))
+    val schema = DataType.fromJson(schemaLine.get.stripPrefix(SchemaHeader))
+      .asInstanceOf[StructType]
+    val ts = tsLine.get.stripPrefix(TsHeader).trim.toLong
     val txnRetention = raw.collectFirst {
       case l if l.startsWith(TxnRetentionHeader) =>
         l.stripPrefix(TxnRetentionHeader).trim.toLong
@@ -937,7 +912,7 @@ object Versioned {
         blooms, op, bloomCfg, statColsPolicy, ts, commitUuid,
         chainDepth = base.map(_._2).getOrElse(0), colMap = colMap,
         ckptEvery = ckptEvery, colDrops = colDrops,
-        colMapMode = colMapMode, txnHw = txnHw, txnSealed = txnSealed,
+        colMapMode = colMapMode, txnHw = txnHw,
         clusterCols = clusterCols, txnRetention = txnRetention,
         minWriter = minWriter, writerFeatures = writerFeatures,
         schemaEnforce = schemaEnforce, maintain = maintain,
@@ -947,9 +922,7 @@ object Versioned {
   /** Apply one delta node to its parent's reconstructed state: removes
     * first (a stats rewrite of the same rel is rmfile + fresh add),
     * then adds appended; every header field comes from the delta node
-    * itself (headers are always republished in full — the
-    * legacy-fallback invariant's "RESOLVED policy" rule holds for
-    * delta commits exactly as for snapshots). */
+    * itself (headers are always republished in full). */
   private def applyDelta(parent: Manifest, d: RawNode): Manifest =
     d.m.copy(
       lines = parent.lines.filterNot(l =>
@@ -979,43 +952,6 @@ object Versioned {
         .copy(chainDepth = top.base.get._2)
     }
   }
-
-  /** The table's bloom-index config: the recorded `#bloomcfg` entries.
-    * A MODERN manifest (one carrying a `#ts` commit instant) with no
-    * entries genuinely has none — an explicit
-    * `UNSET TBLPROPERTIES ('graft.bloom.cols')` must actually stop
-    * indexing. Only a manifest written before config tracking (no
-    * `#ts`) falls back to the default sizing per indexed column, so
-    * legacy pointers keep re-measuring. */
-  private def bloomCfgOf(m: Manifest): Seq[(String, Long, Double)] =
-    if (m.bloomCfg.nonEmpty || m.ts.isDefined) m.bloomCfg
-    else m.blooms.map(_._2).distinct.map((_, 100000L, 0.03))
-
-  /** The table's tracked STAT columns: the recorded `#statcols` policy
-    * header. A MODERN manifest (one carrying a `#ts` commit instant)
-    * with no header genuinely tracks nothing — an explicit
-    * `UNSET TBLPROPERTIES ('graft.stats.cols')` must actually stop
-    * tracking, not be resurrected from the stats groups old lines
-    * still carry. Only a manifest written before policy tracking (no
-    * `#ts`) derives the policy from the columns observed on its data
-    * lines, so legacy tables keep their contract the moment any
-    * writer touches them. */
-  private def statColsOf(m: Manifest): Seq[String] =
-    if (m.statColsPolicy.nonEmpty || m.ts.isDefined) m.statColsPolicy
-    else m.lines.flatMap(parseStats(_)._2.map(_._1)).distinct
-
-  /** The table schema of version `v`: the manifest-recorded one when
-    * present (O(1) — no file I/O beyond the manifest itself), else
-    * sampled from the version's parquet footers (pre-schema-tracking
-    * manifests). None only for a schema-less EMPTY legacy version.
-    */
-  private def versionSchema(spark: SparkSession, dir: String,
-      m: Manifest): Option[StructType] =
-    m.schema.orElse {
-      if (m.lines.isEmpty) None
-      else Some(spark.read.parquet(
-        m.lines.map(l => s"$dir/${parseLine(l)._1}"): _*).schema)
-    }
 
   /** Is reading a parquet column written as `from` under a requested
     * schema of `to` a LOSSLESS upcast the vectorized reader performs
@@ -1135,9 +1071,7 @@ object Versioned {
         throw new IllegalArgumentException(
           s"no committed version in $dir to rename a column of"))
       val m = readManifest(fs, dir, head)
-      val schema = versionSchema(spark, dir, m).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $head of $dir has no schema"))
+      val schema = m.schema
       require(schema.fieldNames.contains(from),
         s"no column '$from' in $dir " +
           schema.fieldNames.mkString("[", ", ", "]"))
@@ -1156,7 +1090,7 @@ object Versioned {
           "references it — drop the constraint, rename, re-add it")
       // bloom sidecar rows key by the column's name on disk; renaming
       // under them would silently stop point-lookup pruning
-      require(!bloomCfgOf(m).exists(_._1 == from) &&
+      require(!m.bloomCfg.exists(_._1 == from) &&
           !m.blooms.exists(_._2 == from),
         s"cannot rename '$from': it carries a bloom index — clear it " +
           "(CALL set_policy / UNSET TBLPROPERTIES), rename, " +
@@ -1167,13 +1101,13 @@ object Versioned {
       val newSchema = StructType(schema.map(f =>
         if (f.name == from) f.copy(name = to) else f))
       guardColMap(newSchema, newColMap, m.colDrops)
-      val newStatCols = statColsOf(m).map(c => if (c == from) to else c)
+      val newStatCols = m.statColsPolicy.map(c => if (c == from) to else c)
       val newLines = m.lines.map(renameStatsCol(_, from, to))
       if (publishResolved(fs, dir, head + 1, uuid)(
           casPublish(fs, dir, head + 1, newSchema, newLines, m.txn,
             m.checks, m.dvs, m.blooms,
             op = Some(s"rename-column($from->$to)"),
-            bloomCfg = bloomCfgOf(m), statColsPolicy = newStatCols,
+            bloomCfg = m.bloomCfg, statColsPolicy = newStatCols,
             parent = Some(m), commitUuid = Some(uuid),
             colMap = newColMap, colDrops = m.colDrops)))
         return head + 1
@@ -1289,9 +1223,7 @@ object Versioned {
         throw new IllegalArgumentException(
           s"no committed version in $dir to drop a column of"))
       val m = readManifest(fs, dir, head)
-      val schema = versionSchema(spark, dir, m).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $head of $dir has no schema"))
+      val schema = m.schema
       require(schema.fieldNames.contains(name),
         s"no column '$name' in $dir " +
           schema.fieldNames.mkString("[", ", ", "]"))
@@ -1309,7 +1241,7 @@ object Versioned {
         s"cannot drop '$name': CHECK constraint" +
           s"${referencing.map(_._1).mkString(" '", "', '", "'")} " +
           "references it — drop the constraint first")
-      require(!bloomCfgOf(m).exists(_._1 == name) &&
+      require(!m.bloomCfg.exists(_._1 == name) &&
           !m.blooms.exists(_._2 == name),
         s"cannot drop '$name': it carries a bloom index — clear it " +
           "(CALL set_policy / UNSET TBLPROPERTIES) first")
@@ -1317,14 +1249,14 @@ object Versioned {
       val newColMap = m.colMap.filterNot(_._1 == name)
       val newColDrops = (m.colDrops :+ physical).distinct
       val newSchema = StructType(schema.filterNot(_.name == name))
-      val newStatCols = statColsOf(m).filterNot(_ == name)
+      val newStatCols = m.statColsPolicy.filterNot(_ == name)
       val newLines = m.lines.map(dropStatsCol(_, name))
       guardColMap(newSchema, newColMap, newColDrops)
       if (publishResolved(fs, dir, head + 1, uuid)(
           casPublish(fs, dir, head + 1, newSchema, newLines, m.txn,
             m.checks, m.dvs, m.blooms,
             op = Some(s"drop-column($name)"),
-            bloomCfg = bloomCfgOf(m), statColsPolicy = newStatCols,
+            bloomCfg = m.bloomCfg, statColsPolicy = newStatCols,
             parent = Some(m), commitUuid = Some(uuid),
             colMap = newColMap, colDrops = newColDrops)))
         return head + 1
@@ -1370,9 +1302,7 @@ object Versioned {
           s"no committed version in $dir to declare column mapping on"))
       val m = readManifest(fs, dir, head)
       if (m.colMapMode.contains("id")) return head // idempotent
-      val schema = versionSchema(spark, dir, m).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $head of $dir has no schema"))
+      val schema = m.schema
       // a ZERO-ROW table can re-home every column to a uuid: no byte
       // on disk carries a name worth keeping (an "empty" commit may
       // still have written zero-row part files — those null-fill
@@ -1397,7 +1327,7 @@ object Versioned {
             if (zeroRows) Nil else m.dvs,
             if (zeroRows) Nil else m.blooms,
             op = Some("set-column-mapping(id)"),
-            bloomCfg = bloomCfgOf(m), statColsPolicy = statColsOf(m),
+            bloomCfg = m.bloomCfg, statColsPolicy = m.statColsPolicy,
             parent = Some(m), commitUuid = Some(uuid),
             colMap = newColMap, colDrops = m.colDrops,
             colMapModeOverride = Some(Some("id")))))
@@ -1495,17 +1425,7 @@ object Versioned {
     * retention already swept still stamp-skips its replay (the
     * double-append hole a history scan has — Delta keeps
     * SetTransaction state live in checkpoints for the same reason).
-    * A pre-ledger table pays one newest-first legacy header scan
-    * UNIONED with the head's cached (unsealed) map, and this commit
-    * publishes that union as the sealed map. SEALING CAVEAT, pinned:
-    * a writer whose only `#txn` stamp was swept by retention BEFORE
-    * any commit cached it in `#txnhw` is absent from the sealed map —
-    * its replay re-appends. That is exactly the exposure the
-    * pre-ledger scan always had (the stamp is gone either way);
-    * sealing converts a detectable gap into an authoritative miss but
-    * never widens it, and every writer that stamps after the ledger
-    * exists is retention-proof forever. `replace`
-    * is the Complete-output-mode shape (the batch is the whole new
+    * `replace` is the Complete-output-mode shape (the batch is the whole new
     * table state). One writer per appId (Spark's own guarantee for a
     * streaming query); two appIds interleave freely through the CAS
     * protocol. [[txnHighWater]] / `CALL graft.system.txn_version`
@@ -1515,21 +1435,12 @@ object Versioned {
       appId: String, batchId: Long, replace: Boolean = false)
       : Option[Int] = {
     require(appId.nonEmpty, "idempotentCommit needs a non-empty appId")
-    val fs = fileSystem(spark, dir)
-    // THE GUARD. On a SEALED table (every modern one — fresh tables
-    // seal at v0) it is O(1): one header-only read of the head, whose
+    // THE GUARD, O(1): one header-only read of the head, whose
     // aggregated `#txnhw` map carries every writer's high-water —
     // including writers whose stamped manifests retention already
-    // swept, the case the old newest-first history scan silently got
-    // wrong (a stalled writer outlived by keepLast commits would
-    // double-append on replay). A pre-map table pays the one-time
-    // legacy scan, and THIS commit publishes the scanned union as the
-    // sealed map for every writer after it.
-    val (ledger, isSealed) = txnLedger(fs, spark, dir)
-    val last = ledger.get(appId)
-    // a pre-ledger table's scanned union SEEDS the sealed map
-    val seed = if (isSealed) None else Some(ledger)
-    if (last.exists(_ >= batchId)) None
+    // swept (a newest-first history scan would miss them and
+    // double-append on replay)
+    if (txnLedger(spark, dir).get(appId).exists(_ >= batchId)) None
     // `replace = true` is the COMPLETE-output-mode shape: the batch
     // IS the new table state (a streaming aggregate emits its whole
     // result every trigger), published as a stamped replace — same
@@ -1537,43 +1448,18 @@ object Versioned {
     // lost race throws (replace claims full-table authority); Spark
     // re-runs the batch with the same batchId and the stamp decides.
     else Some(commitImpl(spark, dir, df, replace = replace,
-      statCols = Nil, txn = Some((appId, batchId)),
-      txnHwSeed = seed))
+      statCols = Nil, txn = Some((appId, batchId))))
   }
 
-  /** The table's transaction ledger: (appId → highest stamped
-    * batchId, complete?). Sealed tables answer from ONE header read
-    * of the head (`#txnhw` map — complete, retention-proof); a
-    * pre-ledger table falls back to the newest-first header scan of
-    * the retained history (newest stamp wins per appId — batchIds
-    * are monotone per writer), reported unsealed so the caller can
-    * seed. */
-  private def txnLedger(fs: FileSystem, spark: SparkSession,
-      dir: String): (Map[String, Long], Boolean) =
-    latestVersion(spark, dir) match {
-      case None => (Map.empty, true) // a fresh table: vacuously complete
-      case Some(head) =>
-        val hm = readHeaderOnly(fs, dir, head)
-        if (hm.txnSealed)
-          (hm.txnHw.map(e => e._1 -> e._2).toMap, true)
-        else {
-          val scanned = (head to 0 by -1).iterator
-            .filter(v => fs.exists(manifestPath(dir, v)))
-            .flatMap(v => readHeaderOnly(fs, dir, v).txn)
-            .foldLeft(Map.empty[String, Long]) { case (m, (a, b)) =>
-              if (m.contains(a)) m else m + (a -> b)
-            }
-          // the head's UNSEALED `#txnhw` map is a cache, but it may be
-          // the ONLY surviving trace of a writer whose `#txn`-stamped
-          // manifest retention already swept (plain commits propagate
-          // the cache forward even before sealing) — union it in at
-          // max batchId per appId, or that writer's replay would
-          // double-append: the exact hole the ledger exists to close.
-          (hm.txnHw.foldLeft(scanned) { case (m, (a, b, _)) =>
-            m.updatedWith(a)(p => Some(p.fold(b)(math.max(_, b))))
-          }, false)
-        }
-    }
+  /** The table's transaction ledger (appId → highest stamped
+    * batchId), from ONE header read of the head: the `#txnhw` map is
+    * complete and retention-proof. */
+  private def txnLedger(spark: SparkSession,
+      dir: String): Map[String, Long] =
+    latestVersion(spark, dir).map(head =>
+      readHeaderOnly(fileSystem(spark, dir), dir, head).txnHw
+        .map(e => e._1 -> e._2).toMap)
+      .getOrElse(Map.empty)
 
   /** A user-supplied DURATION in its accepted shapes — a bare
     * millisecond count, or `<n> <unit>` with unit ms / s|second(s) /
@@ -1606,12 +1492,11 @@ object Versioned {
     * writer never stamped a commit. The introspection half of the
     * `#txnhw` ledger (Delta's `txnVersion`): what a replayable
     * writer consults to resume manually, and what
-    * `CALL graft.system.txn_version` surfaces to SQL. O(1) on sealed
-    * tables; read-only on legacy ones (sealing happens on their next
-    * stamped commit). */
+    * `CALL graft.system.txn_version` surfaces to SQL. O(1): one header
+    * read of the head. */
   def txnHighWater(spark: SparkSession, dir: String,
       appId: String): Option[Long] =
-    txnLedger(fileSystem(spark, dir), spark, dir)._1.get(appId)
+    txnLedger(spark, dir).get(appId)
 
   /** Table CHECK constraints active at `version` (default: head;
     * empty for an uncommitted table). Each is `(name, sql
@@ -1660,19 +1545,16 @@ object Versioned {
         throw new CheckViolationException(
           s"cannot add CHECK constraint '$name' ($sqlExpr) to $dir: " +
             s"existing rows at version $head violate it")
-      val schema = versionSchema(spark, dir, m).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $head of $dir has no schema to constrain"))
       // the head's txn stamp carries into the metadata commit so a
       // streaming writer's high-water mark stays visible even if this
       // becomes the newest surviving manifest — and so do its deletion
       // vectors and bloom pointers: a metadata commit that dropped the
       // DVs would silently RESURRECT every MoR-deleted row
       if (publishResolved(fs, dir, head + 1, uuid)(
-          casPublish(fs, dir, head + 1, schema, m.lines, m.txn,
+          casPublish(fs, dir, head + 1, m.schema, m.lines, m.txn,
             m.checks :+ ((name, sqlExpr)), m.dvs, m.blooms,
-            op = Some(s"add-check($name)"), bloomCfg = bloomCfgOf(m),
-            statColsPolicy = statColsOf(m), parent = Some(m),
+            op = Some(s"add-check($name)"), bloomCfg = m.bloomCfg,
+            statColsPolicy = m.statColsPolicy, parent = Some(m),
             commitUuid = Some(uuid), colMap = m.colMap,
             colDrops = m.colDrops)))
         return head + 1
@@ -1695,14 +1577,11 @@ object Versioned {
       val m = readManifest(fs, dir, head)
       require(m.checks.exists(_._1 == name),
         s"no CHECK constraint '$name' on $dir")
-      val schema = versionSchema(spark, dir, m).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $head of $dir has no schema"))
       if (publishResolved(fs, dir, head + 1, uuid)(
-          casPublish(fs, dir, head + 1, schema, m.lines, m.txn,
+          casPublish(fs, dir, head + 1, m.schema, m.lines, m.txn,
             m.checks.filterNot(_._1 == name), m.dvs, m.blooms,
-            op = Some(s"drop-check($name)"), bloomCfg = bloomCfgOf(m),
-            statColsPolicy = statColsOf(m), parent = Some(m),
+            op = Some(s"drop-check($name)"), bloomCfg = m.bloomCfg,
+            statColsPolicy = m.statColsPolicy, parent = Some(m),
             commitUuid = Some(uuid), colMap = m.colMap,
             colDrops = m.colDrops)))
         return head + 1
@@ -1728,9 +1607,9 @@ object Versioned {
     policy(spark, dir, version)._2
 
   /** The table's declared manifest-checkpoint cadence at `version`
-    * (default head): None means the process default applies
-    * (`SPARK_GRAFT_MANIFEST_CHECKPOINT`, 10). Set/cleared via
-    * [[setPolicy]] / TBLPROPERTIES `graft.manifest.checkpointEvery`. */
+    * (default head): None means the default of 10 applies.
+    * Set/cleared via [[setPolicy]] / TBLPROPERTIES
+    * `graft.manifest.checkpointEvery`. */
   def manifestCheckpointPolicy(spark: SparkSession, dir: String,
       version: Option[Int] = None): Option[Int] =
     version.orElse(latestVersion(spark, dir))
@@ -1768,7 +1647,7 @@ object Versioned {
     version.orElse(latestVersion(spark, dir))
       .map { v =>
         val m = readManifest(fileSystem(spark, dir), dir, v)
-        (statColsOf(m), bloomCfgOf(m))
+        (m.statColsPolicy, m.bloomCfg)
       }
       .getOrElse((Nil, Nil))
 
@@ -1799,8 +1678,8 @@ object Versioned {
     TableDetail(v, m.lines.size,
       if (sizes.nonEmpty && sizes.forall(_.isDefined))
         Some(sizes.flatten.sum) else None,
-      m.dvs.size, m.checks.map(_._1), statColsOf(m),
-      bloomCfgOf(m).map(_._1), m.clusterCols, m.ckptEvery,
+      m.dvs.size, m.checks.map(_._1), m.statColsPolicy,
+      m.bloomCfg.map(_._1), m.clusterCols, m.ckptEvery,
       m.colMapMode, m.txnRetention, m.schemaEnforce,
       requiredFeatures(m.dvs, m.colMap, m.colDrops, m.colMapMode),
       // declared ∪ derived: a foreign table's writer features must
@@ -1823,7 +1702,7 @@ object Versioned {
     version.orElse(latestVersion(spark, dir))
       .map { v =>
         val m = readManifest(fileSystem(spark, dir), dir, v)
-        (statColsOf(m), bloomCfgOf(m), m.ckptEvery, m.colMapMode,
+        (m.statColsPolicy, m.bloomCfg, m.ckptEvery, m.colMapMode,
           m.clusterCols, m.txnRetention, m.schemaEnforce, m.maintain)
       }
       .getOrElse((Nil, Nil, None, None, Nil, None, false, Nil))
@@ -1841,8 +1720,7 @@ object Versioned {
   /** Version `v`'s reconstructed manifest rendered as canonical
     * snapshot text: every header the version carries, then its data
     * lines — what a full-snapshot commit of the same state would have
-    * written (field order matches [[renderHeaders]]; fields a legacy
-    * manifest never recorded are simply absent). */
+    * written (field order matches [[renderHeaders]]). */
   def manifestSnapshot(spark: SparkSession, dir: String,
       v: Int): Seq[String] =
     renderManifest(readManifest(fileSystem(spark, dir), dir, v))
@@ -1854,8 +1732,7 @@ object Versioned {
 
   private def renderManifest(m: Manifest): Seq[String] = {
     def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    m.schema.map(s => s"$SchemaHeader${s.json}").toSeq ++
-      m.ts.map(t => s"$TsHeader$t").toSeq ++
+    Seq(s"$SchemaHeader${m.schema.json}", s"$TsHeader${m.ts}") ++
       m.op.map(o => s"$OpHeader$o").toSeq ++
       m.commitUuid.map(u => s"$CommitUuidHeader$u").toSeq ++
       m.txn.map { case (a, b) => s"$TxnHeader${enc(a)}\t$b" }.toSeq ++
@@ -1876,7 +1753,7 @@ object Versioned {
       m.txnHw.map { case (a, b, t) =>
         s"$TxnHwHeader${enc(a)}\t$b" + t.map("\t" + _).getOrElse("")
       } ++
-      (if (m.txnSealed) Seq(s"${TxnSealHeader}1") else Nil) ++
+      Seq(s"${TxnSealHeader}1") ++
       m.txnRetention.map(r => s"$TxnRetentionHeader$r").toSeq ++
       (if (m.clusterCols.isEmpty) Nil
        else Seq(m.clusterCols.map(enc)
@@ -1999,11 +1876,9 @@ object Versioned {
         throw new IllegalArgumentException(
           s"no committed version in $dir to declare policy on"))
       val m = readManifest(fs, dir, head)
-      val schema = versionSchema(spark, dir, m).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $head of $dir has no schema to declare policy on"))
-      val newStats = statCols.getOrElse(statColsOf(m)).distinct
-      val newCfg = bloomCfg.getOrElse(bloomCfgOf(m)).distinct
+      val schema = m.schema
+      val newStats = statCols.getOrElse(m.statColsPolicy).distinct
+      val newCfg = bloomCfg.getOrElse(m.bloomCfg).distinct
       (newStats ++ newCfg.map(_._1)).foreach(c =>
         require(schema.fieldNames.contains(c),
           s"policy column '$c' is not a table column " +
@@ -2134,7 +2009,7 @@ object Versioned {
   private[graft] def versionAddedBytes(spark: SparkSession, dir: String,
       v: Int): Option[Long] = {
     val fs = fileSystem(spark, dir)
-    val sizes = parseManifestFile(fs, manifestPath(dir, v))
+    val sizes = parseManifestFile(fs, dir, v)
       .m.lines.map(lineSizeOf)
     if (sizes.exists(_.isEmpty)) None else Some(sizes.flatten.sum)
   }
@@ -2163,7 +2038,6 @@ object Versioned {
       rels: Seq[String], statCols: Seq[String],
       schema: StructType,
       colMap: Seq[(String, String)] = Nil): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
     val cols = statCols.distinct
     if (cols.isEmpty || rels.isEmpty) return rels.sorted
     // FOOTER FAST PATH (optimization round 18, guide §6): the staged
@@ -2178,16 +2052,24 @@ object Versioned {
     // parquet's UNSIGNED byte order IS UTF8String's binary order, see
     // [[strCmp]]); anything it cannot answer exactly (INT96, FP with
     // NaN-dropped stats, decimals, >4 KB binary bounds parquet omits)
-    // returns None and the scan below remains the semantics.
-    // kill switch (A/B spec hook, and an escape hatch if a storage
-    // layer ever serves footers the reader cannot trust)
-    if (!sys.props.get("graft.stats.footer").contains("off"))
-      footerStatLines(spark, dir, rels, cols, schema, colMap) match {
-        case Some(lines) =>
-          footerStatHits.incrementAndGet()
-          return lines
-        case None => ()
-      }
+    // returns None and [[scanStatLines]] remains the semantics.
+    footerStatLines(spark, dir, rels, cols, schema, colMap) match {
+      case Some(lines) =>
+        footerStatHits.incrementAndGet()
+        lines
+      case None => scanStatLines(spark, dir, rels, cols, schema, colMap)
+    }
+  }
+
+  /** Per-file stats of `cols` (non-empty, distinct) over the staged
+    * files `rels` by ONE column-pruned scan of their rows — the
+    * reference implementation [[footerStatLines]] must match byte for
+    * byte, and the fallback wherever the footers cannot answer
+    * exactly. `FooterStatsSpec` compares the two directly. */
+  private[graft] def scanStatLines(spark: SparkSession, dir: String,
+      rels: Seq[String], cols: Seq[String], schema: StructType,
+      colMap: Seq[(String, String)]): Seq[String] = {
+    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
     // stats groups speak LOGICAL names; staged files carry PHYSICAL
     // ones — the scan below selects through the mapping
     val phys = colMap.toMap
@@ -2528,11 +2410,9 @@ object Versioned {
     val v = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed version in $dir"))
     val m = readManifest(fs, dir, v)
-    val schema = versionSchema(spark, dir, m).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no schema"))
     val rels = m.lines.map(parseLine(_)._1)
     val t0 = System.nanoTime()
-    measureLines(spark, dir, rels, cols, schema, m.colMap)
+    measureLines(spark, dir, rels, cols, m.schema, m.colMap)
     (System.nanoTime() - t0) / 1000000
   }
 
@@ -2591,7 +2471,7 @@ object Versioned {
 
   /** Build per-file Bloom filters for freshly staged data files, one
     * per `cfg` entry (column, expectedItems, fpp) — the sizing is the
-    * TABLE's recorded index config ([[bloomCfgOf]]), so a rewrite
+    * TABLE's recorded `#bloomcfg` index config, so a rewrite
     * re-measures at the sizing the index was committed with, never a
     * default that silently saturates a big table's filters. One
     * column-pruned pass: `groupBy` the physical file, a mergeable
@@ -2788,7 +2668,6 @@ object Versioned {
       colDrops: Seq[String] = Nil,
       colMapMode: Option[String] = None,
       txnHw: Seq[(String, Long, Option[Long])] = Nil,
-      txnSealed: Boolean = false,
       clusterCols: Seq[String] = Nil,
       txnRetention: Option[Long] = None,
       maintain: Seq[(String, String)] = Nil): Seq[String] = {
@@ -2826,7 +2705,7 @@ object Versioned {
       txnHw.map { case (a, b, t) =>
         s"$TxnHwHeader${enc(a)}\t$b" + t.map("\t" + _).getOrElse("")
       } ++
-      (if (txnSealed) Seq(s"${TxnSealHeader}1") else Nil) ++
+      Seq(s"${TxnSealHeader}1") ++
       txnRetention.map(r => s"$TxnRetentionHeader$r").toSeq ++
       (if (clusterCols.isEmpty) Nil
        else Seq(clusterCols.distinct.map(enc)
@@ -2866,7 +2745,6 @@ object Versioned {
       ckptEveryOverride: Option[Option[Int]] = None,
       colDrops: Seq[String] = Nil,
       colMapModeOverride: Option[Option[String]] = None,
-      txnHwSeed: Option[Map[String, Long]] = None,
       clusterColsOverride: Option[Seq[String]] = None,
       txnRetentionOverride: Option[Option[Long]] = None,
       schemaEnforceOverride: Option[Boolean] = None,
@@ -2890,12 +2768,10 @@ object Versioned {
     // TIMESTAMP AS OF resolve to a version that is not the latest
     // committed at-or-before t
     val ts = math.max(System.currentTimeMillis(),
-      parent.flatMap(_.ts).getOrElse(Long.MinValue) + 1)
+      parent.map(_.ts + 1).getOrElse(Long.MinValue))
     // the TABLE's snapshot cadence: carried from the parent like the
-    // stats/bloom policy (no derivation — the raw header IS the
-    // resolved policy for this field), overridable only by setPolicy
-    // (Some(Some(n)) declares, Some(None) clears back to the process
-    // default). Declared cadence wins over the env default.
+    // stats/bloom policy, overridable only by setPolicy (Some(Some(n))
+    // declares, Some(None) clears back to the default).
     val ckptEvery: Option[Int] =
       ckptEveryOverride.getOrElse(parent.flatMap(_.ckptEvery))
     val every = ckptEvery.getOrElse(manifestCheckpointEvery)
@@ -2906,19 +2782,16 @@ object Versioned {
     // aggregated transaction high-water (the idempotence LEDGER, not
     // table content — a replace/restore resets data, never the
     // ledger: resetting would re-open the double-append hole): the
-    // parent's map, the parent's own stamp (belt-and-braces on
-    // unsealed tables whose map is still a cache), an optional
-    // legacy-scan seed, and this commit's stamp, merged by MAX
-    // batchId per appId. Sealed when the parent was (fresh tables
-    // seal at v0 — their whole history is the map by construction)
-    // or when a seed's one-time full scan just made it complete.
+    // parent's map and this commit's stamp, merged by MAX batchId per
+    // appId. The map is complete (`#txnseal`) from v0 on: every
+    // commit folds its own stamp into it.
     val txnRetention: Option[Long] =
       txnRetentionOverride.getOrElse(parent.flatMap(_.txnRetention))
     val txnHw: Seq[(String, Long, Option[Long])] = {
       // per appId: max batchId wins; its last-stamp instant rides
       // along (an entry with no recorded instant — pre-retention
-      // format, or a scanned seed — ages from THIS commit: kept a
-      // full horizon from now, never dropped early)
+      // format — ages from THIS commit: kept a full horizon from now,
+      // never dropped early)
       val acc =
         scala.collection.mutable.Map.empty[String, (Long, Option[Long])]
       def fold(entries: Iterable[(String, Long, Option[Long])]): Unit =
@@ -2929,10 +2802,6 @@ object Versioned {
           }
         }
       fold(parent.map(_.txnHw).getOrElse(Nil))
-      fold(parent.flatMap(_.txn).map { case (a, b) =>
-        (a, b, parent.flatMap(_.ts))
-      })
-      txnHwSeed.foreach(m => fold(m.map { case (a, b) => (a, b, None) }))
       fold(txn.map { case (a, b) => (a, b, Some(ts)) })
       // instants render ONLY while a retention horizon is declared:
       // an undeclared table keeps the 2-field entries a pre-retention
@@ -2955,9 +2824,6 @@ object Versioned {
         }.sortBy(_._1)
       }
     }
-    val txnSealed: Boolean =
-      parent.map(_.txnSealed).getOrElse(next == 0) ||
-        txnHwSeed.isDefined
     // write-time clustering carries like the cadence: a declared
     // table keeps its layout contract through every commit until an
     // explicit re-declaration (Some(Nil) clears)
@@ -2992,7 +2858,7 @@ object Versioned {
       .getOrElse(parent.map(_.maintain).getOrElse(Nil))
     val headers = renderHeaders(schema, ts, op, txn, statColsPolicy,
       checks, Nil, Nil, bloomCfg, commitUuid, colMap, ckptEvery,
-      colDrops, colMapMode, txnHw, txnSealed, clusterCols,
+      colDrops, colMapMode, txnHw, clusterCols,
       txnRetention, maintain) ++
       (if (schemaEnforce) Seq(s"${SchemaEnforceHeader}1") else Nil) ++
       // the feature gates derive from the FULL state this version
@@ -3062,8 +2928,7 @@ object Versioned {
     * version. `tmp` is consumed on success and deleted on a lost race.
     * Pluggable (the LogStore shape every production format grew):
     * [[LinkCasStore]] on local filesystems, [[RenameCasStore]] on
-    * HDFS-semantics filesystems, overridable with
-    * `SPARK_GRAFT_CAS=rename|link`; an object store would add its
+    * HDFS-semantics filesystems; an object store would add its
     * conditional-put (`If-None-Match`) implementation here.
     */
   trait CasStore {
@@ -3116,8 +2981,8 @@ object Versioned {
     * [[CasStore]] — keyed by filesystem SCHEME (`"s3a"`) or, when the
     * key contains a `/`, by PATH PREFIX (one table, one warehouse).
     * The longest matching prefix wins over a scheme match; built-in
-    * defaults (link on local, exists+rename on HDFS semantics,
-    * `SPARK_GRAFT_CAS` override) apply when nothing is registered.
+    * defaults (link on local, exists+rename on HDFS semantics) apply
+    * when nothing is registered.
     * This is the LogStore-shaped slot production formats grew: an
     * object-store deployment registers
     * `ConditionalPutCasStore(client)` for its scheme and every
@@ -3209,11 +3074,7 @@ object Versioned {
       val byScheme = casRegistry.get(fs.getScheme)
       if (byScheme != null) return byScheme
     }
-    val forced = sys.env.get("SPARK_GRAFT_CAS")
-    if (forced.contains("rename")) RenameCasStore
-    else if (forced.contains("link")) LinkCasStore
-    else if (fs.getScheme == "file") LinkCasStore
-    else RenameCasStore
+    if (fs.getScheme == "file") LinkCasStore else RenameCasStore
   }
 
   /** Enforce the table's CHECK constraints against freshly staged
@@ -3314,10 +3175,7 @@ object Versioned {
     val head = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(
         s"no committed version in $dir to evolve"))
-    val schema = versionSchema(spark, dir,
-      readManifest(fileSystem(spark, dir), dir, head)).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $head of $dir has no schema to evolve"))
+    val schema = readManifest(fileSystem(spark, dir), dir, head).schema
     fields.foreach(f => require(!schema.fieldNames
       .exists(_.equalsIgnoreCase(f.name)),
       s"column '${f.name}' already exists in $dir"))
@@ -3332,14 +3190,13 @@ object Versioned {
       txn: Option[(String, Long)] = None,
       bloomCols: Seq[String] = Nil, bloomExpected: Long = 100000L,
       bloomFpp: Double = 0.03,
-      txnHwSeed: Option[Map[String, Long]] = None,
       declaredEvolution: Boolean = false): Int = {
     val fs = fileSystem(spark, dir)
     val newCfgDecl = bloomCols.distinct.map((_, bloomExpected, bloomFpp))
     // FILE-SKIPPING POLICY IS TABLE POLICY, carried like CHECK
     // constraints through appends AND replaces: every commit measures
     // stats for the union of the caller's columns and the table's
-    // tracked ones ([[statColsOf]]), and builds blooms for its staged
+    // tracked ones (`#statcols`), and builds blooms for its staged
     // files under the carried config too — otherwise one untracked
     // append (SQL INSERT INTO, a streaming writer, old pipeline code)
     // would silently kill metadata-only COUNT(*) for every later
@@ -3349,8 +3206,8 @@ object Versioned {
     // The caller's own bloom sizing overrides per column.
     def policyOf(hm: Option[Manifest])
         : (Seq[String], Seq[(String, Long, Double)]) = (
-      (statCols ++ hm.map(statColsOf).getOrElse(Nil)).distinct,
-      newCfgDecl ++ hm.map(bloomCfgOf).getOrElse(Nil)
+      (statCols ++ hm.map(_.statColsPolicy).getOrElse(Nil)).distinct,
+      newCfgDecl ++ hm.map(_.bloomCfg).getOrElse(Nil)
         .filterNot(c => bloomCols.contains(c._1)))
     // measurable on THIS commit's files: policy columns the staged
     // frame does not carry (an old writer appending to an evolved
@@ -3371,8 +3228,8 @@ object Versioned {
       else if (replace)
         df.schema.fieldNames.toSeq.map(_ -> mintPhysical())
       else {
-        val known = head0.flatMap(_.schema)
-          .map(_.fieldNames.toSet).getOrElse(Set.empty)
+        val known = head0.map(_.schema.fieldNames.toSet)
+          .getOrElse(Set.empty)
         df.schema.fieldNames.toSeq.filterNot(known.contains)
           .map(_ -> mintPhysical())
       }
@@ -3401,8 +3258,7 @@ object Versioned {
     // policy declaration)
     if (!replace && !declaredEvolution)
       head0.filter(_.schemaEnforce).foreach(hm =>
-        versionSchema(spark, dir, hm).foreach(ts =>
-          enforceDeclaredSchema(ts, df.schema, dir)))
+        enforceDeclaredSchema(hm.schema, df.schema, dir))
     val dfLaid = clusterForStage(df,
       head0.map(_.clusterCols).getOrElse(Nil))
     var newFiles = stage(spark, dir, dfLaid, measuredStats, stageMap)
@@ -3480,8 +3336,8 @@ object Versioned {
       // like any lost CAS attempt), then continue the loop normally.
       if (stageMints.nonEmpty && !replace) {
         val hm = headManifest.map(_.colMap.toMap).getOrElse(Map.empty)
-        val hs = headManifest.flatMap(_.schema)
-          .map(_.fieldNames.toSet).getOrElse(Set.empty)
+        val hs = headManifest.map(_.schema.fieldNames.toSet)
+          .getOrElse(Set.empty)
         if (stageMints.exists { case (n, p) =>
             hs.contains(n) && hm.getOrElse(n, n) != p }) {
           stageMints = stageMints.flatMap { case (n, p) =>
@@ -3500,12 +3356,11 @@ object Versioned {
       }
       if (!replace && !declaredEvolution)
         headManifest.filter(_.schemaEnforce).foreach(hm =>
-          versionSchema(spark, dir, hm).foreach(ts =>
-            enforceDeclaredSchema(ts, df.schema, dir)))
+          enforceDeclaredSchema(hm.schema, df.schema, dir))
       val schema =
         if (replace) df.schema
-        else headManifest.flatMap(versionSchema(spark, dir, _))
-          .map(evolveSchema(_, df.schema)).getOrElse(df.schema)
+        else headManifest.map(hm => evolveSchema(hm.schema, df.schema))
+          .getOrElse(df.schema)
       // a replace claims naming authority too: its files' physical
       // names ARE its logical names (or fresh mints under id mode),
       // so the mapping resets to this commit's own
@@ -3536,7 +3391,7 @@ object Versioned {
             statColsPolicy = polStats.filter(schema.fieldNames.contains),
             parent = headManifest, commitUuid = Some(uuid),
             colMap = pubColMap, colDrops = pubColDrops,
-            txnHwSeed = txnHwSeed, bloomSizes = newBloomSizes)))
+            bloomSizes = newBloomSizes)))
         return next
       // CAS lost: an append re-reads head and retries (appends commute);
       // a plain replace cannot merge with the commit it never saw
@@ -3581,7 +3436,7 @@ object Versioned {
     val fs = fileSystem(spark, dir)
     val baseM0 = base.map(readManifest(fs, dir, _))
     val inherited = (statCol.toSeq ++
-      baseM0.map(statColsOf).getOrElse(Nil))
+      baseM0.map(_.statColsPolicy).getOrElse(Nil))
       .distinct.filter(df.schema.fieldNames.contains)
     replaceLoop(spark, dir,
       stage(spark, dir, df, inherited,
@@ -3626,7 +3481,7 @@ object Versioned {
     // and every cluster key — clustering's whole point is tight stats
     val inherited = (statCol.toSeq ++
       lines.flatMap(_._2.map(_._1)) ++ clusterBy ++
-      statColsOf(baseManifest)).distinct
+      baseManifest.statColsPolicy).distinct
     val totalBytes = files.map(rel =>
       fs.getFileStatus(new Path(dir, rel)).getLen).sum
     // a ZERO-file base (truncate-to-empty replace) still compacts to a
@@ -3675,7 +3530,7 @@ object Versioned {
     // dropped the filters — or rebuilt them undersized — would
     // disable point-lookup pruning without anyone noticing)
     val (stagedBlooms, stagedBloomSizes) = stageBlooms(spark, dir,
-      staged, bloomCfgOf(baseManifest), baseManifest.colMap)
+      staged, baseManifest.bloomCfg, baseManifest.colMap)
     // the rewrite materializes the base version's EVOLVED schema
     // (null-filled columns become physical), which is what it records;
     // CHECK validation is skipped — the staged rows ARE the base's
@@ -3782,10 +3637,7 @@ object Versioned {
       s"version $baseV not found in $dir")
     val m = readManifest(fs, dir, baseV)
     if (m.lines.isEmpty) return (baseV, 0)
-    val schema = versionSchema(spark, dir, m) match {
-      case Some(s) => s
-      case None => return (baseV, 0)
-    }
+    val schema = m.schema
     val cluster = clusterBy.getOrElse(m.clusterCols)
       .filter(schema.fieldNames.contains)
     // --- selection (all metadata-sized: manifest lines, file status,
@@ -3865,7 +3717,7 @@ object Versioned {
     // --- rewrite (O(selected) bytes; DVs materialize — scanVisible
     // renders only live rows, and the publish drops the pairs) --------
     val inherited = (selLines.flatMap(parseStats(_)._2.map(_._1)) ++
-      cluster ++ statColsOf(m)).distinct
+      cluster ++ m.statColsPolicy).distinct
     val visible = scanVisible(spark, dir, schema, selLines, m.dvs,
       colMap = m.colMap, dvSizes = m.dvSizes)
     val selBytes = selected.toSeq.map(bytesOf).sum
@@ -3881,7 +3733,7 @@ object Versioned {
       }
     val staged = stage(spark, dir, laidOut, inherited, m.colMap)
     val (stagedBlooms, stagedBloomSizes) = stageBlooms(spark, dir,
-      staged, bloomCfgOf(m), m.colMap)
+      staged, m.bloomCfg, m.colMap)
     val baseDvsOnSelected = m.dvs.filter(d => selected.contains(d._1)).toSet
     (subsetSwapLoop(spark, dir, staged, selected, baseDvsOnSelected,
       schema, stagedBlooms, stagedBloomSizes), selected.size)
@@ -3946,16 +3798,15 @@ object Versioned {
       // the head may have evolved the schema since the selection
       // (interleaved append with new columns): publish the union —
       // staged files simply null-fill the columns they predate
-      val schema = versionSchema(spark, dir, headM)
-        .map(evolveSchema(_, stagedSchema)).getOrElse(stagedSchema)
+      val schema = evolveSchema(headM.schema, stagedSchema)
       val pubColMap = headM.colMap
       val pubColDrops = headM.colDrops
       guardColMap(schema, pubColMap, pubColDrops)
       if (publishResolved(fs, dir, next, uuid)(
           casPublish(fs, dir, next, schema, newLines,
             checks = headM.checks, dvs = newDvs, blooms = newBlooms,
-            op = Some("compact-subset"), bloomCfg = bloomCfgOf(headM),
-            statColsPolicy = statColsOf(headM)
+            op = Some("compact-subset"), bloomCfg = headM.bloomCfg,
+            statColsPolicy = headM.statColsPolicy
               .filter(schema.fieldNames.contains),
             parent = Some(headM), commitUuid = Some(uuid),
             colMap = pubColMap, colDrops = pubColDrops,
@@ -4016,10 +3867,7 @@ object Versioned {
       s"cannot restore $dir to version $version: ${missing.size} of its " +
         s"data files no longer exist (purged?); first missing: " +
         s"${missing.headOption.getOrElse("")}")
-    val schema = versionSchema(spark, dir, m).getOrElse(
-      throw new IllegalArgumentException(
-        s"cannot restore $dir to version $version: it is empty with no " +
-          "recorded schema (pre-schema-tracking manifest)"))
+    val schema = m.schema
     // the restored version republishes as ONE coherent state: its
     // data, its schema, and its CHECK constraints (so no O(table)
     // re-validation scan is ever needed — the target's rows satisfied
@@ -4033,8 +3881,8 @@ object Versioned {
       stagedDvs = m.dvs, stagedDvSizes = m.dvSizes, dvAuthority = true,
       stagedBlooms = m.blooms, stagedBloomSizes = m.bloomSizes,
       op = s"restore(v$version)",
-      bloomCfgOverride = Some(bloomCfgOf(m)),
-      statColsOverride = Some(statColsOf(m)),
+      bloomCfgOverride = Some(m.bloomCfg),
+      statColsOverride = Some(m.statColsPolicy),
       colMapOverride = Some(m.colMap),
       colDropsOverride = Some(m.colDrops))
   }
@@ -4538,10 +4386,7 @@ object Versioned {
       s"version $base not found in $dir")
     val m = readManifest(fs, dir, base)
     if (m.lines.isEmpty) return base
-    val schema = versionSchema(spark, dir, m) match {
-      case Some(s) => s
-      case None => return base // zero-file base already handled; defensive
-    }
+    val schema = m.schema
     val pred = resolvedPredicate(spark, schema, predicate)
     val candidates = pruneWithIndex(spark, dir, m, pred)
     if (candidates.isEmpty) return base
@@ -4574,7 +4419,7 @@ object Versioned {
     // policy: a rewrite is exactly when a post-declaration file gains
     // the stats the policy promises (setPolicy's documented contract)
     val inherited = (matchedLines.flatMap(parseStats(_)._2.map(_._1)) ++
-      statColsOf(m)).distinct
+      m.statColsPolicy).distinct
     // the rewrite applies the matched files' existing DVs too — it
     // MATERIALIZES them (their pairs drop with the replaced files)
     val staged =
@@ -4588,7 +4433,7 @@ object Versioned {
     // re-measure every column the table indexes (dropped/rewritten
     // files lose their stale pointers in the publish loop)
     val (stagedBlooms, stagedBloomSizes) = stageBlooms(spark, dir,
-      staged, bloomCfgOf(m), m.colMap)
+      staged, m.bloomCfg, m.colMap)
     // surviving rows were admitted by their own commits: no CHECK rescan
     replaceLoop(spark, dir, staged, Some(base), keyCols = None,
       stagedSchema = schema, validateChecks = false, carried = untouched,
@@ -4623,10 +4468,7 @@ object Versioned {
       s"version $base not found in $dir")
     val m = readManifest(fs, dir, base)
     if (m.lines.isEmpty) return base
-    val schema = versionSchema(spark, dir, m) match {
-      case Some(s) => s
-      case None => return base
-    }
+    val schema = m.schema
     assignments.keys.foreach(c => require(schema.fieldNames.contains(c),
       s"UPDATE assigns to '$c', which is not a table column — adding a " +
         "column rewrites history; commit it as a replace"))
@@ -4643,7 +4485,7 @@ object Versioned {
     val (matchedLines, untouched) =
       m.lines.partition(l => matchedRel.contains(parseLine(l)._1))
     val inherited = (matchedLines.flatMap(parseStats(_)._2.map(_._1)) ++
-      statColsOf(m)).distinct
+      m.statColsPolicy).distinct
     val hit = coalesce(predicate, lit(false))
     // visible rows only: the rewrite materializes the matched files'
     // existing DVs rather than resurrecting their deleted rows
@@ -4658,7 +4500,7 @@ object Versioned {
       }: _*)
     val staged = stage(spark, dir, rewritten, inherited, m.colMap)
     val (stagedBlooms, stagedBloomSizes) = stageBlooms(spark, dir,
-      staged, bloomCfgOf(m), m.colMap)
+      staged, m.bloomCfg, m.colMap)
     replaceLoop(spark, dir, staged, Some(base), keyCols = None,
       stagedSchema = schema, carried = untouched,
       stagedBlooms = stagedBlooms, stagedBloomSizes = stagedBloomSizes,
@@ -4708,10 +4550,7 @@ object Versioned {
       s"version $base not found in $dir")
     val m = readManifest(fs, dir, base)
     if (m.lines.isEmpty) return base
-    val schema = versionSchema(spark, dir, m) match {
-      case Some(s) => s
-      case None => return base
-    }
+    val schema = m.schema
     val pred = resolvedPredicate(spark, schema, predicate)
     val candidates = pruneWithIndex(spark, dir, m, pred)
     if (candidates.isEmpty) return base
@@ -4843,15 +4682,14 @@ object Versioned {
             staged = None // re-derive
           }
           else {
-            val schema = versionSchema(spark, dir, hm).getOrElse(st.schema)
             val uuid = newCommitUuid()
             if (publishResolved(fs, dir, head + 1, uuid)(
-                casPublish(fs, dir, head + 1, schema,
+                casPublish(fs, dir, head + 1, hm.schema,
                   hm.lines ++ st.staged, checks = hm.checks,
                   dvs = hm.dvs ++ st.pairs,
                   blooms = hm.blooms ++ st.stagedBlooms,
-                  op = Some("update-mor"), bloomCfg = bloomCfgOf(hm),
-                  statColsPolicy = statColsOf(hm), parent = Some(hm),
+                  op = Some("update-mor"), bloomCfg = hm.bloomCfg,
+                  statColsPolicy = hm.statColsPolicy, parent = Some(hm),
                   commitUuid = Some(uuid), colMap = hm.colMap,
                   colDrops = hm.colDrops,
                   dvSizes = st.dvSizes, bloomSizes = st.bloomSizes)))
@@ -4871,7 +4709,7 @@ object Versioned {
     * scan saw. */
   private final case class MorStaged(scanned: Set[String],
       scannedLines: Set[String], scannedDvs: Set[(String, String)],
-      checks: Seq[(String, String)], schema: StructType,
+      checks: Seq[(String, String)],
       staged: Seq[String], pairs: Seq[(String, String)],
       dvSizes: Map[String, Long],
       stagedBlooms: Seq[(String, String, String)],
@@ -4889,10 +4727,7 @@ object Versioned {
     import org.apache.spark.sql.functions.{col, input_file_name}
     val m = readManifest(fs, dir, base)
     if (m.lines.isEmpty) return Right(base)
-    val schema = versionSchema(spark, dir, m) match {
-      case Some(s) => s
-      case None => return Right(base)
-    }
+    val schema = m.schema
     assignments.keys.foreach(c => require(schema.fieldNames.contains(c),
       s"UPDATE assigns to '$c', which is not a table column — adding a " +
         "column rewrites history; commit it as a replace"))
@@ -4921,7 +4756,7 @@ object Versioned {
     val affected = pairs.map(_._1).toSet
     val inherited = (m.lines
       .filter(l => affected.contains(parseLine(l)._1))
-      .flatMap(parseStats(_)._2.map(_._1)) ++ statColsOf(m)).distinct
+      .flatMap(parseStats(_)._2.map(_._1)) ++ m.statColsPolicy).distinct
     val updated = matched.select(schema.fieldNames.toSeq.map { c =>
       assignments.get(c) match {
         case Some(e) => e.cast(schema(c).dataType).as(c)
@@ -4929,7 +4764,7 @@ object Versioned {
       }
     }: _*)
     val staged = stage(spark, dir, updated, inherited, m.colMap)
-    val stagedBlooms = stageBlooms(spark, dir, staged, bloomCfgOf(m),
+    val stagedBlooms = stageBlooms(spark, dir, staged, m.bloomCfg,
       m.colMap)
     enforceChecks(spark, dir, staged, m.checks, schema)
     val attemptUuid = newCommitUuid()
@@ -4937,8 +4772,8 @@ object Versioned {
       casPublish(fs, dir, base + 1, schema,
         m.lines ++ staged, checks = m.checks, dvs = m.dvs ++ pairs,
         blooms = m.blooms ++ stagedBlooms._1, op = Some("update-mor"),
-        bloomCfg = bloomCfgOf(m),
-        statColsPolicy = statColsOf(m), parent = Some(m),
+        bloomCfg = m.bloomCfg,
+        statColsPolicy = m.statColsPolicy, parent = Some(m),
         commitUuid = Some(attemptUuid), colMap = m.colMap,
         colDrops = m.colDrops,
         dvSizes = dvSizes, bloomSizes = stagedBlooms._2))
@@ -4948,7 +4783,7 @@ object Versioned {
       scannedLines =
         m.lines.filter(l => affected.contains(parseLine(l)._1)).toSet,
       scannedDvs = m.dvs.filter(p => affected.contains(p._1)).toSet,
-      checks = m.checks, schema = schema, staged = staged,
+      checks = m.checks, staged = staged,
       pairs = pairs, dvSizes = dvSizes,
       stagedBlooms = stagedBlooms._1, bloomSizes = stagedBlooms._2))
   }
@@ -4985,7 +4820,6 @@ object Versioned {
       keyCols: Seq[String], baseVersion: Option[Int] = None,
       statCol: Option[String] = None,
       txn: Option[(String, Long)] = None,
-      txnHwSeed: Option[Map[String, Long]] = None,
       sourceDistinctByKey: Boolean = false): Int = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
@@ -4996,7 +4830,7 @@ object Versioned {
     val base = baseVersion.orElse(latestVersion(spark, dir))
     if (base.isEmpty) // first commit: a merge into nothing is an insert
       return commitImpl(spark, dir, source, replace = false,
-        statCols = statCol.toSeq, txn = txn, txnHwSeed = txnHwSeed)
+        statCols = statCol.toSeq, txn = txn)
     require(fs.exists(manifestPath(dir, base.get)),
       s"version ${base.get} not found in $dir")
     val m = readManifest(fs, dir, base.get)
@@ -5032,30 +4866,22 @@ object Versioned {
         else evolved.fieldNames.toSeq.filterNot(n =>
           baseCols.contains(n) || m.colMap.toMap.contains(n))
           .map(_ -> mintPhysical())
-      val tableSchema = versionSchema(spark, dir, m)
-      if (m.lines.isEmpty || tableSchema.isEmpty) {
+      val schema = m.schema
+      if (m.lines.isEmpty) {
         // empty base version: pure insert, schema evolves from empty
-        if (m.schemaEnforce)
-          tableSchema.foreach(enforceDeclaredSchema(_, src.schema, dir))
-        val schema = tableSchema.map(evolveSchema(_, src.schema))
-          .getOrElse(src.schema)
-        val aligned = tableSchema match {
-          case Some(_) => alignTo(src, schema)
-          case None => src
-        }
-        val mints = mintsFor(schema,
-          tableSchema.map(_.fieldNames.toSet).getOrElse(Set.empty))
+        if (m.schemaEnforce) enforceDeclaredSchema(schema, src.schema, dir)
+        val evolved = evolveSchema(schema, src.schema)
+        val mints = mintsFor(evolved, schema.fieldNames.toSet)
         val staged = stage(spark, dir,
-          clusterForStage(aligned, m.clusterCols),
-          (statCol.toSeq ++ statColsOf(m)).distinct
-            .filter(schema.fieldNames.contains), m.colMap ++ mints)
+          clusterForStage(alignTo(src, evolved), m.clusterCols),
+          (statCol.toSeq ++ m.statColsPolicy).distinct
+            .filter(evolved.fieldNames.contains), m.colMap ++ mints)
         return replaceLoop(spark, dir, staged, base,
-          keyCols = Some(keyCols), stagedSchema = schema,
+          keyCols = Some(keyCols), stagedSchema = evolved,
           carried = m.lines, keyProbe = Some(src.select(keyCols.head,
             keyCols.tail: _*)), colMapExtra = mints,
-          txn = txn, txnHwSeed = txnHwSeed)
+          txn = txn)
       }
-      val schema = tableSchema.get
       keyCols.foreach(k => require(schema.fieldNames.contains(k),
         s"key column '$k' not in table schema " +
           schema.fieldNames.mkString("[", ", ", "]")))
@@ -5075,7 +4901,7 @@ object Versioned {
       val (matchedLines, untouched) =
         m.lines.partition(l => matchedRel.contains(parseLine(l)._1))
       val inherited = (matchedLines.flatMap(parseStats(_)._2.map(_._1)) ++
-        statCol ++ statColsOf(m)).distinct
+        statCol ++ m.statColsPolicy).distinct
       // 3. rewrite matched files minus matched keys; union the source
       if (m.schemaEnforce) enforceDeclaredSchema(schema, src.schema, dir)
       val newSchema = evolveSchema(schema, src.schema)
@@ -5099,13 +4925,12 @@ object Versioned {
       val staged = stage(spark, dir,
         clusterForStage(stagedDf, m.clusterCols), inherited, mergeMap)
       val (stagedBlooms, stagedBloomSizes) = stageBlooms(spark, dir,
-        staged, bloomCfgOf(m), mergeMap)
+        staged, m.bloomCfg, mergeMap)
       replaceLoop(spark, dir, staged, base, keyCols = Some(keyCols),
         stagedSchema = newSchema, carried = untouched,
         keyProbe = Some(src.select(keyCols.head, keyCols.tail: _*)),
         stagedBlooms = stagedBlooms, stagedBloomSizes = stagedBloomSizes,
-        op = "merge", colMapExtra = mints, txn = txn,
-        txnHwSeed = txnHwSeed)
+        op = "merge", colMapExtra = mints, txn = txn)
     } finally { src.unpersist(); () }
   }
 
@@ -5128,12 +4953,9 @@ object Versioned {
       batchId: Long, sourceDistinctByKey: Boolean = false)
       : Option[Int] = {
     require(appId.nonEmpty, "idempotentMerge needs a non-empty appId")
-    val fs = fileSystem(spark, dir)
-    val (ledger, isSealed) = txnLedger(fs, spark, dir)
-    val seed = if (isSealed) None else Some(ledger)
-    if (ledger.get(appId).exists(_ >= batchId)) None
+    if (txnLedger(spark, dir).get(appId).exists(_ >= batchId)) None
     else Some(mergeInto(spark, dir, source, keyCols,
-      txn = Some((appId, batchId)), txnHwSeed = seed,
+      txn = Some((appId, batchId)),
       sourceDistinctByKey = sourceDistinctByKey))
   }
 
@@ -5198,10 +5020,8 @@ object Versioned {
     keyCols.foreach(k => require(source.columns.contains(k),
       s"key column '$k' not in source columns " +
         source.columns.mkString("[", ", ", "]")))
-    val fs = fileSystem(spark, dir)
-    val (ledger, isSealed) = txnLedger(fs, spark, dir)
-    if (ledger.get(appId).exists(_ >= batchId)) return None
-    val seed = if (isSealed) None else Some(ledger)
+    if (txnLedger(spark, dir).get(appId).exists(_ >= batchId))
+      return None
     val payload = source.columns.toSeq
       .filterNot(c => keyCols.contains(c) || c == seqCol || c == opCol)
     // the compaction ordering, most significant first — exactly
@@ -5219,7 +5039,7 @@ object Versioned {
           if (retainTombstones) compacted
           else compacted.filter(col(opCol) =!= deleteOp)
         Some(commitImpl(spark, dir, first, replace = false,
-          statCols = Nil, txn = stamp, txnHwSeed = seed))
+          statCols = Nil, txn = stamp))
       case Some(_) =>
         val incomingWins =
           struct(ordered.map(c => col(s"__s.`$c`")): _*) >=
@@ -5237,7 +5057,7 @@ object Versioned {
             WhenNotMatchedInsert(Some(col(s"__s.`$opCol`") =!= deleteOp),
               allAssign))
         Some(mergeApply(spark, dir, compacted, keyCols, clauses,
-          txn = stamp, txnHwSeed = seed,
+          txn = stamp,
           // compactByKey groups on exactly keyCols: one row per key
           // by construction — skip the cardinality probe's shuffle
           sourceDistinctByKey = true))
@@ -5466,7 +5286,6 @@ object Versioned {
       keyCols: Seq[String], clauses: Seq[MergeClause],
       baseVersion: Option[Int] = None,
       txn: Option[(String, Long)] = None,
-      txnHwSeed: Option[Map[String, Long]] = None,
       sourceDistinctByKey: Boolean = false): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit, struct, when}
     require(keyCols.nonEmpty, "mergeApply needs at least one key column")
@@ -5507,9 +5326,7 @@ object Versioned {
     require(fs.exists(manifestPath(dir, base)),
       s"version $base not found in $dir")
     val m = readManifest(fs, dir, base)
-    val schema = versionSchema(spark, dir, m).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $base of $dir has no recorded schema"))
+    val schema = m.schema
     require(!schema.fieldNames.contains("__s"),
       "mergeApply reserves '__s' for the source struct")
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
@@ -5721,18 +5538,18 @@ object Versioned {
         case (None, None) => insCached.foreach(_.unpersist()); return base
       }
       val inherited = (touchedLines.flatMap(parseStats(_)._2.map(_._1)) ++
-        statColsOf(m)).distinct
+        m.statColsPolicy).distinct
       val staged =
         try stage(spark, dir, stagedDf, inherited, m.colMap)
         finally insCached.foreach(_.unpersist())
       val (stagedBlooms, stagedBloomSizes) = stageBlooms(spark, dir,
-        staged, bloomCfgOf(m), m.colMap)
+        staged, m.bloomCfg, m.colMap)
       replaceLoop(spark, dir, staged, Some(base),
         keyCols = Some(keyCols), stagedSchema = schema,
         carried = untouched,
         keyProbe = Some(src.select(keyCols.head, keyCols.tail: _*)),
         stagedBlooms = stagedBlooms, stagedBloomSizes = stagedBloomSizes,
-        op = "merge", txn = txn, txnHwSeed = txnHwSeed)
+        op = "merge", txn = txn)
     } finally { src.unpersist(); () }
   }
 
@@ -5773,8 +5590,7 @@ object Versioned {
       colMapOverride: Option[Seq[(String, String)]] = None,
       colDropsOverride: Option[Seq[String]] = None,
       colMapExtra: Seq[(String, String)] = Nil,
-      txn: Option[(String, Long)] = None,
-      txnHwSeed: Option[Map[String, Long]] = None): Int = {
+      txn: Option[(String, Long)] = None): Int = {
     val fs = fileSystem(spark, dir)
     val baseM = base.map(readManifest(fs, dir, _))
     // staged files were written under the BASE's column mapping
@@ -5919,17 +5735,17 @@ object Versioned {
       // index config and stat policy carry like the CHECK policy; a
       // restore rolls them back with the state it republishes
       val cfg = bloomCfgOverride
-        .getOrElse(headM.map(bloomCfgOf).getOrElse(Nil))
+        .getOrElse(headM.map(_.bloomCfg).getOrElse(Nil))
       val statPol = statColsOverride
-        .getOrElse(headM.map(statColsOf).getOrElse(Nil))
+        .getOrElse(headM.map(_.statColsPolicy).getOrElse(Nil))
       // id-mode mints this commit's staged files carry (mergeInto's
       // evolved columns): a racing commit that introduced the same
       // column under its own physical invalidates the staged bytes —
       // conflict, re-derive (the merge path re-stages from scratch
       // anyway; a silent merge would null one writer's column)
       val headMap = headM.map(_.colMap.toMap).getOrElse(Map.empty)
-      val headSchemaCols = headM.flatMap(_.schema)
-        .map(_.fieldNames.toSet).getOrElse(Set.empty)
+      val headSchemaCols = headM.map(_.schema.fieldNames.toSet)
+        .getOrElse(Set.empty)
       val mintDrift = colMapExtra.exists { case (n, p) =>
         headMap.get(n).exists(_ != p) ||
           (headSchemaCols.contains(n) && !headMap.contains(n) && n != p)
@@ -5953,7 +5769,6 @@ object Versioned {
             statColsPolicy = statPol.filter(schema.fieldNames.contains),
             parent = headM, commitUuid = Some(uuid),
             colMap = pubColMap, colDrops = pubColDrops,
-            txnHwSeed = txnHwSeed,
             dvSizes = stagedDvSizes, bloomSizes = stagedBloomSizes)))
         return next
       attempts += 1
@@ -6306,9 +6121,7 @@ object Versioned {
     * version committed within the last `olderThanMs` milliseconds
     * (by recorded `#ts` instant), drop the rest; the head always
     * survives whatever the horizon says. Resolves the horizon to a
-    * version count through [[versionAtOrAfterInstant]] (strict
-    * recorded-instant semantics — a legacy pre-`#ts` manifest
-    * consulted refuses loudly rather than guessing from mtimes) and
+    * version count through [[versionAtOrAfterInstant]] and
     * delegates to the count-based [[expire]], so pins, the
     * chain-integrity sidecars, and the drop-then-collect ordering
     * are identical. Returns (versions dropped, files deleted). */
@@ -6388,7 +6201,7 @@ object Versioned {
                 // #eof trailer, snapshot shape) before deleting the
                 // chain it replaces; a swallowed failed rename would
                 // otherwise leave the oldest kept version dangling
-                if (!parseSidecar(fs, ckptPath(dir, oldestKept))
+                if (!parseSidecar(fs, dir, oldestKept)
                     .exists(_.base.isEmpty))
                   throw new java.io.IOException(
                     s"expire of $dir: checkpoint sidecar for oldest " +
@@ -6699,10 +6512,7 @@ object Versioned {
       version: Int, fromLine: Int, untilLine: Int): DataFrame = {
     val fs = fileSystem(spark, dir)
     val m = readManifest(fs, dir, version)
-    val schema = versionSchema(spark, dir, m).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $version of $dir has no schema to slice"))
-    scanVisible(spark, dir, schema,
+    scanVisible(spark, dir, m.schema,
       m.lines.slice(fromLine, untilLine), m.dvs, colMap = m.colMap,
       dvSizes = m.dvSizes)
   }
@@ -6722,8 +6532,7 @@ object Versioned {
     * over a 100 TB table reads every file's footer just to plan),
     * with files that predate an evolved column null-filling it. Each
     * version keeps ITS OWN schema, so time travel renders history
-    * exactly as it was written. Pre-schema-tracking manifests fall
-    * back to footer inference, as before.
+    * exactly as it was written.
     */
   def read(spark: SparkSession, dir: String,
       version: Option[Int] = None): DataFrame = {
@@ -6732,27 +6541,18 @@ object Versioned {
       throw new IllegalArgumentException(s"no committed version in $dir"))
     require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
     val m = readManifest(fs, dir, v)
-    val files = m.lines.map(line => s"$dir/${parseLine(line)._1}")
-    m.schema match {
-      case Some(sc) if files.isEmpty =>
-        // an empty version (truncate-to-empty replace, or an empty
-        // pipeline run's first commit) is still a READABLE table: the
-        // manifest knows the schema parquet's zero files cannot supply
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], sc)
-      case Some(sc) if m.dvs.nonEmpty || m.colMap.nonEmpty =>
-        // merge-on-read DVs and/or column mapping: scanVisible
-        // anti-joins deleted positions and renders physical file
-        // columns under their logical names
-        scanVisible(spark, dir, sc, m.lines, m.dvs, colMap = m.colMap,
-          dvSizes = m.dvSizes)
-      case Some(sc) => manifestScanLines(spark, dir, sc, m.lines)
-      case None =>
-        require(files.nonEmpty,
-          s"version $v of $dir is empty with no recorded schema " +
-            "(pre-schema-tracking manifest); nothing to infer from")
-        spark.read.parquet(files: _*)
-    }
+    if (m.lines.isEmpty)
+      // an empty version (truncate-to-empty replace, or an empty
+      // pipeline run's first commit) is still a READABLE table: the
+      // manifest knows the schema parquet's zero files cannot supply
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
+    else if (m.dvs.nonEmpty || m.colMap.nonEmpty)
+      // merge-on-read DVs and/or column mapping: scanVisible
+      // anti-joins deleted positions and renders physical file
+      // columns under their logical names
+      scanVisible(spark, dir, m.schema, m.lines, m.dvs, colMap = m.colMap,
+        dvSizes = m.dvSizes)
+    else manifestScanLines(spark, dir, m.schema, m.lines)
   }
 
   /** Stats-pruned read: plan only the files whose recorded
@@ -6781,17 +6581,13 @@ object Versioned {
         c == statCol && (mx < lo || mn > hi) }
     }
     val pred = col(statCol).between(lo, hi)
-    def scan(lns: Seq[String]) = m.schema match {
-      // DV'd kept files anti-join their deleted positions (the DV
-      // stats stay those of the base file — conservative: pruning may
-      // keep a file whose matching rows are all deleted; the anti
-      // join, not the stats, is the semantics)
-      case Some(sc) =>
-        scanVisible(spark, dir, sc, lns, m.dvs, colMap = m.colMap,
-          dvSizes = m.dvSizes)
-      case None =>
-        spark.read.parquet(lns.map(l => s"$dir/${parseLine(l)._1}"): _*)
-    }
+    // DV'd kept files anti-join their deleted positions (the DV
+    // stats stay those of the base file — conservative: pruning may
+    // keep a file whose matching rows are all deleted; the anti
+    // join, not the stats, is the semantics)
+    def scan(lns: Seq[String]) =
+      scanVisible(spark, dir, m.schema, lns, m.dvs, colMap = m.colMap,
+        dvSizes = m.dvSizes)
     if (kept.isEmpty)
       // every file pruned: one file supplies the schema, the always-
       // false residual filter supplies the (empty) rows
@@ -6810,8 +6606,7 @@ object Versioned {
       throw new IllegalArgumentException(s"no committed version in $dir"))
     require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
     val m = readManifest(fs, dir, v)
-    val schema = versionSchema(spark, dir, m).getOrElse(return Nil)
-    val pred = resolvedPredicate(spark, schema, predicate)
+    val pred = resolvedPredicate(spark, m.schema, predicate)
     pruneWithIndex(spark, dir, m, pred).map(parseLine(_)._1)
   }
 
@@ -6833,10 +6628,7 @@ object Versioned {
       throw new IllegalArgumentException(s"no committed version in $dir"))
     require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
     val m = readManifest(fs, dir, v)
-    val schema = versionSchema(spark, dir, m).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $v of $dir is empty with no recorded schema " +
-          "(pre-schema-tracking manifest); nothing to plan against"))
+    val schema = m.schema
     val pred = resolvedPredicate(spark, schema, predicate)
     val kept = pruneWithIndex(spark, dir, m, pred)
     // an all-pruned plan still renders the schema'd empty frame
@@ -7119,105 +6911,42 @@ object Versioned {
   /** The newest retained version whose COMMIT INSTANT is at or before
     * `micros` (epoch microseconds, the unit Spark's V2 `TIMESTAMP AS
     * OF` hook passes). None when the table's entire retained history
-    * is newer. The authoritative instant is the manifest's recorded
-    * `#ts` header (written monotonic with the version chain —
-    * max(clock, parent + 1) — so cross-process clock skew can never
-    * resolve to a version that is not the latest committed at-or-
-    * before t); manifests written before instant tracking fall back
-    * to their file mtime.
+    * is newer. The instant is the manifest's recorded `#ts` header
+    * (written monotonic with the version chain — max(clock, parent +
+    * 1) — so cross-process clock skew can never resolve to a version
+    * that is not the latest committed at-or-before t).
     *
-    * Cost on a MODERN table (every consulted manifest carries `#ts`):
-    * NO directory listing — the head resolves through the `_head`
-    * pointer, the retention floor by a binary search on exists()
-    * (versions are dense from the floor to the head), and the answer
-    * by a binary search on recorded instants: O(log head) small
-    * metadata ops where a long-retention table used to pay a
-    * paginated LIST per TIMESTAMP AS OF plan. Any legacy manifest
-    * consulted demotes to the exact listing-based walk — slower,
-    * never wrong.
+    * Cost: NO directory listing — the head resolves through the
+    * `_head` pointer, the retention floor by a binary search on
+    * exists() (versions are dense from the floor to the head), and the
+    * answer by a binary search on recorded instants: O(log head) small
+    * metadata ops where a long-retention table would pay a paginated
+    * LIST per TIMESTAMP AS OF plan.
     */
   def versionAsOfTimestamp(spark: SparkSession, dir: String,
       micros: Long): Option[Int] = {
     val fs = fileSystem(spark, dir)
     val millisT = micros / 1000L
-    latestVersion(spark, dir).foreach { head =>
+    latestVersion(spark, dir).flatMap { head =>
       // header-only reads: #ts leads every manifest file
-      def tsOf(v: Int): Option[Long] = readHeaderOnly(fs, dir, v).ts
-      tsOf(head) match {
-        case Some(headTs) =>
-          if (headTs <= millisT) return Some(head)
-          val floor = retentionFloor(fs, dir, head)
-          tsOf(floor) match {
-            case Some(floorTs) =>
-              if (floorTs > millisT) return None // all retained newer
-              // recorded instants are monotonic with versions:
-              // largest v in [floor, head] with ts(v) <= t
-              var a = floor // ts(a) <= t
-              var b = head  // t < ts(b)
-              var legacy = false
-              while (a + 1 < b && !legacy) {
-                val mid = (a + b) >>> 1
-                tsOf(mid) match {
-                  case Some(t) => if (t <= millisT) a = mid else b = mid
-                  case None => legacy = true // pre-#ts manifest
-                }
-              }
-              if (!legacy) return Some(a)
-            case None => () // legacy floor: exact walk below
+      def tsOf(v: Int): Long = readHeaderOnly(fs, dir, v).ts
+      if (tsOf(head) <= millisT) Some(head)
+      else {
+        val floor = retentionFloor(fs, dir, head)
+        if (tsOf(floor) > millisT) None // all retained newer
+        else {
+          // recorded instants are monotonic with versions:
+          // largest v in [floor, head] with ts(v) <= t
+          var a = floor // ts(a) <= t
+          var b = head  // t < ts(b)
+          while (a + 1 < b) {
+            val mid = (a + b) >>> 1
+            if (tsOf(mid) <= millisT) a = mid else b = mid
           }
-        case None => () // legacy head: exact walk below
-      }
-    }
-    versionAsOfTimestampListed(fs, dir, micros)
-  }
-
-  /** The pre-pointer listing-based resolution — the exact path for
-    * tables whose history predates instant tracking (legacy mtimes
-    * can straddle recorded instants, so one LIST supplies the
-    * best-effort ordering the binary search cannot trust). */
-  private def versionAsOfTimestampListed(fs: FileSystem, dir: String,
-      micros: Long): Option[Int] = {
-    val mdir = new Path(dir, "_manifest")
-    if (!fs.exists(mdir)) return None
-    val millis = micros / 1000L
-    // ONE directory listing yields every (version, mtime) pair — a
-    // per-version exists+stat walk would be two remote round-trips
-    // per retained version
-    val listed = fs.listStatus(mdir).toSeq.flatMap { s =>
-      manifestVersionOf(s.getPath.getName)
-        .map(_ -> s.getModificationTime)
-    }.sortBy(_._1)
-    if (listed.isEmpty) return None
-    val mtimeOf = listed.toMap
-    // (instant, recorded?) — the fast-path confirmation is only sound
-    // between RECORDED instants (write-monotonic with versions); a
-    // legacy mtime in the consulted pair proves nothing about its
-    // neighbors (a skewed legacy mtime can straddle modern instants),
-    // so any legacy manifest consulted demotes to the exact walk
-    def instant(v: Int): (Long, Boolean) =
-      // header-only read: #ts leads every manifest file
-      readHeaderOnly(fs, dir, v).ts match {
-        case Some(t) => (t, true)
-        case None => (mtimeOf.getOrElse(v, Long.MaxValue), false)
-      }
-    val cand = listed.filter(_._2 <= millis).map(_._1).maxOption
-    val confirmed = cand match {
-      case Some(v) =>
-        val next = listed.map(_._1).filter(_ > v).minOption
-        val (ti, rec) = instant(v)
-        rec && ti <= millis && next.forall { n =>
-          val (tn, recN) = instant(n); recN && tn > millis
+          Some(a)
         }
-      case None => // nothing by mtime: the oldest must really be newer
-        val (t0, rec0) = instant(listed.head._1)
-        rec0 && t0 > millis
+      }
     }
-    if (confirmed) cand
-    else // skew or legacy instants: exact walk, newest first — the
-      // newest version whose (recorded or best-effort) instant is at
-      // or before t
-      listed.map(_._1).sorted(Ordering[Int].reverse).iterator
-        .find(instant(_)._1 <= millis)
   }
 
   /** The retention floor below `head`: the oldest version whose
@@ -7250,11 +6979,7 @@ object Versioned {
     * or after `millis` — the resolver behind the streaming source's
     * `startingTimestamp` anchor ("start from this instant": a
     * timestamp BETWEEN two commits anchors at the next version; an
-    * exact hit anchors at it). STRICT: consults recorded `#ts`
-    * instants only, and any legacy (pre-`#ts`) manifest consulted
-    * refuses loudly — a stream anchored on a best-effort file mtime
-    * could silently skip or duplicate commits, which `TIMESTAMP AS
-    * OF`'s read-once tolerance does not excuse here. A `millis`
+    * exact hit anchors at it). A `millis`
     * before the retention floor anchors at the floor (everything
     * retained is at-or-after it); None when every retained instant is
     * BEFORE `millis` — the caller refuses "timestamp after the last
@@ -7266,11 +6991,7 @@ object Versioned {
       millis: Long): Option[Int] = {
     val fs = fileSystem(spark, dir)
     latestVersion(spark, dir).flatMap { head =>
-      def tsOf(v: Int): Long = readHeaderOnly(fs, dir, v).ts.getOrElse(
-        throw new IllegalArgumentException(
-          s"version $v of $dir predates commit-instant tracking " +
-            "(no #ts header): a timestamp anchor needs recorded " +
-            "instants — anchor by startingVersion instead"))
+      def tsOf(v: Int): Long = readHeaderOnly(fs, dir, v).ts
       if (tsOf(head) < millis) None
       else {
         val floor = retentionFloor(fs, dir, head)
@@ -7315,8 +7036,7 @@ object Versioned {
     * manifest reads only (no data I/O): `operation` is the commit
     * primitive that created the version (`#op` header; "unknown" on
     * pre-tracking manifests), `ts_millis` the recorded `#ts` commit
-    * instant (monotonic with versions; pre-tracking manifests fall
-    * back to the manifest file's modification time),
+    * instant (monotonic with versions),
     * `n_files`/`n_dvs`/`n_checks` the version's shape,
     * `app_id`/`batch_id` the streaming txn stamp when present, and
     * `row_count` the metadata count where the version is fully
@@ -7363,12 +7083,7 @@ object Versioned {
         val rowCount: Option[Long] =
           if (m.dvs.nonEmpty || counts.exists(_.isEmpty)) None
           else Some(counts.flatten.sum)
-        (v, m.op.getOrElse("unknown"),
-          // the recorded commit instant (monotonic with versions);
-          // pre-tracking manifests fall back to their file mtime
-          m.ts.getOrElse(
-            fs.getFileStatus(manifestPath(dir, v)).getModificationTime),
-          m.lines.size, m.dvs.size, m.checks.size,
+        (v, m.op.getOrElse("unknown"), m.ts, m.lines.size, m.dvs.size, m.checks.size,
           m.txn.map(_._1), m.txn.map(_._2), rowCount,
           tagsByVersion.getOrElse(v, Nil))
       }.toSeq.reverse
@@ -7447,10 +7162,7 @@ object Versioned {
       }
       acc.toMap
     }
-    val tableSchema = versionSchema(spark, dir, manifests(toVersion))
-      .getOrElse(throw new IllegalArgumentException(
-        s"version $toVersion of $dir has no recorded schema and no " +
-          "files; cannot shape a feed"))
+    val tableSchema = manifests(toVersion).schema
     val tableCols = tableSchema.fields.map(_.name).toSeq
     keyCols.foreach(k => require(tableCols.contains(k),
       s"key column '$k' not in table schema ${tableCols.mkString(", ")}"))
@@ -7551,9 +7263,7 @@ object Versioned {
       require(fs.exists(manifestPath(dir, v)),
         s"version $v of $dir not found (expired?)"))
     val tail = readManifest(fs, dir, toVersion)
-    val tableSchema = versionSchema(spark, dir, tail).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $toVersion of $dir has no recorded schema"))
+    val tableSchema = tail.schema
     val feedMap = tail.colMap
     var prev: Option[(Int, Manifest)] = None
     def manifestAt(v: Int): Manifest = {
@@ -7604,7 +7314,7 @@ object Versioned {
   }
 
   /** The recorded `#ts` commit instant of each version in
-    * `[fromVersion, toVersion]` (None on pre-tracking manifests) —
+    * `[fromVersion, toVersion]` (None for an expired version) —
     * header-only reads; the streaming source derives its
     * `_commit_timestamp` feed column from this. */
   private[graft] def commitInstants(spark: SparkSession, dir: String,
@@ -7615,7 +7325,7 @@ object Versioned {
         // header-only: #ts leads every manifest file; a full readRaw
         // here would parse whole snapshots (or checkpoint sidecars)
         // per stamped version
-        readHeaderOnly(fs, dir, v).ts else None)).toMap
+        Some(readHeaderOnly(fs, dir, v).ts) else None)).toMap
   }
 
   /** Version `v`'s recorded schema, column mapping, and drop
@@ -7625,7 +7335,7 @@ object Versioned {
       v: Int): (StructType, Seq[(String, String)]) = {
     val fs = fileSystem(spark, dir)
     val m = readManifest(fs, dir, v)
-    (versionSchema(spark, dir, m).getOrElse(StructType(Nil)), m.colMap)
+    (m.schema, m.colMap)
   }
 
   /** One replace commit's feed contribution: a keyed full-outer diff of

@@ -126,7 +126,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** `TIMESTAMP AS OF <t>` — Spark passes epoch MICROSECONDS; the
     * table pins the newest version committed at or before it
-    * ([[Versioned.versionAsOfTimestamp]] — manifest mtimes, the
+    * ([[Versioned.versionAsOfTimestamp]] — the recorded `#ts`
     * commit instants [[Versioned.history]] reports). */
   override def loadTable(ident: Identifier, timestamp: Long): Table =
     loadTable(ident) match {

@@ -134,10 +134,9 @@ final class GraftChangesSource(
     *    after source creation stream (persisted likewise);
     *  - `startingTimestamp = <epoch-millis | ISO-8601>`: resolved to
     *    the FIRST version committed at or after the instant
-    *    ([[Versioned.versionAtOrAfterInstant]] — strict, recorded
-    *    `#ts` instants only; legacy tables refuse loudly; a timestamp
-    *    after the last commit refuses loudly), then exactly the
-    *    explicit-version semantics, anchor persisted.
+    *    ([[Versioned.versionAtOrAfterInstant]] — recorded `#ts`
+    *    instants; a timestamp after the last commit refuses loudly),
+    *    then exactly the explicit-version semantics, anchor persisted.
     */
   private val startingVersionOpt: Option[String] =
     opts.get("startingversion")
@@ -452,7 +451,6 @@ final class GraftChangesSource(
     * benign add/drop evolutions around the streamed set. */
   private def guardSchemaDrift(v: Int): Unit = {
     val (curSchema, curMap) = Versioned.schemaAndColMap(spark, dir, v)
-    if (curSchema.isEmpty) return // empty legacy version: nothing to say
     val logicalOfPhys = curMap.map(_.swap).toMap
     creationCols.foreach { case (logical, physical, dt) =>
       val currentLogical = logicalOfPhys.getOrElse(physical, physical)

@@ -10,9 +10,10 @@ import graft.queries.Q
   * re-scanning the just-written data — and the two paths must render
   * BYTE-IDENTICAL manifest lines, or pruning/∀-prover semantics would
   * silently depend on which path measured a file. The A/B here drives
-  * the same commits with the footer path on (default) and forced off
-  * (`graft.stats.footer=off`, the scan fallback) and compares the
-  * manifest data lines verbatim across the cases that exercise every
+  * the commits through the footer path (the default), re-measures the
+  * same staged files through the scan (`Versioned.scanStatLines`, the
+  * reference implementation) and compares the manifest data lines
+  * verbatim across the cases that exercise every
   * footer branch: long ranges, string bounds (unicode, >32-code-point
   * truncation, supplementary-plane extremes), all-NULL columns,
   * zero-row files, timestamp micros, and null counts.
@@ -24,38 +25,40 @@ class FooterStatsSpec extends SparkSuite {
     Versioned.manifestDataLines(spark, dir,
       Versioned.latestVersion(spark, dir).get)
 
-  /** Run `commits` against two fresh tables — footer path on vs off —
-    * and assert identical manifest data lines. */
-  private def ab(commits: (String) => Unit): Unit = {
-    def run(): Seq[String] = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-fstats")
-      // compare the stats payload only: the rel path's commit UUID
-      // legitimately differs between the two runs
-      try { commits(dir.toString)
-        linesOf(dir.toString).map(_.dropWhile(_ != '\t')) }
-      finally Q.deleteRecursively(dir)
-    }
-    val hitsBefore = Versioned.footerStatHits.get()
-    val withFooter = run()
-    assert(Versioned.footerStatHits.get() > hitsBefore,
-      "the footer fast path must actually FIRE for this case — an " +
-        "identical-lines comparison alone cannot tell a working fast " +
-        "path from one that silently falls back to the scan every time")
-    System.setProperty("graft.stats.footer", "off")
-    val hitsMid = Versioned.footerStatHits.get()
-    val withScan = try run()
-    finally System.clearProperty("graft.stats.footer")
-    assert(Versioned.footerStatHits.get() == hitsMid,
-      "the kill switch must force the scan path")
-    assert(withFooter == withScan,
-      s"footer-path lines must equal scan-path lines:\n" +
-        s"footer: ${withFooter.mkString(" | ")}\n" +
-        s"scan:   ${withScan.mkString(" | ")}")
+  /** Run `commits` (which track `cols`) against a fresh table on the
+    * footer path, re-measure the same staged files through the scan,
+    * and assert identical lines. */
+  private def ab(cols: String*)(commits: (String) => Unit): Unit = {
+    val path = java.nio.file.Files.createTempDirectory("graft-fstats")
+    val dir = path.toString
+    try {
+      val hitsBefore = Versioned.footerStatHits.get()
+      commits(dir)
+      assert(Versioned.footerStatHits.get() > hitsBefore,
+        "the footer fast path must actually FIRE for this case — an " +
+          "identical-lines comparison alone cannot tell a working fast " +
+          "path from one that silently falls back to the scan every time")
+      // a manifest line is the measured line plus the staged file's
+      // `~b` byte size, which the measurement itself never renders
+      val withFooter = linesOf(dir).map(_.replaceAll("\t~b\\d+$", ""))
+        .sorted
+      val hitsMid = Versioned.footerStatHits.get()
+      val withScan = Versioned.scanStatLines(spark, dir,
+        withFooter.map(_.takeWhile(_ != '\t')), cols,
+        Versioned.schemaAndColMap(spark, dir,
+          Versioned.latestVersion(spark, dir).get)._1, Nil)
+      assert(Versioned.footerStatHits.get() == hitsMid,
+        "the scan entry must not go through the footer path")
+      assert(withFooter == withScan,
+        s"footer-path lines must equal scan-path lines:\n" +
+          s"footer: ${withFooter.mkString(" | ")}\n" +
+          s"scan:   ${withScan.mkString(" | ")}")
+    } finally Q.deleteRecursively(path)
   }
 
   test("long + null-count stats: footer and scan render identical " +
     "manifest lines") {
-    ab { dir =>
+    ab("k", "v") { dir =>
       val df = Seq[(java.lang.Long, java.lang.Long)](
         (1L, 10L), (2L, null), (3L, 30L), (-5L, null))
         .toDF("k", "v").coalesce(1)
@@ -65,7 +68,7 @@ class FooterStatsSpec extends SparkSuite {
 
   test("string bounds incl. unicode, >32-cp truncation and " +
     "supplementary-plane extremes match the scan path") {
-    ab { dir =>
+    ab("s") { dir =>
       val long = "z" * 40 // forces the truncated upper bound
       val df = Seq("apple", "péar😀", long, "private",
           "😀emoji-first")
@@ -75,7 +78,7 @@ class FooterStatsSpec extends SparkSuite {
   }
 
   test("all-NULL column and zero-row file render the same sentinels") {
-    ab { dir =>
+    ab("k", "s") { dir =>
       val allNull = Seq[(java.lang.Long, String)]((1L, null), (2L, null))
         .toDF("k", "s").coalesce(1)
       Versioned.commitWithStats(spark, dir, allNull, Seq("k", "s"), replace = false)
@@ -87,7 +90,7 @@ class FooterStatsSpec extends SparkSuite {
 
   test("timestamp stats record epoch micros with the ~u unit either " +
     "way (staged files pin INT64 TIMESTAMP_MICROS)") {
-    ab { dir =>
+    ab("ts") { dir =>
       val df = Seq("2024-01-01 00:00:00.123456", "1969-12-31 23:59:59.5")
         .toDF("raw").select(to_timestamp(col("raw")).as("ts"))
         .coalesce(1)
@@ -96,7 +99,7 @@ class FooterStatsSpec extends SparkSuite {
   }
 
   test("multi-file commits measure each file separately, same lines") {
-    ab { dir =>
+    ab("k", "s") { dir =>
       val df = (1L to 100L).map(i => (i, s"k$i")).toDF("k", "s")
         .repartitionByRange(4, col("k"))
       Versioned.commitWithStats(spark, dir, df, Seq("k", "s"), replace = false)

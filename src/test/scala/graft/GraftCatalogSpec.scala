@@ -744,46 +744,6 @@ class GraftCatalogSpec extends SparkSuite {
     }
   }
 
-  test("a metadata commit on a LEGACY manifest (no #ts) must not " +
-      "erase the pointer-derived bloom fallback") {
-    withCatalogSession { (s, wh) =>
-      import s.implicits._
-      s.sql("CREATE NAMESPACE graft.db")
-      val dir = s"$wh/db/leg"
-      Versioned.commitWithIndex(s, dir,
-        (0L until 20L).map(i => (i, s"k$i")).toDF("id", "k"),
-        statCols = Seq("id"), bloomCols = Seq("k"),
-        bloomExpectedItems = 1000L, bloomFpp = 0.01)
-      // simulate a pre-round-13 manifest: strip the instant and the
-      // config header; the pointers remain and bloomPolicy serves the
-      // legacy default fallback
-      val p = java.nio.file.Paths.get(dir, "_manifest", "v00000.txt")
-      val legacy = new String(java.nio.file.Files.readAllBytes(p),
-        "UTF-8").linesIterator
-        .filterNot(l => l.startsWith("#ts\t") ||
-          l.startsWith("#bloomcfg\t") || l.startsWith("#statcols\t"))
-        .mkString("", "\n", "\n")
-      java.nio.file.Files.write(p, legacy.getBytes("UTF-8"))
-      assert(Versioned.bloomPolicy(s, dir).nonEmpty,
-        "legacy pointers must keep the derived config")
-      assert(Versioned.statPolicy(s, dir).nonEmpty,
-        "legacy lines must keep the derived stat policy")
-      // a metadata-only commit (ADD CONSTRAINT) stamps #ts — it must
-      // republish the RESOLVED policy, not the raw (absent) headers
-      s.sql("ALTER TABLE graft.db.leg ADD CONSTRAINT id_ok " +
-        "CHECK (id >= 0)")
-      assert(Versioned.bloomPolicy(s, dir).nonEmpty,
-        "addCheck on a legacy table erased the bloom fallback")
-      assert(Versioned.statPolicy(s, dir).nonEmpty,
-        "addCheck on a legacy table erased the stat policy")
-      // … so the next insert still indexes and measures
-      s.sql("INSERT INTO graft.db.leg VALUES (100, 'fresh')")
-      assert(Versioned.plannedFilesEq(s, dir,
-        org.apache.spark.sql.functions.col("k") === "fresh").size == 1)
-      assert(Versioned.rowCountFromMetadata(s, dir) == Some(21L))
-    }
-  }
-
   test("file-skipping policy is TABLE policy: SQL INSERT INTO a " +
       "stats+bloom table keeps metadata COUNT(*) and point-delete " +
       "pruning intact") {

@@ -531,7 +531,7 @@ class GraftChangesSourceSpec extends SparkSuite {
     }
     assert(Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).exists(t => Option(t.getMessage)
-        .exists(_.contains("predates commit-instant tracking"))),
+        .exists(_.contains("predates the graft format epoch (no #ts)"))),
       e.getMessage)
   }
 }

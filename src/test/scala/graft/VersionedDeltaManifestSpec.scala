@@ -32,7 +32,7 @@ class VersionedDeltaManifestSpec extends SparkSuite {
     for (i <- 0 until 25)
       Versioned.commit(spark, dir, Seq((i.toLong, s"r$i")).toDF("id", "s"))
     // cadence: v0 snapshot; depths 1..9 are deltas; the 10th link
-    // checkpoints (default SPARK_GRAFT_MANIFEST_CHECKPOINT = 10)
+    // checkpoints (default cadence 10)
     assert(!isDelta(dir, 0), "v0 must be a full snapshot")
     assert(!isDelta(dir, 10) && !isDelta(dir, 20),
       "the checkpoint cadence must land full snapshots")
@@ -234,9 +234,8 @@ class VersionedDeltaManifestSpec extends SparkSuite {
       "the rolled-back versions stay time-travelable")
   }
 
-  test("TIMESTAMP AS OF resolves by pointer + binary search on a " +
-      "modern table — boundaries exact, expired prefixes sound, " +
-      "legacy manifests demote to the listing walk") {
+  test("TIMESTAMP AS OF resolves by pointer + binary search — " +
+      "boundaries exact, expired prefixes sound") {
     val dir = tmpDir() + "/asof"
     for (i <- 0 until 5)
       Versioned.commit(spark, dir, Seq((i.toLong, s"r$i")).toDF("id", "s"))
@@ -260,21 +259,6 @@ class VersionedDeltaManifestSpec extends SparkSuite {
       "an instant inside the expired prefix has no retained version " +
         "at or before it")
     assert(asOf(ts(3)).contains(3) && asOf(ts(4) + 1000).contains(4))
-    // LEGACY table (no #ts recorded): the exact listing-based walk
-    // still answers by mtime
-    val dir2 = tmpDir() + "/asof-legacy"
-    for (i <- 0 until 3)
-      Versioned.commit(spark, dir2, Seq((i.toLong, "x")).toDF("id", "s"))
-    for (v <- 0 until 3) {
-      val p = java.nio.file.Paths.get(dir2, "_manifest", f"v$v%05d.txt")
-      val kept = scala.io.Source.fromFile(p.toFile, "UTF-8")
-        .getLines().filterNot(_.startsWith("#ts\t")).toList
-      java.nio.file.Files.write(p,
-        kept.mkString("", "\n", "\n").getBytes("UTF-8"))
-    }
-    assert(Versioned.versionAsOfTimestamp(spark, dir2,
-      System.currentTimeMillis() * 1000L + 60000000L).contains(2),
-      "a legacy (pre-#ts) table must resolve through the listing walk")
   }
 
   test("an indeterminate conditional put (durably accepted, then a " +
@@ -413,82 +397,5 @@ class VersionedDeltaManifestSpec extends SparkSuite {
     assert(Versioned.read(spark, dir).count() == 4,
       "a torn sidecar must fall back to the chain, not drop rows")
     assert(Versioned.manifestDataLines(spark, dir, 3).size == 4)
-  }
-
-  test("a LEGACY (pre-#eof) sidecar whose delta chain is already " +
-      "dropped is rescued; with the chain intact it is ignored") {
-    val dir = tmpDir() + "/legacy-ckpt"
-    for (i <- 0 until 4)
-      Versioned.commit(spark, dir,
-        Seq((i.toLong, s"r$i")).toDF("id", "s"))             // v0..v3
-    assert(Versioned.checkpointManifest(spark, dir),
-      "fixture wants a delta head to fold")
-    val m = java.nio.file.Paths.get(dir, "_manifest")
-    val cp = m.resolve("v00003.ckpt.txt")
-    // strip the trailer — the shape expire wrote before #eof existed
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(cp), "UTF-8")
-      .split('\n').filter(_.nonEmpty)
-    assert(lines.last.startsWith("#eof\t"))
-    java.nio.file.Files.write(cp, lines.init.mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    // chain INTACT: the trailer-less sidecar is ignored, the chain
-    // answers — no legacy acceptance while a safer path exists
-    assert(Versioned.read(spark, dir).count() == 4)
-    // chain GONE (the pre-trailer expire's end state: sidecar
-    // installed, chain dropped): the legacy sidecar is the only
-    // complete state left and MUST be accepted — reads, history's
-    // fold, and the next checkpoint all go through it
-    for (v <- 0 until 3)
-      java.nio.file.Files.delete(m.resolve(f"v$v%05d.txt"))
-    assert(Versioned.read(spark, dir).count() == 4,
-      "a legacy sidecar over a dropped chain must be rescued")
-    assert(Versioned.read(spark, dir).select("id").collect()
-      .map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L, 3L))
-    assert(Versioned.manifestDataLines(spark, dir, 3).size == 4)
-    assert(Versioned.history(spark, dir).count() == 1L)
-    // a torn MODERN sidecar (trailer present but wrong) over a
-    // dropped chain stays refused — provably torn beats silently
-    // smaller, and the loud failure names the missing manifest
-    java.nio.file.Files.write(cp,
-      (lines.init.mkString("", "\n", "\n") + "#eof\t999999\n")
-        .getBytes("UTF-8"))
-    intercept[Exception] { Versioned.read(spark, dir).count() }
-  }
-
-  test("a rescued legacy sidecar SELF-HEALS: the next checkpoint " +
-      "re-installs it with a trailer, and expire + later commits " +
-      "proceed normally on the upgraded table") {
-    val dir = tmpDir() + "/legacy-heal"
-    for (i <- 0 until 4)
-      Versioned.commit(spark, dir,
-        Seq((i.toLong, s"r$i")).toDF("id", "s"))             // v0..v3
-    assert(Versioned.checkpointManifest(spark, dir))
-    val m = java.nio.file.Paths.get(dir, "_manifest")
-    val cp = m.resolve("v00003.ckpt.txt")
-    // the pre-trailer expire's end state: trailer-less sidecar,
-    // chain gone
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(cp), "UTF-8")
-      .split('\n').filter(_.nonEmpty)
-    java.nio.file.Files.write(cp, lines.init.mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    for (v <- 0 until 3)
-      java.nio.file.Files.delete(m.resolve(f"v$v%05d.txt"))
-    // life continues on the upgraded binary: commits land …
-    Versioned.commit(spark, dir, Seq((10L, "x")).toDF("id", "s")) // v4
-    assert(Versioned.read(spark, dir).count() == 5)
-    // … a checkpoint of a delta head re-renders FROM the rescued
-    // state and installs a TRAILERED sidecar (the healing step) …
-    if (Versioned.checkpointManifest(spark, dir)) {
-      val healed = m.resolve("v00004.ckpt.txt")
-      assert(new String(java.nio.file.Files.readAllBytes(healed),
-        "UTF-8").trim.split('\n').last.startsWith("#eof\t"))
-    }
-    // … and expire (the op that writes integrity sidecars before
-    // dropping chains) runs clean over the rescued region
-    Versioned.expire(spark, dir, keepLast = 1)
-    assert(Versioned.read(spark, dir).count() == 5)
-    assert(Versioned.history(spark, dir).count() == 1L)
   }
 }

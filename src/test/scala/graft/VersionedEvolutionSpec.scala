@@ -146,25 +146,6 @@ class VersionedEvolutionSpec extends SparkSuite {
     assert(Versioned.read(spark, dir, Some(v)).count() == 0)
   }
 
-  test("pre-schema-tracking manifests (no #schema header) still read " +
-      "via footer inference") {
-    val dir = tmpDir() + "/evolve-legacy"
-    Versioned.commit(spark, dir, base(0, 3))
-    // strip the header in place — a round-10 manifest
-    val p = java.nio.file.Paths.get(dir, "_manifest", "v00000.txt")
-    val legacy = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      .linesIterator.filterNot(_.startsWith("#")).mkString("", "\n", "\n")
-    java.nio.file.Files.write(p, legacy.getBytes("UTF-8"))
-    // the raw rewrite invalidates Hadoop's local-FS checksum sidecar
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(dir, "_manifest", ".v00000.txt.crc"))
-    assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSet ==
-      (0 until 3).map(i => (i.toLong, s"s$i")).toSet)
-    // and an APPEND to the legacy table samples footers for the merge
-    Versioned.commit(spark, dir, wide(10, 12))
-    assert(Versioned.read(spark, dir).columns.toSeq == Seq("id", "s", "x"))
-  }
-
   // ------------------------------------------------------ change feed
 
   test("append-only feed: inserts tagged with their commit version, " +
@@ -298,92 +279,6 @@ class VersionedEvolutionSpec extends SparkSuite {
     assert(Versioned.idempotentCommit(spark, dir, base(0, 2),
       "slow-writer", 8L).isEmpty,
       "a replace/metadata commit erased the idempotence ledger")
-  }
-
-  test("legacy tables (history without #txnhw) seed the sealed map " +
-      "on their first stamped commit — one scan, then O(1) guards") {
-    val dir = tmpDir() + "/txn-seed"
-    Versioned.idempotentCommit(spark, dir, base(0, 2), "appX", 0L)
-    Versioned.idempotentCommit(spark, dir, base(2, 3), "appY", 4L)
-    // strip the map + seal from every manifest — the shape of a
-    // table written before the ledger existed
-    val mdir = java.nio.file.Paths.get(dir, "_manifest")
-    val st = java.nio.file.Files.list(mdir)
-    try st.forEach { p =>
-      if (p.getFileName.toString.endsWith(".txt")) {
-        val kept = scala.jdk.CollectionConverters.ListHasAsScala(
-          java.nio.file.Files.readAllLines(p)).asScala
-          .filterNot(l => l.startsWith("#txnhw\t") ||
-            l.startsWith("#txnseal\t"))
-        java.nio.file.Files.write(p,
-          scala.jdk.CollectionConverters.SeqHasAsJava(kept).asJava)
-        ()
-      }
-    } finally st.close()
-    // the legacy scan still answers replays across BOTH writers …
-    assert(Versioned.idempotentCommit(spark, dir, base(0, 2),
-      "appX", 0L).isEmpty)
-    assert(Versioned.idempotentCommit(spark, dir, base(2, 3),
-      "appY", 4L).isEmpty)
-    // … and the first landing stamped commit seeds the SEALED map
-    // with the whole scanned history
-    assert(Versioned.idempotentCommit(spark, dir, base(5, 6),
-      "appZ", 0L).isDefined)
-    val head = Versioned.latestVersion(spark, dir).get
-    val headLines = scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(
-        mdir.resolve(f"v$head%05d.txt"))).asScala
-    assert(headLines.exists(_.startsWith("#txnseal\t")),
-      "the seeding commit must publish the sealed map")
-    assert(Seq("appX", "appY", "appZ").forall(a =>
-      headLines.exists(l => l.startsWith("#txnhw\t") &&
-        l.contains(a))),
-      s"seeded map must union the scanned history: $headLines")
-    // sealed guard: replays of the legacy writers still skip
-    assert(Versioned.idempotentCommit(spark, dir, base(0, 2),
-      "appX", 0L).isEmpty)
-  }
-
-  test("an UNSEALED table's guard unions the head's cached #txnhw " +
-      "with the history scan: a writer whose #txn stamp retention " +
-      "swept still stamp-skips through the cache alone") {
-    val dir = tmpDir() + "/txn-unsealed"
-    assert(Versioned.idempotentCommit(spark, dir, base(0, 2),
-      "cached-writer", 7L).contains(0))
-    // plain commits propagate the cache forward …
-    for (i <- 0 until 5)
-      Versioned.commit(spark, dir, base(100 + i, 101 + i))
-    // … retention sweeps the stamped manifest itself …
-    val (dropped, _) = Versioned.expire(spark, dir, keepLast = 2)
-    assert(dropped >= 1, "fixture wants the stamped manifest gone")
-    // … and the table presents as UNSEALED (the shape of a table
-    // whose seal a pre-seal release never wrote): strip #txnseal
-    // from every retained manifest, keeping the #txnhw cache lines
-    val mdir = java.nio.file.Paths.get(dir, "_manifest")
-    val st = java.nio.file.Files.list(mdir)
-    try st.forEach { p =>
-      // manifests only — a sidecar's #eof trailer counts its lines,
-      // and the ledger's header reads consult the manifest file
-      if (p.getFileName.toString.matches("v\\d+\\.txt")) {
-        val kept = scala.jdk.CollectionConverters.ListHasAsScala(
-          java.nio.file.Files.readAllLines(p)).asScala
-          .filterNot(_.startsWith("#txnseal\t"))
-        java.nio.file.Files.write(p,
-          scala.jdk.CollectionConverters.SeqHasAsJava(kept).asJava)
-        ()
-      }
-    } finally st.close()
-    // the retained history carries NO #txn stamp for this writer —
-    // the scan alone would re-append; the head's cached map is the
-    // only surviving trace and the guard must consult it
-    assert(Versioned.txnHighWater(spark, dir, "cached-writer")
-      .contains(7L), "unsealed ledger dropped the head's cache")
-    assert(Versioned.idempotentCommit(spark, dir, base(0, 2),
-      "cached-writer", 7L).isEmpty,
-      "unsealed guard ignored the cached high-water and double-appended")
-    // a genuinely newer batch still lands
-    assert(Versioned.idempotentCommit(spark, dir, base(50, 51),
-      "cached-writer", 8L).isDefined)
   }
 
   test("#txnhw retention horizon bounds the ledger under writer " +

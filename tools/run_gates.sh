@@ -5,7 +5,7 @@
 # (degenerate-but-in-contract rows), empty (0-row tables), tiny (1-row
 # tables), and mono (every document/embedding identical — the whole
 # corpus one duplicate cluster, the dedup family's worst case). A clean
-# run prints five "== 140 pass, 0 fail" lines; any FAIL line is a real
+# run prints five "== 162 pass, 0 fail" lines; any FAIL line is a real
 # cross-engine divergence or crash.
 #
 # Usage: tools/run_gates.sh [sfDir]     (default /root/testdata/sf0.01;
