@@ -4959,39 +4959,6 @@ object Versioned {
       sourceDistinctByKey = sourceDistinctByKey))
   }
 
-  /** Exactly-once CDC APPLY for a replayable writer — the
-    * delete-carrying sibling of [[idempotentMerge]], and the engine
-    * behind the graft sink's `opColumn` option: each batch row is an
-    * upsert or (when `opCol` equals `deleteOp`) a delete of its key,
-    * ordered by `seqCol`, applied under the `(appId, batchId)` stamp.
-    *
-    * Semantics are [[graft.streaming.Streams.cdcIngest]]'s
-    * max-semilattice, as ONE key-pruned MERGE instead of a
-    * whole-state compaction: the table stores per key the WINNING
-    * `(seqCol, opCol, payload)` row — tombstones retained (default),
-    * which is what makes application associative/commutative across
-    * any batch split: a late update older than an applied delete
-    * loses to the tombstone instead of resurrecting the key. The
-    * batch pre-compacts per key by the same struct-max (multi-row
-    * keys are legal — the within-batch contract is last-writer-wins
-    * by `seqCol`), then a matched row updates only when the incoming
-    * struct wins, and unmatched rows insert. Readers of the retained
-    * shape filter `opCol <> deleteOp` for the live view; GC the
-    * tombstones with `DELETE WHERE` once the feed's lateness horizon
-    * passes (a watermark/retention decision, per cdcIngest's doc).
-    *
-    * `retainTombstones = false` is the LIVE-TABLE shape (Delta's
-    * foreachBatch CDC-apply recipe): a winning delete REMOVES the
-    * row, a winning update overwrites it, unmatched non-deletes
-    * insert. Correct when `seqCol` is per-key monotone across
-    * batches (the common ordered CDC feed); with cross-batch
-    * disorder a late update older than an already-applied delete
-    * would re-insert — the tombstone shape exists for exactly that.
-    *
-    * Scale shape: O(files holding a matched key) via [[mergeApply]]'s
-    * stat-prune → refine path; the idempotence guard is the O(1)
-    * sealed-ledger read. Returns None on a replayed batchId.
-    */
   /** ONE winner row per key: `max(struct(ordered))` — the
     * map-side-combinable per-key compaction both the CDC apply and
     * the sink's within-batch last-writer-wins share. `ordered` lists
@@ -5008,13 +4975,49 @@ object Versioned {
         else col(s"__w.`$c`").as(c)): _*)
   }
 
+  /** Exactly-once CDC APPLY for a replayable writer — the
+    * delete-carrying sibling of [[idempotentMerge]], and the engine
+    * behind the graft sink's `opColumn` option: each batch row is an
+    * upsert or (when `opCol` equals `deleteOp`) a delete of its key,
+    * ordered by `seqCols` (most significant first — `(ts, event_id)`
+    * for a feed whose timestamps tie), applied under the
+    * `(appId, batchId)` stamp.
+    *
+    * Semantics are [[graft.ops.ChangeApply.compactLog]]'s
+    * max-semilattice, as ONE key-pruned MERGE instead of a
+    * whole-state compaction: the table stores per key the WINNING
+    * `(seqCols, opCol, payload)` row — tombstones retained (default),
+    * which is what makes application associative/commutative across
+    * any batch split: a late update older than an applied delete
+    * loses to the tombstone instead of resurrecting the key. The
+    * batch pre-compacts per key by the same struct-max (multi-row
+    * keys are legal — the within-batch contract is last-writer-wins
+    * by `seqCols`), then a matched row updates only when the incoming
+    * struct wins, and unmatched rows insert. Readers of the retained
+    * shape filter `opCol <> deleteOp` for the live view; GC the
+    * tombstones with `DELETE WHERE` once the feed's lateness horizon
+    * passes (a watermark/retention decision, per compactLog's doc).
+    *
+    * `retainTombstones = false` is the LIVE-TABLE shape (Delta's
+    * foreachBatch CDC-apply recipe): a winning delete REMOVES the
+    * row, a winning update overwrites it, unmatched non-deletes
+    * insert. Correct when `seqCols` is per-key monotone across
+    * batches (the common ordered CDC feed); with cross-batch
+    * disorder a late update older than an already-applied delete
+    * would re-insert — the tombstone shape exists for exactly that.
+    *
+    * Scale shape: O(files holding a matched key) via [[mergeApply]]'s
+    * stat-prune → refine path; the idempotence guard is the O(1)
+    * sealed-ledger read. Returns None on a replayed batchId.
+    */
   def idempotentMergeCdc(spark: SparkSession, dir: String,
-      source: DataFrame, keyCols: Seq[String], seqCol: String,
+      source: DataFrame, keyCols: Seq[String], seqCols: Seq[String],
       opCol: String, deleteOp: String, appId: String, batchId: Long,
       retainTombstones: Boolean = true): Option[Int] = {
     import org.apache.spark.sql.functions.{col, struct}
     require(appId.nonEmpty, "idempotentMergeCdc needs a non-empty appId")
-    Seq(seqCol, opCol).foreach(c => require(source.columns.contains(c),
+    require(seqCols.nonEmpty, "idempotentMergeCdc needs a seq column")
+    (seqCols :+ opCol).foreach(c => require(source.columns.contains(c),
       s"CDC column '$c' not in source columns " +
         source.columns.mkString("[", ", ", "]")))
     keyCols.foreach(k => require(source.columns.contains(k),
@@ -5023,11 +5026,12 @@ object Versioned {
     if (txnLedger(spark, dir).get(appId).exists(_ >= batchId))
       return None
     val payload = source.columns.toSeq
-      .filterNot(c => keyCols.contains(c) || c == seqCol || c == opCol)
+      .filterNot(c => keyCols.contains(c) || seqCols.contains(c) ||
+        c == opCol)
     // the compaction ordering, most significant first — exactly
     // ChangeApply.compactLog's `ordered` (seq, then op/payload as the
     // deterministic tiebreak a malformed duplicate-seq feed needs)
-    val ordered = seqCol +: (opCol +: payload)
+    val ordered = seqCols ++ (opCol +: payload)
     val compacted = compactByKey(source, keyCols, ordered)
     val stamp = Some((appId, batchId))
     latestVersion(spark, dir) match {
@@ -7185,13 +7189,17 @@ object Versioned {
     // manifest = rows this commit deleted in place (the anti join in
     // scanVisible dedups double-deletes across stacked DVs); dropped
     // pairs against the CURRENT manifest = rows a restore resurrected.
-    def dvRows(pairs: Seq[(String, String)], mf: Manifest): DataFrame = {
+    // The pairs' sidecar sizes come from `sized`, the manifest that
+    // recorded them — `mf` need not hold them, and an unsized sidecar
+    // is statused on the driver.
+    def dvRows(pairs: Seq[(String, String)], mf: Manifest,
+        sized: Manifest): DataFrame = {
       val baseRels = pairs.map(_._1).toSet
       val withMeta = scanVisible(spark, dir, tableSchema,
         mf.lines.filter(l => baseRels.contains(parseLine(l)._1)),
         mf.dvs, keepMeta = true, colMap = feedMap,
         dvSizes = mf.dvSizes)
-      val dv = dvScan(spark, dir, pairs.map(_._2), mf.dvSizes)
+      val dv = dvScan(spark, dir, pairs.map(_._2), sized.dvSizes)
       withMeta.join(dv,
         withMeta("__file") === dv("file") && withMeta("__pos") === dv("pos"),
         "left_semi").drop("__file", "__pos")
@@ -7210,10 +7218,10 @@ object Versioned {
         .filter(d => survivors.contains(d._1))
       val oldSide = (if (removed.nonEmpty) Seq(scanVis(prevM, removed))
         else Nil) ++
-        (if (dvNew.nonEmpty) Seq(dvRows(dvNew, prevM)) else Nil)
+        (if (dvNew.nonEmpty) Seq(dvRows(dvNew, prevM, curM)) else Nil)
       val newSide = (if (added.nonEmpty) Seq(scanVis(curM, added))
         else Nil) ++
-        (if (dvGone.nonEmpty) Seq(dvRows(dvGone, curM)) else Nil)
+        (if (dvGone.nonEmpty) Seq(dvRows(dvGone, curM, prevM)) else Nil)
       (oldSide.reduceOption(_.unionByName(_)),
         newSide.reduceOption(_.unionByName(_))) match {
         case (None, None) => None // no-op commit

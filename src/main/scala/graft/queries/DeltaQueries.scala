@@ -51,28 +51,23 @@ object DeltaQueries {
   // ---------------------------------------------------------------- q108
   // Stream-static enrichment ingest: events replayed as three "daily"
   // micro-batches (batch = event_id % 3), each broadcast-left-joined
-  // with the customer dim and appended to the enriched table exactly
-  // once (checkpointed AvailableNow lifecycle, as q70). The enriched
-  // table must equal the plain batch join — the stream-static contract.
-  // Bench note: the seconds are fixture + streaming lifecycle (3 batch
-  // files, managed-table create, 3 checkpointed commits), not plan cost.
+  // with the customer dim and appended to a graft table through the
+  // graft sink, one stamped commit per batch (checkpointed AvailableNow
+  // lifecycle, as q70). The enriched table must equal the plain batch
+  // join — the stream-static contract. Bench note: the seconds are
+  // fixture + streaming lifecycle (3 batch files, 3 checkpointed
+  // batches each one stamped commit), not plan cost.
   private def q108(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft-enrich-src")
     val ckpt = Files.createTempDirectory("graft-enrich-ckpt")
-    val table = "graft.q108_enriched"
+    val table = Files.createTempDirectory("graft-enrich-table")
     try {
       val events = t(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       writeIdBatches(events, "event_id", tmp)
       val dim = t(s, dir, "customer")
         .select("c_custkey", "c_name", "c_mktsegment")
-      graft.warehouse.Warehouse.ensureDatabase(s, "graft")
-      graft.warehouse.Warehouse.dropManagedTable(s, table)
-      events.limit(0)
-        .join(dim, col("user_id") === col("c_custkey"), "left")
-        .drop("c_custkey")
-        .write.saveAsTable(table)
       val stream = s.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(tmp.toString)
@@ -80,12 +75,16 @@ object DeltaQueries {
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", Q.streamParts)
       try {
-        val q = graft.streaming.Streams.enrichIngest(stream, dim, table,
-          ckpt.toString, "user_id", "c_custkey")
+        val q = graft.streaming.Streams.enrichIngest(stream, dim,
+          table.toString, ckpt.toString, "user_id", "c_custkey")
         try q.processAllAvailable() finally q.stop()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    } finally { Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt) }
-    s.table(table).orderBy("event_id")
+      graft.lake.Versioned.read(s, table.toString).orderBy("event_id")
+        .localCheckpoint(true)
+    } finally {
+      Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt)
+      Q.deleteRecursively(table)
+    }
   }
 
   private val q108Sql =
@@ -128,16 +127,18 @@ object DeltaQueries {
   // ---------------------------------------------------------------- q111
   // Streaming CDC apply: the q105 change feed replayed as three
   // micro-batches (batch = event_id % 3 — deliberately NOT per-key
-  // ordered) continuously maintaining a compacted state table with
-  // tombstones retained. Because the merge is a max-semilattice, the
-  // final live view must equal q105's one-shot full-log compaction
-  // exactly — same oracle. Bench note: seconds are fixture + streaming
-  // lifecycle + 3 staged table rewrites, not plan cost.
+  // ordered) continuously maintaining a compacted graft state table
+  // with tombstones retained, one key-pruned stamped CDC merge per
+  // batch through the graft sink (ordered on (ts, event_id)). Because
+  // the merge is a max-semilattice, the final live view must equal
+  // q105's one-shot full-log compaction exactly — same oracle. Bench
+  // note: seconds are fixture + streaming lifecycle + 3 stamped
+  // commits (one append, two merges), not plan cost.
   private def q111(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft-cdc-src")
     val ckpt = Files.createTempDirectory("graft-cdc-ckpt")
-    val table = "graft.q111_state"
+    val table = Files.createTempDirectory("graft-cdc-table")
     try {
       val log = t(s, dir, "events")
         .withColumn("op",
@@ -145,26 +146,26 @@ object DeltaQueries {
         .select("user_id", "ts", "event_id", "op", "event_type", "value",
           "props")
       writeIdBatches(log, "event_id", tmp)
-      graft.warehouse.Warehouse.ensureDatabase(s, "graft")
-      graft.warehouse.Warehouse.dropManagedTable(s, table)
-      log.limit(0).write.saveAsTable(table)
       val stream = s.readStream.schema(log.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(tmp.toString)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", Q.streamParts)
       try {
-        val q = graft.streaming.Streams.cdcIngest(stream, table,
+        val q = graft.streaming.Streams.cdcIngest(stream, table.toString,
           ckpt.toString, "user_id", Seq("ts", "event_id"), "op",
           Seq("event_type", "value", "props"))
         try q.processAllAvailable() finally q.stop()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
       // live view: tombstoned users stay dead
-      s.table(table).filter(col("op") =!= "D")
+      graft.lake.Versioned.read(s, table.toString).filter(col("op") =!= "D")
         .select("user_id", "ts", "event_id", "event_type", "value", "props")
         .orderBy("user_id")
         .localCheckpoint(true)
-    } finally { Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt) }
+    } finally {
+      Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt)
+      Q.deleteRecursively(table)
+    }
   }
 
   // identical semantics to the one-shot q105 — that IS the property
@@ -551,13 +552,13 @@ object DeltaQueries {
 
   // ---------------------------------------------------------------- q136
   // Exactly-once streaming ingest into the VERSIONED lake: the events
-  // table replayed as three micro-batches through
-  // Streams.versionedIngest — each batch lands as one (appId, batchId)-
+  // table replayed as three micro-batches through the graft sink with
+  // a fixed `txnAppId` — each batch lands as one (appId, batchId)-
   // stamped manifest commit (Versioned.idempotentCommit, the Delta
   // `txn` action on this substrate). The in-query requires force the
   // exactly-once claim: three batches -> exactly three versions, and a
   // crash-replay of the last batch (same batchId re-submitted, which is
-  // precisely what a restarted foreachBatch does) must be recognized by
+  // precisely what a restarted stream does) must be recognized by
   // its stamp and SKIPPED, not double-appended. The final table must
   // equal the plain batch read — and every micro-batch boundary remains
   // a time-travelable version. Bench note: seconds are fixture +
@@ -575,8 +576,11 @@ object DeltaQueries {
       val stream = s.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(tmp.toString)
-      val q = graft.streaming.Streams.versionedIngest(stream,
-        table.toString, ckpt.toString, appId = "q136")
+      val q = stream.writeStream.format("graft")
+        .option("path", table.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .option("txnAppId", "q136")
+        .start()
       try q.processAllAvailable() finally q.stop()
       require(Versioned.latestVersion(s, table.toString).contains(2),
         "expected exactly three stamped versions from three batches")
@@ -1680,10 +1684,10 @@ object DeltaQueries {
 
   // ---------------------------------------------------------------- q152
   // First-class streaming SINK (writeStream.format("graft")) — q136's
-  // twin through the PUBLIC Structured Streaming API instead of the
-  // foreachBatch helper: the events table replayed as three
-  // micro-batches lands as three (appId, batchId)-stamped manifest
-  // commits, appId = the streaming query id the engine persists in
+  // twin keyed on the streaming query id instead of a fixed txnAppId:
+  // the events table replayed as three micro-batches lands as three
+  // (appId, batchId)-stamped manifest commits, appId = the streaming
+  // query id the engine persists in
   // the checkpoint (GraftSink routes every batch through
   // Versioned.idempotentCommit — Delta's txn action). In-query
   // requires force the exactly-once claim: three batches -> exactly
@@ -2163,7 +2167,8 @@ object DeltaQueries {
         require(Versioned.idempotentMergeCdc(s, table.toString,
           s.range(1).select(lit(-1L).as("user_id"), lit(0L).as("seq"),
             lit("U").as("op"), lit("x").as("v")),
-          Seq("user_id"), "seq", "op", "D", id1, batchId = hw).isEmpty,
+          Seq("user_id"), Seq("seq"), "op", "D", id1, batchId = hw)
+          .isEmpty,
           "replayed CDC batch merged twice")
       }
       } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Sampling, Text}
+import graft.lake.Versioned
 import graft.ops.SnapshotDiff
 import graft.streaming.Streams
-import graft.warehouse.Warehouse
 import Q.t
 
 /** Round-7 corpus-preparation queries: the quality/budget/incremental
@@ -226,22 +226,19 @@ object PrepQueries {
   // survivors appended. Accepted = earliest batch's min-id doc per
   // fingerprint — the oracle's row_number over (batch, doc_id).
   // Bench note: q70's ~4 s is fixture + streaming lifecycle (3 batch
-  // file writes, managed-table create, 3 checkpointed commits + table
-  // appends), not plan cost — q37's documented fixed floor, paid 3×
-  // plus the warehouse round-trips.
+  // file writes, an empty graft-table commit, 3 checkpointed batches
+  // each one stamped append), not plan cost — q37's documented fixed
+  // floor, paid 3× plus the lake commits.
   private def q70(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft-ingest-src")
     val ckpt = Files.createTempDirectory("graft-ingest-ckpt")
-    val table = "graft.q70_accepted"
+    val table = Files.createTempDirectory("graft-ingest-table")
     try {
       val docs = t(s, dir, "documents").select("doc_id", "text")
       writeDailyBatches(docs, tmp)
-      Warehouse.ensureDatabase(s, "graft")
-      Warehouse.dropManagedTable(s, table)
-      docs.limit(0)
-        .withColumn("fingerprint", Text.fingerprint(col("text")))
-        .write.saveAsTable(table)
+      Versioned.commit(s, table.toString, docs.limit(0)
+        .withColumn("fingerprint", Text.fingerprint(col("text"))))
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(tmp.toString)
@@ -251,11 +248,17 @@ object PrepQueries {
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", Q.streamParts)
       try {
-        val q = Streams.dedupIngest(stream, table, ckpt.toString)
+        val q = Streams.dedupIngest(stream, table.toString, ckpt.toString)
         try q.processAllAvailable() finally q.stop()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    } finally { Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt) }
-    s.table(table).select("doc_id", "fingerprint").orderBy("doc_id")
+      Versioned.read(s, table.toString).select("doc_id", "fingerprint")
+        .orderBy("doc_id")
+        // materialize before the temp dir is deleted
+        .localCheckpoint(true)
+    } finally {
+      Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt)
+      Q.deleteRecursively(table)
+    }
   }
 
   private val q70Sql =
@@ -429,31 +432,33 @@ object PrepQueries {
   // accepted_{i-1} + (b_i minus its verified matches vs accepted_{i-1})
   // — same sig/band/jaccard twins as q67, applied twice in a CTE chain.
   // Bench note: like q70, the measured seconds are fixture + streaming
-  // lifecycle (batch writes, table create, 3 checkpointed commits),
-  // not plan cost.
+  // lifecycle (batch writes, an empty graft-table commit, 3
+  // checkpointed batches each one stamped append), not plan cost.
   private def q77(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft-ingest-src")
     val ckpt = Files.createTempDirectory("graft-ingest-ckpt")
-    val table = "graft.q77_accepted"
+    val table = Files.createTempDirectory("graft-ingest-table")
     try {
       val docs = t(s, dir, "documents").select("doc_id", "text")
       writeDailyBatches(docs, tmp)
-      Warehouse.ensureDatabase(s, "graft")
-      Warehouse.dropManagedTable(s, table)
-      docs.limit(0).write.saveAsTable(table)
+      Versioned.commit(s, table.toString, docs.limit(0))
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(tmp.toString)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", Q.streamParts)
       try {
-        val q = Streams.nearDedupIngest(stream, table, ckpt.toString,
-          threshold = 0.2)
+        val q = Streams.nearDedupIngest(stream, table.toString,
+          ckpt.toString, threshold = 0.2)
         try q.processAllAvailable() finally q.stop()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    } finally { Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt) }
-    s.table(table).select("doc_id").orderBy("doc_id")
+      Versioned.read(s, table.toString).select("doc_id").orderBy("doc_id")
+        .localCheckpoint(true)
+    } finally {
+      Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt)
+      Q.deleteRecursively(table)
+    }
   }
 
   /** Verified new×seen match ids (`SELECT id_new ...`) between two CTE
@@ -798,40 +803,42 @@ object PrepQueries {
   // total over everything SEEN (in (batch, doc_id) order) stays within
   // the budget. Seen-not-accepted running totals make the decision a
   // pure prefix function — so the batched loop hash-matches the
-  // one-shot window oracle.
+  // one-shot window oracle. Bench note: the seconds are fixture +
+  // streaming lifecycle (batch writes, two empty graft-table commits,
+  // 3 checkpointed batches each two stamped appends).
   private val q126Budget = 1000L
 
   private def q126(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft-budget-src")
     val ckpt = Files.createTempDirectory("graft-budget-ckpt")
-    val accepted = "graft.q126_accepted"
-    val state = "graft.q126_state"
+    val accepted = Files.createTempDirectory("graft-budget-accepted")
+    val state = Files.createTempDirectory("graft-budget-state")
     try {
       val docs = t(s, dir, "documents").select("doc_id", "source", "text")
       writeDailyBatches(docs, tmp)
-      Warehouse.ensureDatabase(s, "graft")
-      Warehouse.dropManagedTable(s, accepted)
-      Warehouse.dropManagedTable(s, state)
-      docs.limit(0).select(col("doc_id"), col("source"),
-          lit(0L).as("w"), lit(0L).as("running_total"))
-        .write.saveAsTable(accepted)
-      docs.limit(0).select(col("source"), lit(0L).as("w"),
-          lit(0L).as("batch_id"))
-        .write.saveAsTable(state)
+      Versioned.commit(s, accepted.toString, docs.limit(0).select(
+        col("doc_id"), col("source"), lit(0L).as("w"),
+        lit(0L).as("running_total")))
+      Versioned.commit(s, state.toString, docs.limit(0).select(
+        col("source"), lit(0L).as("w"), lit(0L).as("batch_id")))
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(tmp.toString)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", Q.streamParts)
       try {
-        val q = Streams.budgetIngest(stream, accepted, state,
-          ckpt.toString, q126Budget,
+        val q = Streams.budgetIngest(stream, accepted.toString,
+          state.toString, ckpt.toString, q126Budget,
           Text.tokenCount(col("text")).cast("long"))
         try q.processAllAvailable() finally q.stop()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    } finally { Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt) }
-    s.table(accepted).orderBy("doc_id")
+      Versioned.read(s, accepted.toString).orderBy("doc_id")
+        .localCheckpoint(true)
+    } finally {
+      Q.deleteRecursively(tmp); Q.deleteRecursively(ckpt)
+      Q.deleteRecursively(accepted); Q.deleteRecursively(state)
+    }
   }
 
   private val q126Sql =

@@ -12,11 +12,11 @@ import graft.lake.Versioned
 
 /** `spark.readStream.format("graft-changes")` — a STREAMING SOURCE
   * over the versioned lake whose offsets are committed VERSION
-  * NUMBERS, the missing read half of [[Streams.versionedIngest]]
-  * (Delta's streaming-source shape: offsets are log versions, each
-  * micro-batch plans the commit range's change feed). Until now a
-  * downstream pipeline had to hand-roll the poll loop the q113
-  * snapshot-diff demonstrates; with this, it is one `readStream`:
+  * NUMBERS, the read half of the `format("graft")` sink
+  * ([[GraftSink]]; Delta's streaming-source shape: offsets are log
+  * versions, each micro-batch plans the commit range's change feed).
+  * Until now a downstream pipeline had to hand-roll the poll loop the
+  * q113 snapshot-diff demonstrates; with this, it is one `readStream`:
   *
   * {{{
   *   spark.readStream.format("graft-changes")
@@ -97,8 +97,7 @@ final class GraftChangesSource(
     "skipChangeCommits applies to mode=rows only — the change feed " +
       "renders deletes instead of skipping them")
   private val keyCols: Seq[String] = opts.get("keycols")
-    .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-    .getOrElse(Nil)
+    .map(GraftSink.colList).getOrElse(Nil)
   private val maxVersionsPerTrigger: Int =
     opts.get("maxversionspertrigger").map(_.toInt).getOrElse(Int.MaxValue)
   require(maxVersionsPerTrigger > 0,
@@ -577,8 +576,7 @@ class GraftChangesSourceProvider
         "pruning a partition filter would, without small-file " +
         "explosion or partition-evolution rewrites")
     val keyCols = parameters.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("keycols") =>
-        v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      case (k, v) if k.equalsIgnoreCase("keycols") => GraftSink.colList(v)
     }.getOrElse(Nil)
     require(outputMode != OutputMode.Update() || keyCols.nonEmpty,
       "graft sink in Update output mode needs .option(\"keyCols\", " +

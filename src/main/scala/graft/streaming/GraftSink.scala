@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SQLContext}
+import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 
@@ -8,9 +8,8 @@ import graft.lake.Versioned
 
 /** `df.writeStream.format("graft")` — the first-class STREAMING SINK
   * over the versioned lake, the write half of [[GraftChangesSource]].
-  * Until now exactly-once streaming ingest required the
-  * [[Streams.versionedIngest]] `foreachBatch` helper; with this it is
-  * the standard Structured Streaming wiring:
+  * Exactly-once streaming ingest is the standard Structured Streaming
+  * wiring:
   *
   * {{{
   *   df.writeStream.format("graft")
@@ -51,8 +50,10 @@ import graft.lake.Versioned
   * Update-mode CDC (round 18): `.option("opColumn", "_op")` +
   * `.option("seqColumn", "seq")` turns each batch row into an
   * upsert-or-DELETE of its key via
-  * [[Versioned.idempotentMergeCdc]] — cdcIngest's max-semilattice
-  * as one key-pruned merge per trigger: within-batch rows
+  * [[Versioned.idempotentMergeCdc]] — [[graft.ops.ChangeApply]]'s
+  * max-semilattice as one key-pruned merge per trigger (the engine
+  * of [[Streams.cdcIngest]]); `seqColumn` may be a comma list
+  * (`"ts,event_id"`), most significant first: within-batch rows
   * pre-compact by `seqColumn` (multi-row keys are legal), a matched
   * key updates only when the incoming `(seq, op, payload)` struct
   * wins, and tombstones are retained by default so a late update
@@ -88,65 +89,51 @@ final class GraftSink(sqlContext: SQLContext,
   private val appIdOverride = opts.get("txnappid")
   // CDC options (Update mode only — validated at createSink): an op
   // column turns each batch row into an upsert-or-delete of its key
-  // under [[Versioned.idempotentMergeCdc]]'s max-semilattice; a seq
-  // column alone declares within-batch last-writer-wins for plain
+  // under [[Versioned.idempotentMergeCdc]]'s max-semilattice; seq
+  // columns alone declare within-batch last-writer-wins for plain
   // upserts (multi-row-per-key Update batches — the
-  // flatMapGroupsWithState writer shape)
+  // flatMapGroupsWithState writer shape). `seqColumn` is a comma
+  // list, most significant first, parsed as `keyCols` is
   private val opCol = opts.get("opcolumn")
-  private val seqCol = opts.get("seqcolumn")
+  private val seqCols = opts.get("seqcolumn").map(GraftSink.colList)
+    .getOrElse(Nil)
   private val deleteOp = opts.getOrElse("deleteop", "D")
   private val retainTombstones =
     !opts.get("tombstones").exists(_.equalsIgnoreCase("drop"))
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val spark = sqlContext.sparkSession
-    // the stable exactly-once identity: the STREAMING QUERY ID, which
-    // MicroBatchExecution publishes as a local property on the stream
-    // execution thread that calls addBatch, and persists in the
-    // checkpoint. A Spark-internal contract — so when it is absent
-    // (a foreign thread, a future engine refactor) the sink fails
-    // LOUDLY here rather than minting a fresh identity that would
-    // silently forfeit replay protection; `txnAppId` is the escape
-    // hatch that restores it.
-    val appId = appIdOverride.orElse(
-      Option(spark.sparkContext.getLocalProperty(
-        StreamExecution.QUERY_ID_KEY)))
-      .getOrElse(throw new IllegalStateException(
-        "graft sink could not resolve an idempotence key: no " +
-          "streaming query id on this thread and no txnAppId option"))
+    val appId = GraftSink.streamAppId(spark, appIdOverride)
     // the incoming frame is bound to the engine's incremental
     // execution — re-wrap its physical result as a batch frame the
     // lake's write action can plan (the DeltaSink hop)
     val batch = org.apache.spark.sql.graft.GraftStreamingShim
       .asBatchFrame(data)
+    // the declared CDC columns must be stream columns (both are empty
+    // outside Update mode: createSink refuses them there)
+    (opCol.map(_ -> "opColumn") ++ seqCols.map(_ -> "seqColumn"))
+      .foreach { case (c, o) => require(batch.columns.contains(c),
+        s"graft sink $o names '$c', which is not in the stream's " +
+          s"columns ${batch.columns.mkString("[", ", ", "]")}")
+      }
     // Update mode: each batch row upserts (or, with an op column,
     // deletes) its key. Complete mode: the batch is the WHOLE result
     // table — a stamped replace (every trigger a time-travelable
     // version of the aggregate). Append mode appends as usual.
     if (upsertKeys.nonEmpty) opCol match {
       case Some(oc) =>
-        Seq(oc -> "opColumn", seqCol.get -> "seqColumn").foreach {
-          case (c, o) => require(batch.columns.contains(c),
-            s"graft sink $o names '$c', which is not in the stream's " +
-              s"columns ${batch.columns.mkString("[", ", ", "]")}")
-        }
         Versioned.idempotentMergeCdc(spark, dir, batch, upsertKeys,
-          seqCol.get, oc, deleteOp, appId, batchId,
+          seqCols, oc, deleteOp, appId, batchId,
           retainTombstones = retainTombstones)
       case None =>
-        val pre = seqCol match {
-          case None => batch
-          case Some(sc) =>
-            // within-batch last-writer-wins by the declared ordering:
-            // one winner row per key crosses into the merge (the
-            // multi-row-per-key Update contract)
-            require(batch.columns.contains(sc),
-              s"graft sink seqColumn names '$sc', which is not in the " +
-                s"stream's columns ${batch.columns.mkString("[", ", ", "]")}")
-            val rest = batch.columns.toSeq.filterNot(c =>
-              upsertKeys.contains(c) || c == sc)
-            Versioned.compactByKey(batch, upsertKeys, sc +: rest)
-        }
+        // within-batch last-writer-wins by the declared ordering: one
+        // winner row per key crosses into the merge (the
+        // multi-row-per-key Update contract)
+        val pre =
+          if (seqCols.isEmpty) batch
+          else Versioned.compactByKey(batch, upsertKeys,
+            seqCols ++ batch.columns.toSeq.filterNot(c =>
+              upsertKeys.contains(c) || seqCols.contains(c)))
         // one-row-per-key sources skip the merge's grouped cardinality
         // probe (one exchange per TRIGGER on this path): the seqColumn
         // pre-compaction guarantees it by construction, and the plain
@@ -156,12 +143,12 @@ final class GraftSink(sqlContext: SQLContext,
         // (a non-aggregate plan keeps the probe, which IS the
         // duplicate-key error check for the multi-row shape below).
         val distinctByKey =
-          seqCol.isDefined || GraftSink.aggregatedOnKeys(data, upsertKeys)
+          seqCols.nonEmpty || GraftSink.aggregatedOnKeys(data, upsertKeys)
         try Versioned.idempotentMerge(spark, dir, pre, upsertKeys,
           appId, batchId, sourceDistinctByKey = distinctByKey)
         catch {
           case e: IllegalArgumentException
-              if seqCol.isEmpty && Option(e.getMessage)
+              if seqCols.isEmpty && Option(e.getMessage)
                 .exists(_.contains("duplicate keys")) =>
             // the flatMapGroupsWithState shape fails PREDICTABLY:
             // name the contract and the knob that opts into it
@@ -187,6 +174,28 @@ final class GraftSink(sqlContext: SQLContext,
 }
 
 private[graft] object GraftSink {
+
+  /** The exactly-once identity of the micro-batch running on this
+    * thread: `txnAppId` when given, else the STREAMING QUERY ID, which
+    * MicroBatchExecution publishes as a local property on the stream
+    * execution thread that calls a sink's `addBatch` (and a
+    * `foreachBatch` function), and persists in the checkpoint. A
+    * Spark-internal contract — so when it is absent (a foreign
+    * thread, a future engine refactor) this fails LOUDLY rather than
+    * minting a fresh identity that would silently forfeit replay
+    * protection. Every streaming write into a graft table stamps its
+    * commit `(streamAppId, batchId)`. */
+  def streamAppId(spark: SparkSession,
+      txnAppId: Option[String] = None): String =
+    txnAppId.orElse(Option(spark.sparkContext.getLocalProperty(
+      StreamExecution.QUERY_ID_KEY)))
+      .getOrElse(throw new IllegalStateException(
+        "graft sink could not resolve an idempotence key: no " +
+          "streaming query id on this thread and no txnAppId option"))
+
+  /** A comma-list option (`keyCols`, `seqColumn`) as column names. */
+  def colList(v: String): Seq[String] =
+    v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
   /** True when `data`'s OWN plan proves at most one row per `keys`
     * tuple: the root (through key-preserving Projects/aliases) is an

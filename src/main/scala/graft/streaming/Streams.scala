@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+
+import graft.lake.Versioned
 
 /** Structured Streaming surface — the Spark-native replacement for the
   * reference's daemon-thread polling loop (`Autom`, main.py:268-325).
@@ -22,12 +25,15 @@ object Streams {
   /** ST1/ST2/ST4: micro-batch ingest into the partitioned lake. Each
     * batch is deduplicated against the lake with the pruned max-time
     * probe (graft.lake.DataLake.appendIncremental) and appended under its
-    * partition dirs. `foreachBatch` gives exactly-once per-batch replay
-    * semantics via the checkpoint: a restarted query resumes after the
-    * last committed offset, so committed batches are not re-ingested and
-    * data arriving during downtime is picked up (StreamsSpec
-    * "restarts from checkpoint" drives a stop + restart end-to-end —
-    * the restart story the reference's daemon loop lacked).
+    * partition dirs. The checkpoint makes a restarted query resume
+    * after the last committed offset, so data arriving during downtime
+    * is picked up (StreamsSpec "restarts from checkpoint" drives a
+    * stop + restart end-to-end — the restart story the reference's
+    * daemon loop lacked). `foreachBatch` alone is at-least-once: a
+    * batch whose append landed but whose offset commit did not runs
+    * again, and the max-time probe is what suppresses that replay
+    * (the layout is the reference's plain Parquet, with no txn ledger
+    * to stamp).
     */
   def ingestToLake(stream: DataFrame, lakeDir: String, checkpointDir: String,
       intervalSec: Long = 900,
@@ -44,34 +50,10 @@ object Streams {
       }
       .start()
 
-  /** Streaming ingest into the VERSIONED lake with exactly-once
-    * commits: each micro-batch publishes through
-    * [[graft.lake.Versioned.idempotentCommit]], stamped
-    * `(appId, batchId)` in the manifest it creates. A crash anywhere
-    * in the batch resolves to exactly one append on replay: Spark
-    * re-runs the failed batch with the SAME batchId, so a
-    * staged-but-unpublished attempt is invisible (orphan grace sweeps
-    * it) and a published-but-unacknowledged one is recognized by its
-    * stamp and skipped. Every batch is also a queryable VERSION —
-    * time travel to any micro-batch boundary, and
-    * [[graft.lake.Versioned.changesBetween]] over the ingest history
-    * is exactly the stream replayed as a CDC feed.
-    */
-  def versionedIngest(stream: DataFrame, tableDir: String,
-      checkpointDir: String, appId: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.lake.Versioned.idempotentCommit(
-          batch.sparkSession, tableDir, batch, appId, batchId)
-        ()
-      }
-      .start()
-
-  /** Streaming SOURCE over the versioned lake — the read half of
-    * [[versionedIngest]]: offsets are committed version numbers, each
-    * micro-batch is the change feed of exactly the versions it covers
+  /** Streaming SOURCE over the versioned lake — the read half of the
+    * `format("graft")` sink ([[GraftSink]]): offsets are committed
+    * version numbers, each micro-batch is the change feed of exactly
+    * the versions it covers
     * ([[graft.lake.Versioned.changesBetween]] — O(delta) per batch),
     * exactly-once on restart from the checkpointed offset. See
     * [[GraftChangesSource]] for semantics; `startingVersion` is an
@@ -187,7 +169,47 @@ object Streams {
       }
   }
 
-  // ------------------------------------------- continuous-ingest dedup
+  // ------------------------------------- exactly-once writes into graft
+
+  // Every helper below writes graft tables, and every write is one
+  // commit stamped (streaming query id, batchId) — the txn ledger
+  // [[GraftSink]] keys on. `foreachBatch` and a V1 sink are both
+  // at-least-once: a batch whose write published but whose offset
+  // commit did not runs again after a restart, with the same batchId,
+  // and the ledger skips it. Helpers whose batch IS the write use the
+  // `format("graft")` sink; helpers that must read their target first
+  // keep `foreachBatch` and append through [[stampedAppend]].
+
+  /** `df` streamed into the graft table `dir` through the sink. */
+  private def toGraft(df: DataFrame, dir: String,
+      checkpointDir: String): DataStreamWriter[Row] =
+    df.writeStream.format("graft")
+      .option("path", dir)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+
+  /** A `foreachBatch` helper's stream: drains what is available
+    * (AvailableNow), then stops. */
+  private def eachBatch(src: DataFrame, checkpointDir: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    src.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(f)
+      .start()
+
+  /** Append `rows` to the graft table `dir` under the running
+    * stream's `(query id, batchId)` stamp — skipped when the ledger
+    * already holds the batch. Must run on the stream thread (inside
+    * `foreachBatch`), where the query id resolves. */
+  private def stampedAppend(dir: String, rows: DataFrame,
+      batchId: Long): Unit = {
+    val s = rows.sparkSession
+    Versioned.idempotentCommit(s, dir, rows, GraftSink.streamAppId(s),
+      batchId)
+    ()
+  }
 
   /** Continuous-ingest exact dedup — the streaming form of the
     * incremental admission gate ([[graft.ext.Dedup.incrementalNearDuplicates]]
@@ -198,10 +220,10 @@ object Streams {
     * join — not a window, so a viral doc re-posted millions of times in
     * one batch never funnels through one reducer), anti-joined against
     * the already-accepted corpus on fingerprint, and the survivors
-    * appended to the accepted table. `foreachBatch` + the checkpoint
-    * give exactly-once admission per batch: a restarted query resumes
-    * after the last committed batch, so accepted rows are never
-    * re-admitted (the restart story StreamsSpec drives for the lake).
+    * appended to the graft table `acceptedDir` (create it empty first,
+    * e.g. `Versioned.commit(df.limit(0))`, with `fingerprint` among its
+    * columns). The append is stamped (query id, batchId), so a batch
+    * replayed after a lost offset commit admits nothing twice.
     *
     * The seen-set gate runs through [[graft.ops.BloomJoin.antiJoin]]:
     * rows whose fingerprint fails the bloom (the overwhelming majority
@@ -214,38 +236,24 @@ object Streams {
     * each batch pays O(batch) total. The per-batch `count()` sizing
     * probe is parquet-metadata-only.
     */
-  def dedupIngest(src: DataFrame, acceptedTable: String,
+  def dedupIngest(src: DataFrame, acceptedDir: String,
       checkpointDir: String, idCol: String = "doc_id",
-      textCol: String = "text", bloomFpp: Double = 0.01): StreamingQuery = {
-    // foreachBatch runs in a CLONED session: its insert refreshes the
-    // clone's relation cache, but the HOST session (the one callers
-    // read the accepted table from) would keep serving the pre-batch
-    // file listing if it ever read the table before — refresh it too.
-    val host = src.sparkSession
-    src.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val fp = batch.withColumn("fingerprint",
-          graft.ext.Text.fingerprint(col(textCol)))
-        val keeper = fp.groupBy("fingerprint")
-          .agg(min(col(idCol)).as(idCol))
-        val inBatch = fp.join(keeper, Seq("fingerprint", idCol), "left_semi")
-        val accepted = s.table(acceptedTable)
-        val nAccepted = accepted.count()
-        val fresh =
-          if (nAccepted == 0L) inBatch
-          else graft.ops.BloomJoin.antiJoin(inBatch,
-            accepted.select("fingerprint"), "fingerprint", nAccepted, bloomFpp)
-        fresh.select(accepted.columns.map(col).toSeq: _*)
-          .write.mode("append").insertInto(acceptedTable)
-        host.catalog.refreshTable(acceptedTable)
-        ()
-      }
-      .start()
-  }
+      textCol: String = "text", bloomFpp: Double = 0.01): StreamingQuery =
+    eachBatch(src, checkpointDir) { (batch, batchId) =>
+      val fp = batch.withColumn("fingerprint",
+        graft.ext.Text.fingerprint(col(textCol)))
+      val keeper = fp.groupBy("fingerprint")
+        .agg(min(col(idCol)).as(idCol))
+      val inBatch = fp.join(keeper, Seq("fingerprint", idCol), "left_semi")
+      val accepted = Versioned.read(batch.sparkSession, acceptedDir)
+      val nAccepted = accepted.count()
+      val fresh =
+        if (nAccepted == 0L) inBatch
+        else graft.ops.BloomJoin.antiJoin(inBatch,
+          accepted.select("fingerprint"), "fingerprint", nAccepted, bloomFpp)
+      stampedAppend(acceptedDir,
+        fresh.select(accepted.columns.map(col).toSeq: _*), batchId)
+    }
 
   /** Continuous-ingest NEAR-dup admission — the LSH flavor of
     * [[dedupIngest]] (exact fingerprints catch reposts; this catches
@@ -264,39 +272,77 @@ object Streams {
     * precomputed and stored bucketed on (band, bucket) — see the
     * incrementalNearDuplicates scaladoc — and survivors append their
     * band rows in the same foreachBatch; here the bands recompute per
-    * batch, which is fine at fixture scale. Exactly-once admission
-    * across restarts comes from the checkpoint as in [[dedupIngest]].
+    * batch, which is fine at fixture scale. A replayed batch is
+    * skipped by the txn stamp as in [[dedupIngest]] — the gate itself
+    * could not catch it: a doc under `minTokens` tokens (or in a
+    * bucket over `maxBucket`) has no bands to match its own copy.
     */
-  def nearDedupIngest(src: DataFrame, acceptedTable: String,
+  def nearDedupIngest(src: DataFrame, acceptedDir: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.2, k: Int = 16,
-      bands: Int = 4, minTokens: Int = 3): StreamingQuery = {
-    val host = src.sparkSession
-    src.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val accepted = s.table(acceptedTable)
-        val matches = graft.ext.Dedup.incrementalNearDuplicates(
-          batch, accepted, idCol, textCol, threshold, k, bands, minTokens)
-        val fresh = batch.join(
-          matches.select(col("id_new").as(idCol)).distinct(),
-          Seq(idCol), "left_anti")
-        fresh.select(accepted.columns.map(col).toSeq: _*)
-          .write.mode("append").insertInto(acceptedTable)
-        host.catalog.refreshTable(acceptedTable)
-        ()
-      }
-      .start()
-  }
+      bands: Int = 4, minTokens: Int = 3): StreamingQuery =
+    eachBatch(src, checkpointDir) { (batch, batchId) =>
+      val accepted = Versioned.read(batch.sparkSession, acceptedDir)
+      val matches = graft.ext.Dedup.incrementalNearDuplicates(
+        batch, accepted, idCol, textCol, threshold, k, bands, minTokens)
+      val fresh = batch.join(
+        matches.select(col("id_new").as(idCol)).distinct(),
+        Seq(idCol), "left_anti")
+      stampedAppend(acceptedDir,
+        fresh.select(accepted.columns.map(col).toSeq: _*), batchId)
+    }
+
+  /** Continuous token-budget admission — the streaming form of
+    * [[graft.ext.Sampling.budgetPerKey]]'s cap: accept a row while its
+    * key's RUNNING token total (over everything the stream has SEEN,
+    * accepted or not, in (batch, id) order) stays ≤ `budget`. Because
+    * the running total counts seen rows — not accepted rows — the
+    * admission decision is a pure function of the stream prefix, so
+    * the batched loop provably equals the one-shot window formula the
+    * oracle computes (q126 hash-checks exactly that).
+    *
+    * Two graft tables: `acceptedDir` holds (idCol, keyCol, w,
+    * running_total) and `stateDir` holds one (keyCol, w, batch_id)
+    * weight contribution per (batch, key). Each batch appends to
+    * accepted, then to state, both under the same (query id, batchId)
+    * stamp, so a replay skips whichever append already published and
+    * state never holds a batch twice. Seen totals read strictly
+    * earlier batches only.
+    *
+    * Scale: the per-batch window is batch-sized (swap in
+    * `budgetPerKey`'s sliced decomposition if one batch can carry a
+    * hot key); state reads are delta-sized aggregates; production
+    * compacts `stateDir` periodically (sum per key) instead of
+    * re-scanning all batch rows.
+    */
+  def budgetIngest(src: DataFrame, acceptedDir: String,
+      stateDir: String, checkpointDir: String, budget: Long,
+      weight: Column, keyCol: String = "source",
+      idCol: String = "doc_id"): StreamingQuery =
+    eachBatch(src, checkpointDir) { (batch, batchId) =>
+      val seen = Versioned.read(batch.sparkSession, stateDir)
+        .filter(col("batch_id") < batchId)
+        .groupBy(col(keyCol)).agg(sum("w").as("__seen"))
+      val wdf = batch.withColumn("__w", weight.cast("long"))
+      val win = Window.partitionBy(keyCol).orderBy(idCol)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val run = wdf.join(broadcast(seen), Seq(keyCol), "left")
+        .withColumn("running_total",
+          coalesce(col("__seen"), lit(0L)) + sum("__w").over(win))
+      stampedAppend(acceptedDir, run.filter(col("running_total") <= budget)
+        .select(col(idCol), col(keyCol), col("__w").as("w"),
+          col("running_total")), batchId)
+      stampedAppend(stateDir, wdf.groupBy(col(keyCol))
+        .agg(sum("__w").as("w")).withColumn("batch_id", lit(batchId)),
+        batchId)
+    }
 
   /** Continuous-ingest ENRICHMENT — the stream-static join stage of an
     * ingest pipeline: each micro-batch left-joins a slowly-changing
-    * dimension (user/source/geo metadata) and appends the enriched rows
-    * to a managed table, exactly once across restarts (checkpointed
-    * offsets, as in [[dedupIngest]]).
+    * dimension (user/source/geo metadata) and the `format("graft")`
+    * sink appends the enriched rows to the graft table `enrichedDir`,
+    * one commit per batch stamped (query id, batchId), so a batch
+    * replayed after a lost offset commit lands once.
     *
     * The dim side is `broadcast()` — the production shape for a
     * metadata table orders of magnitude smaller than the stream: the
@@ -309,90 +355,11 @@ object Streams {
     * triggers should be passed as a catalog table (`s.table(...)`)
     * and refreshed, not as a path-based read.
     */
-  /** Continuous token-budget admission — the streaming form of
-    * [[graft.ext.Sampling.budgetPerKey]]'s cap: accept a row while its
-    * key's RUNNING token total (over everything the stream has SEEN,
-    * accepted or not, in (batch, id) order) stays ≤ `budget`. Because
-    * the running total counts seen rows — not accepted rows — the
-    * admission decision is a pure function of the stream prefix, so
-    * the batched loop provably equals the one-shot window formula the
-    * oracle computes (q126 hash-checks exactly that).
-    *
-    * State = per-(batch, key) weight contributions in `stateTable`,
-    * append-only. Idempotence under foreachBatch retry, both ways:
-    * reads aggregate `max()` per (batch, key) — a retried batch's
-    * duplicate contribution rows are exact duplicates, so max
-    * collapses them — and the accepted append re-gates on an anti
-    * join by id. Seen totals read strictly-earlier batches only, so a
-    * half-written current batch can never poison its own replay.
-    *
-    * Scale: the per-batch window is batch-sized (swap in
-    * `budgetPerKey`'s sliced decomposition if one batch can carry a
-    * hot key); state reads are delta-sized aggregates; production
-    * compacts `stateTable` periodically (sum per key) instead of
-    * re-scanning all batch rows.
-    */
-  def budgetIngest(src: DataFrame, acceptedTable: String,
-      stateTable: String, checkpointDir: String, budget: Long,
-      weight: org.apache.spark.sql.Column, keyCol: String = "source",
-      idCol: String = "doc_id"): StreamingQuery = {
-    val host = src.sparkSession
-    src.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.expressions.Window
-        val s = batch.sparkSession
-        val seen = s.table(stateTable)
-          .filter(col("batch_id") < batchId)
-          .groupBy(col("batch_id"), col(keyCol))
-          .agg(max("w").as("__bw"))
-          .groupBy(col(keyCol)).agg(sum("__bw").as("__seen"))
-        val wdf = batch.withColumn("__w", weight.cast("long"))
-        val win = Window.partitionBy(keyCol).orderBy(idCol)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val run = wdf.join(broadcast(seen), Seq(keyCol), "left")
-          .withColumn("running_total",
-            coalesce(col("__seen"), lit(0L)) + sum("__w").over(win))
-        val accepted = s.table(acceptedTable)
-        val admit = run.filter(col("running_total") <= budget)
-          .join(accepted.select(idCol), Seq(idCol), "left_anti")
-          .select(col(idCol), col(keyCol), col("__w").as("w"),
-            col("running_total"))
-        admit.select(accepted.columns.map(col).toSeq: _*)
-          .write.mode("append").insertInto(acceptedTable)
-        val contrib = wdf.groupBy(col(keyCol)).agg(sum("__w").as("w"))
-          .withColumn("batch_id", lit(batchId))
-        contrib.select(s.table(stateTable).columns.map(col).toSeq: _*)
-          .write.mode("append").insertInto(stateTable)
-        host.catalog.refreshTable(acceptedTable)
-        host.catalog.refreshTable(stateTable)
-        ()
-      }
+  def enrichIngest(src: DataFrame, dim: DataFrame, enrichedDir: String,
+      checkpointDir: String, srcKey: String, dimKey: String): StreamingQuery =
+    toGraft(src.join(broadcast(dim), src(srcKey) === dim(dimKey), "left")
+      .drop(dimKey), enrichedDir, checkpointDir)
       .start()
-  }
-
-  def enrichIngest(src: DataFrame, dim: DataFrame, enrichedTable: String,
-      checkpointDir: String, srcKey: String, dimKey: String): StreamingQuery = {
-    val host = src.sparkSession
-    src.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val enriched = batch.join(broadcast(dim),
-            batch(srcKey) === dim(dimKey), "left")
-          .drop(dimKey)
-        val target = s.table(enrichedTable)
-        enriched.select(target.columns.map(col).toSeq: _*)
-          .write.mode("append").insertInto(enrichedTable)
-        host.catalog.refreshTable(enrichedTable)
-        ()
-      }
-      .start()
-  }
 
   /** Continuous CDC apply — maintain a materialized latest-snapshot
     * table from a change stream (the streaming closure of
@@ -400,47 +367,32 @@ object Streams {
     * ChangeApply *compacts* a log, this keeps the compacted state
     * CONTINUOUSLY current as batches arrive).
     *
-    * Per micro-batch: `state' = compactLog(state ∪ batch)` — one
-    * max-struct aggregate, then a staged table rewrite
-    * ([[graft.warehouse.Warehouse.rewriteTable]]). Because the state
-    * RETAINS tombstones (see [[graft.ops.ChangeApply.compactLog]]),
+    * The stream runs through the `format("graft")` sink in Update mode
+    * with `keyCols`/`opColumn`/`seqColumn` — per batch ONE key-pruned
+    * merge ([[graft.lake.Versioned.idempotentMergeCdc]]) into the
+    * graft table `stateDir`, stamped (query id, batchId). The state
+    * RETAINS tombstones (see [[graft.ops.ChangeApply.compactLog]]), so
     * the merge is a max-semilattice: associative + commutative, so the
     * maintained table equals compacting the whole log at once no
     * matter how the feed was batched or (per-key) ordered — late
-    * updates older than an applied delete stay dead. Exactly-once
-    * across restarts from the checkpoint, as in [[dedupIngest]].
+    * updates older than an applied delete stay dead. A key's winner
+    * is the max of `(seqCols…, op, payload…)`.
     *
-    * Scale shape: the aggregate is map-side combinable (a hot key's
-    * churn collapses per map task); the state rewrite is the
-    * fixture-scale simplification — at 100 TB the state table is
-    * key-partitioned and only partitions holding batch keys rewrite
-    * ([[graft.warehouse.Warehouse.scd1UpsertPartitioned]]'s shape), or
-    * the state lives in a MERGE-capable format. The live view is
-    * `state.filter(op <> deleteOp)`.
+    * Scale shape: the batch pre-compacts per key map-side (a hot
+    * key's churn collapses per map task), and the merge rewrites only
+    * the files holding a batch key (stat/bloom-pruned), not the state.
+    * The live view is `state.filter(op <> "D")`.
     */
-  def cdcIngest(src: DataFrame, stateTable: String, checkpointDir: String,
+  def cdcIngest(src: DataFrame, stateDir: String, checkpointDir: String,
       keyCol: String, seqCols: Seq[String], opCol: String,
-      payloadCols: Seq[String]): StreamingQuery = {
-    val host = src.sparkSession
-    val cols = (keyCol +: seqCols) ++ (opCol +: payloadCols)
-    src.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val state = s.table(stateTable)
-        val next = graft.ops.ChangeApply.compactLog(
-          state.select(cols.map(col): _*)
-            .unionByName(batch.select(cols.map(col): _*)),
-          keyCol, seqCols, opCol, payloadCols)
-        graft.warehouse.Warehouse.rewriteTable(s, stateTable,
-          next.select(state.columns.map(col).toSeq: _*))
-        host.catalog.refreshTable(stateTable)
-        ()
-      }
+      payloadCols: Seq[String]): StreamingQuery =
+    toGraft(src.select(((keyCol +: seqCols) ++ (opCol +: payloadCols))
+      .map(col): _*), stateDir, checkpointDir)
+      .outputMode(OutputMode.Update)
+      .option("keyCols", keyCol)
+      .option("opColumn", opCol)
+      .option("seqColumn", seqCols.mkString(","))
       .start()
-  }
 
   /** Flush any open sessions (batch-mode variant: each key is seen once,
     * so the trailing open session is emitted too).

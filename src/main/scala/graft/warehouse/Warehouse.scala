@@ -197,16 +197,6 @@ object Warehouse {
     }
   }
 
-  /** Rewrite `table` to exactly `df`, safely even when `df` reads from
-    * `table` itself (the self-overwrite every merge/compact-style
-    * rewrite needs): `df` materializes into a unique staging table
-    * first, then overwrites the target from the stage.
-    */
-  def rewriteTable(spark: SparkSession, table: String, df: DataFrame): Unit =
-    withStagingTable(spark, table, df) { stg =>
-      spark.table(stg).write.mode(SaveMode.Overwrite).insertInto(table)
-    }
-
   /** Materialize `df` into a uniquely-named staging table, run `body`,
     * and drop the stage even on failure. A per-call unique suffix (not a
     * fixed `_rewrite_stg` name — round-3 review) means two concurrent

@@ -9,8 +9,8 @@ import graft.streaming.Streams
   * ([[graft.streaming.GraftChangesSource]]): offsets are committed
   * version numbers, each micro-batch plans the change feed of exactly
   * the versions it covers, and a restart resumes from the
-  * checkpointed offset exactly-once — the read half of
-  * [[Streams.versionedIngest]].
+  * checkpointed offset exactly-once — the read half of the
+  * `format("graft")` sink ([[graft.streaming.GraftSink]]).
   */
 class GraftChangesSourceSpec extends SparkSuite {
   import spark.implicits._

@@ -9,9 +9,8 @@ import graft.lake.Versioned
   * ([[graft.streaming.GraftSink]]): `df.writeStream.format("graft")`
   * / `.toTable("graft.db.t")` routes every micro-batch through
   * [[Versioned.idempotentCommit]] — the write half of the
-  * catalog-native streaming story, replacing the
-  * `Streams.versionedIngest` foreachBatch helper with the standard
-  * Structured Streaming wiring. Exactly-once is the (appId, batchId)
+  * catalog-native streaming story, in the standard Structured
+  * Streaming wiring. Exactly-once is the (appId, batchId)
   * manifest stamp: appId defaults to the STREAMING QUERY ID, which
   * the engine persists in the checkpoint and republishes on restart.
   */
@@ -462,7 +461,7 @@ class GraftSinkSpec extends SparkSuite {
     // a crash-replay of the last batch stamp-skips the CDC merge
     assert(Versioned.idempotentMergeCdc(spark, table,
       Seq((9L, 9L, "U", "x")).toDF("user_id", "seq", "op", "v"),
-      Seq("user_id"), "seq", "op", "D", id1, batchId = 2).isEmpty,
+      Seq("user_id"), Seq("seq"), "op", "D", id1, batchId = 2).isEmpty,
       "replayed CDC batch merged twice")
   }
 
@@ -524,6 +523,68 @@ class GraftSinkSpec extends SparkSuite {
     val e = intercept[IllegalArgumentException](sink.addBatch(5L, dup))
     assert(e.getMessage.contains("seqColumn") &&
       e.getMessage.contains("duplicate keys"), e.getMessage)
+  }
+
+  test("seqColumn takes a comma list, most significant first: CDC " +
+      "winners that tie on the first column are decided by the next") {
+    val table = tmpDir() + "/seq2"
+    val sink = new graft.streaming.GraftSink(spark.sqlContext,
+      Map("path" -> table, "txnAppId" -> "s2", "opColumn" -> "op",
+        "seqColumn" -> "ts, n"), upsertKeys = Seq("k"))
+    def batch(rows: (Long, Long, Long, String, String)*) =
+      rows.toDF("k", "ts", "n", "op", "v")
+    // batch 0: k1's two rows tie on ts, so n decides (2 wins)
+    sink.addBatch(0L, batch((1L, 5L, 1L, "U", "a"), (1L, 5L, 2L, "U", "b"),
+      (2L, 5L, 1L, "U", "c")))
+    // batch 1: k1 at (5, 1) loses to the applied (5, 2); k2's delete at
+    // (5, 3) beats the applied (5, 1) and stays as a tombstone
+    sink.addBatch(1L, batch((1L, 5L, 1L, "U", "stale"),
+      (2L, 5L, 3L, "D", "")))
+    assert(Versioned.read(spark, table).orderBy("k")
+      .select("k", "n", "op", "v").as[(Long, Long, String, String)]
+      .collect().toSeq == Seq((1L, 2L, "U", "b"), (2L, 3L, "D", "")))
+  }
+
+  test("chaos: a poison kills batch 1 mid-compute, then an orphaned " +
+      "published-but-unacked batch 1 is skipped on replay — exactly " +
+      "one lake version per micro-batch") {
+    implicit val sc = spark.sqlContext
+    val ckpt = tmpDir() + "/ckpt"
+    val table = tmpDir() + "/table"
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    def drain(v: org.apache.spark.sql.Column): Unit = {
+      val q = input.toDF().toDF("id", "s").withColumn("s2", v)
+        .writeStream.format("graft")
+        .option("path", table)
+        .option("checkpointLocation", ckpt)
+        .option("txnAppId", "chaos-ving")
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    input.addData((1L, "a"), (2L, "b"))
+    drain(col("s"))                                    // batch 0 → v0
+    assert(Versioned.latestVersion(spark, table).contains(0))
+    // CHAOS window 1: batch 1 dies INSIDE its expression — nothing
+    // stages, nothing publishes, the checkpoint never acks batch 1
+    input.addData((3L, "c"), (4L, "poison"))
+    val poisoned = when($"s" === "poison",
+      assert_true(lit(false)).cast("string")).otherwise($"s")
+    intercept[Exception] { drain(poisoned) }
+    assert(Versioned.latestVersion(spark, table).contains(0)) // no leak
+    // CHAOS window 2: simulate an incarnation that PUBLISHED batch 1's
+    // version but died before the checkpoint ack — commit batch 1's
+    // rows under the stream's own (appId, batchId) stamp
+    assert(Versioned.idempotentCommit(spark, table,
+      Seq((3L, "c", "c"), (4L, "poison", "poison"))
+        .toDF("id", "s", "s2"),
+      "chaos-ving", 1L).contains(1))
+    // restart healthy: the checkpoint replays batch 1 with the SAME
+    // batchId; the stamp recognizes it and the commit is SKIPPED
+    drain(col("s"))
+    assert(Versioned.latestVersion(spark, table).contains(1))
+    assert(Versioned.read(spark, table).select("id")
+      .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
   }
 
   test("aggregatedOnKeys (the Update-mode probe-skip proof) is " +

@@ -1,13 +1,17 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.lake.Versioned
 import graft.streaming.Streams
 
 /** Streaming surface ST1-ST5: micro-batch lake ingest with dedup,
-  * watermarked windows, custom sessionization state.
+  * watermarked windows, custom sessionization state — and the crash
+  * matrix every streaming writer must pass (`testOnly graft.StreamsSpec`).
   */
 class StreamsSpec extends SparkSuite {
   import spark.implicits._
@@ -71,17 +75,13 @@ class StreamsSpec extends SparkSuite {
 
   test("enrichIngest: broadcast dim join per batch; restart never re-appends") {
     implicit val sc = spark.sqlContext
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.enr")
     val dim = Seq((1L, "gold"), (2L, "silver")).toDF("id", "tier")
-    Seq.empty[(Long, Long, Double)].toDF("event_id", "uid", "v")
-      .join(dim, col("uid") === col("id"), "left").drop("id")
-      .write.saveAsTable("graft_test.enr")
+    val table = tmpDir() + "/enr"
     val ckpt = tmpDir() + "/ckpt"
     val input = MemoryStream[(Long, Long, Double)]
     def drain(): Unit = {
       val q = Streams.enrichIngest(input.toDF().toDF("event_id", "uid", "v"),
-        dim, "graft_test.enr", ckpt, "uid", "id")
+        dim, table, ckpt, "uid", "id")
       try q.processAllAvailable() finally q.stop()
     }
     input.addData((100L, 1L, 0.5), (101L, 3L, 0.7)) // 3 has no dim row
@@ -90,7 +90,7 @@ class StreamsSpec extends SparkSuite {
     // replay; only the new data lands
     input.addData((102L, 2L, 0.9))
     drain()
-    val got = spark.table("graft_test.enr").orderBy("event_id")
+    val got = Versioned.read(spark, table).orderBy("event_id")
       .as[(Long, Long, Double, String)].collect().toSeq
     assert(got == Seq((100L, 1L, 0.5, "gold"), (101L, 3L, 0.7, null),
       (102L, 2L, 0.9, "silver")))
@@ -98,15 +98,12 @@ class StreamsSpec extends SparkSuite {
 
   test("cdcIngest: tombstones survive restarts; late-older upsert stays dead") {
     implicit val sc = spark.sqlContext
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.cdc")
-    Seq.empty[(Long, Long, String, String)].toDF("k", "seq", "op", "s")
-      .write.saveAsTable("graft_test.cdc")
+    val table = tmpDir() + "/cdc"
     val ckpt = tmpDir() + "/ckpt"
     val input = MemoryStream[(Long, Long, String, String)]
     def drain(): Unit = {
       val q = Streams.cdcIngest(input.toDF().toDF("k", "seq", "op", "s"),
-        "graft_test.cdc", ckpt, "k", Seq("seq"), "op", Seq("s"))
+        table, ckpt, "k", Seq("seq"), "op", Seq("s"))
       try q.processAllAvailable() finally q.stop()
     }
     // batch 0: upsert 1, delete 2 (seq 5)
@@ -116,54 +113,52 @@ class StreamsSpec extends SparkSuite {
     // for 2 (seq 3 < the applied delete's 5) — must stay dead
     input.addData((1L, 2L, "U", "b"), (2L, 3L, "U", "zombie"))
     drain()
-    val state = spark.table("graft_test.cdc").orderBy("k")
+    val state = Versioned.read(spark, table).orderBy("k")
       .as[(Long, Long, String, String)].collect().toSeq
     assert(state == Seq((1L, 2L, "U", "b"), (2L, 5L, "D", "")))
-    val live = spark.table("graft_test.cdc").filter($"op" =!= "D")
+    val live = Versioned.read(spark, table).filter($"op" =!= "D")
       .select("k", "s").as[(Long, String)].collect().toSeq
     assert(live == Seq(1L -> "b"))
   }
 
   test("dedupIngest: within-batch min-id keeper + cross-batch fingerprint gate") {
     implicit val sc = spark.sqlContext
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.acc")
-    Seq.empty[(Long, String)].toDF("doc_id", "text")
-      .withColumn("fingerprint", graft.ext.Text.fingerprint($"text"))
-      .write.saveAsTable("graft_test.acc")
+    val table = tmpDir() + "/acc"
+    Versioned.commit(spark, table, Seq.empty[(Long, String)]
+      .toDF("doc_id", "text")
+      .withColumn("fingerprint", graft.ext.Text.fingerprint($"text")))
     val ckpt = tmpDir() + "/ckpt"
     val input = MemoryStream[(Long, String)]
     // AvailableNow drains what's queued then finishes; each incarnation
     // shares the checkpoint, so committed batches never re-admit
     def drain(): Unit = {
       val q = Streams.dedupIngest(input.toDF().toDF("doc_id", "text"),
-        "graft_test.acc", ckpt)
+        table, ckpt)
       try q.processAllAvailable() finally q.stop()
     }
     // batch 0: 12 is a normalized dup of 10 (case/punct/token order)
     input.addData((10L, "alpha beta"), (11L, "gamma delta"),
       (12L, "Beta ALPHA!"))
     drain()
-    assert(spark.table("graft_test.acc").count() == 2)
+    assert(Versioned.read(spark, table).count() == 2)
     // batch 1, new incarnation: 20 duplicates the ACCEPTED 10 -> dropped
     input.addData((20L, "alpha beta"), (21L, "epsilon zeta"))
     drain()
-    val got = spark.table("graft_test.acc").select("doc_id")
+    val got = Versioned.read(spark, table).select("doc_id")
       .as[Long].collect().sorted.toSeq
     assert(got == Seq(10L, 11L, 21L))
   }
 
   test("nearDedupIngest: verified near-dups rejected, novel docs admitted") {
     implicit val sc = spark.sqlContext
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.nacc")
-    Seq.empty[(Long, String)].toDF("doc_id", "text")
-      .write.saveAsTable("graft_test.nacc")
+    val table = tmpDir() + "/nacc"
+    Versioned.commit(spark, table,
+      Seq.empty[(Long, String)].toDF("doc_id", "text"))
     val ckpt = tmpDir() + "/nckpt"
     val input = MemoryStream[(Long, String)]
     def drain(): Unit = {
       val q = Streams.nearDedupIngest(input.toDF().toDF("doc_id", "text"),
-        "graft_test.nacc", ckpt, threshold = 0.2)
+        table, ckpt, threshold = 0.2)
       try q.processAllAvailable() finally q.stop()
     }
     // identical texts -> identical signatures -> deterministic LSH recall
@@ -171,34 +166,37 @@ class StreamsSpec extends SparkSuite {
       (10L, "alpha beta gamma delta epsilon zeta"),
       (11L, "one two three four five six seven"))
     drain()
-    assert(spark.table("graft_test.nacc").count() == 2)
+    assert(Versioned.read(spark, table).count() == 2)
     // 20 is a verbatim copy of accepted 10 -> rejected; 21 is novel
     input.addData(
       (20L, "alpha beta gamma delta epsilon zeta"),
       (21L, "uno dos tres cuatro cinco seis siete"))
     drain()
-    val got = spark.table("graft_test.nacc").select("doc_id")
+    val got = Versioned.read(spark, table).select("doc_id")
       .as[Long].collect().sorted.toSeq
     assert(got == Seq(10L, 11L, 21L))
+  }
+
+  /** Empty budget tables: accepted (doc_id, source, w, running_total)
+    * and state (source, w, batch_id). */
+  private def budgetTables(): (String, String) = {
+    val (acc, st) = (tmpDir() + "/budg", tmpDir() + "/budg_st")
+    Versioned.commit(spark, acc, Seq.empty[(Long, String, Long, Long)]
+      .toDF("doc_id", "source", "w", "running_total"))
+    Versioned.commit(spark, st, Seq.empty[(String, Long, Long)]
+      .toDF("source", "w", "batch_id"))
+    (acc, st)
   }
 
   test("budgetIngest: running total counts SEEN rows across batches " +
       "and restarts; admission equals the one-shot window formula") {
     implicit val sc = spark.sqlContext
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.budg")
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.budg_st")
-    Seq.empty[(Long, String, Long, Long)]
-      .toDF("doc_id", "source", "w", "running_total")
-      .write.saveAsTable("graft_test.budg")
-    Seq.empty[(String, Long, Long)].toDF("source", "w", "batch_id")
-      .write.saveAsTable("graft_test.budg_st")
+    val (acc, st) = budgetTables()
     val ckpt = tmpDir() + "/ckpt"
     val input = MemoryStream[(Long, String, Long)]
     def drain(): Unit = {
       val q = Streams.budgetIngest(
-        input.toDF().toDF("doc_id", "source", "n"),
-        "graft_test.budg", "graft_test.budg_st", ckpt,
+        input.toDF().toDF("doc_id", "source", "n"), acc, st, ckpt,
         budget = 10L, weight = col("n"), keyCol = "source",
         idCol = "doc_id")
       try q.processAllAvailable() finally q.stop()
@@ -211,28 +209,21 @@ class StreamsSpec extends SparkSuite {
     // b(1) is rejected too: b's seen total is already 13
     input.addData((4L, "a", 2L), (5L, "b", 1L))
     drain()
-    val got = spark.table("graft_test.budg").orderBy("doc_id").collect()
+    val got = Versioned.read(spark, acc).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSeq
     assert(got == Seq((1L, 4L), (2L, 9L)))
     // replaying the same data into a FRESH checkpoint but one batch:
     // identical admissions (prefix function, not batching artifact)
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.budg2")
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.budg2_st")
-    Seq.empty[(Long, String, Long, Long)]
-      .toDF("doc_id", "source", "w", "running_total")
-      .write.saveAsTable("graft_test.budg2")
-    Seq.empty[(String, Long, Long)].toDF("source", "w", "batch_id")
-      .write.saveAsTable("graft_test.budg2_st")
+    val (acc2, st2) = budgetTables()
     val input2 = MemoryStream[(Long, String, Long)]
     input2.addData((1L, "a", 4L), (2L, "a", 5L), (3L, "b", 12L),
       (4L, "a", 2L), (5L, "b", 1L))
     val q2 = Streams.budgetIngest(
-      input2.toDF().toDF("doc_id", "source", "n"),
-      "graft_test.budg2", "graft_test.budg2_st", tmpDir() + "/ckpt2",
-      budget = 10L, weight = col("n"), keyCol = "source",
-      idCol = "doc_id")
+      input2.toDF().toDF("doc_id", "source", "n"), acc2, st2,
+      tmpDir() + "/ckpt2", budget = 10L, weight = col("n"),
+      keyCol = "source", idCol = "doc_id")
     try q2.processAllAvailable() finally q2.stop()
-    val oneShot = spark.table("graft_test.budg2").orderBy("doc_id")
+    val oneShot = Versioned.read(spark, acc2).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq
     assert(oneShot == got)
   }
@@ -240,107 +231,56 @@ class StreamsSpec extends SparkSuite {
   test("chaos: dedupIngest killed MID-APPEND on batch 1 replays from " +
       "the checkpoint with no lost and no duplicated admissions") {
     implicit val sc = spark.sqlContext
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.chaos_acc")
-    Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val table = tmpDir() + "/acc"
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
       .withColumn("fingerprint", graft.ext.Text.fingerprint($"text"))
-      .write.saveAsTable("graft_test.chaos_acc")
+    Versioned.commit(spark, table, docs())
     val ckpt = tmpDir() + "/ckpt"
     val input = MemoryStream[(Long, String)]
-    def drain(): Unit = {
-      val q = Streams.dedupIngest(input.toDF().toDF("doc_id", "text"),
-        "graft_test.chaos_acc", ckpt)
+    def drain(text: org.apache.spark.sql.Column): String = {
+      val q = Streams.dedupIngest(input.toDF().toDF("doc_id", "t")
+        .select($"doc_id", text.as("text")), table, ckpt)
       try q.processAllAvailable() finally q.stop()
+      q.id.toString
     }
     input.addData((10L, "alpha beta"), (11L, "gamma delta"))
-    drain()
-    assert(spark.table("graft_test.chaos_acc").count() == 2)
-    // CHAOS: make the accepted table's append job fail mid-commit by
-    // planting a regular FILE where the output committer needs its
-    // _temporary directory — the dedup computation succeeds, the
-    // append dies, the checkpoint never records batch 1
-    val loc = new java.io.File(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
-        "chaos_acc", Some("graft_test"))).location.getPath)
-    val poison = new java.io.File(loc, "_temporary")
-    assert(poison.createNewFile(), "could not plant the append poison")
+    val queryId = drain($"t")
+    assert(Versioned.read(spark, table).count() == 2)
+    // CHAOS: doc 22's text expression throws — batch 1's dedup plan
+    // runs inside the append's staging job, so the append dies after
+    // the checkpoint logged batch 1's offsets and before any commit
     input.addData((20L, "alpha beta"),      // dup of accepted 10
       (21L, "epsilon zeta"), (22L, "theta iota"))
-    intercept[Exception] { drain() }
-    assert(poison.delete())
+    val poisoned = when($"doc_id" === 22L,
+      assert_true(lit(false)).cast("string")).otherwise($"t")
+    intercept[Exception] { drain(poisoned) }
     // the failed batch must not have leaked rows
-    assert(spark.table("graft_test.chaos_acc").count() == 2)
-    // ALSO cover the other crash window: an incarnation that committed
-    // its append but died before the checkpoint commit — pre-insert one
-    // batch-1 survivor as that incarnation's orphaned append
-    Seq((21L, "epsilon zeta")).toDF("doc_id", "text")
-      .withColumn("fingerprint", graft.ext.Text.fingerprint($"text"))
-      .write.mode("append").insertInto("graft_test.chaos_acc")
-    drain() // replay batch 1 from the checkpoint
-    val got = spark.table("graft_test.chaos_acc").select("doc_id")
+    assert(Versioned.read(spark, table).count() == 2)
+    // ALSO cover the other crash window: an incarnation that published
+    // its append but died before the checkpoint commit — plant batch
+    // 1's survivors as that incarnation's stamped append
+    val head = Versioned.idempotentCommit(spark, table,
+      docs((21L, "epsilon zeta"), (22L, "theta iota")), queryId, 1L)
+    assert(head.isDefined)
+    // replay batch 1 from the checkpoint: the stamp skips it
+    assert(drain($"t") == queryId)
+    assert(Versioned.latestVersion(spark, table) == head)
+    val got = Versioned.read(spark, table).select("doc_id")
       .as[Long].collect().sorted.toSeq
     // 20 dup-rejected; 21 admitted exactly ONCE despite the orphaned
     // append; 22 admitted (not lost) — the one-shot admission set
     assert(got == Seq(10L, 11L, 21L, 22L))
   }
 
-  test("chaos: versionedIngest poison kills batch 1 mid-compute, then " +
-      "an orphaned published-but-unacked batch 1 is skipped on replay — " +
-      "exactly one lake version per micro-batch") {
-    implicit val sc = spark.sqlContext
-    import graft.lake.Versioned
-    val ckpt = tmpDir() + "/ckpt"
-    val table = tmpDir() + "/table"
-    val input = MemoryStream[(Long, String)]
-    def drain(v: org.apache.spark.sql.Column): Unit = {
-      val q = Streams.versionedIngest(
-        input.toDF().toDF("id", "s").withColumn("s2", v),
-        table, ckpt, appId = "chaos-ving")
-      try q.processAllAvailable() finally q.stop()
-    }
-    input.addData((1L, "a"), (2L, "b"))
-    drain(col("s"))                                    // batch 0 → v0
-    assert(Versioned.latestVersion(spark, table).contains(0))
-    // CHAOS window 1: batch 1 dies INSIDE its expression — nothing
-    // stages, nothing publishes, the checkpoint never acks batch 1
-    input.addData((3L, "c"), (4L, "poison"))
-    val poisoned = when($"s" === "poison",
-      assert_true(lit(false)).cast("string")).otherwise($"s")
-    intercept[Exception] { drain(poisoned) }
-    assert(Versioned.latestVersion(spark, table).contains(0)) // no leak
-    // CHAOS window 2: simulate an incarnation that PUBLISHED batch 1's
-    // version but died before the checkpoint ack — commit batch 1's
-    // rows under the stream's own (appId, batchId) stamp
-    assert(Versioned.idempotentCommit(spark, table,
-      Seq((3L, "c", "c"), (4L, "poison", "poison"))
-        .toDF("id", "s", "s2"),
-      "chaos-ving", 1L).contains(1))
-    // restart healthy: the checkpoint replays batch 1 with the SAME
-    // batchId; the stamp recognizes it and the commit is SKIPPED
-    drain(col("s"))
-    assert(Versioned.latestVersion(spark, table).contains(1))
-    assert(Versioned.read(spark, table).select("id")
-      .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
-  }
-
   test("chaos: budgetIngest poison row kills batch 1 mid-compute; the " +
       "restart replays to the one-shot admission set, state unduplicated") {
     implicit val sc = spark.sqlContext
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    graft.warehouse.Warehouse.dropManagedTable(spark, "graft_test.chaos_budg")
-    graft.warehouse.Warehouse.dropManagedTable(spark,
-      "graft_test.chaos_budg_st")
-    Seq.empty[(Long, String, Long, Long)]
-      .toDF("doc_id", "source", "w", "running_total")
-      .write.saveAsTable("graft_test.chaos_budg")
-    Seq.empty[(String, Long, Long)].toDF("source", "w", "batch_id")
-      .write.saveAsTable("graft_test.chaos_budg_st")
+    val (acc, st) = budgetTables()
     val ckpt = tmpDir() + "/ckpt"
     val input = MemoryStream[(Long, String, Long)]
     def drain(w: org.apache.spark.sql.Column): Unit = {
       val q = Streams.budgetIngest(
-        input.toDF().toDF("doc_id", "source", "n"),
-        "graft_test.chaos_budg", "graft_test.chaos_budg_st", ckpt,
+        input.toDF().toDF("doc_id", "source", "n"), acc, st, ckpt,
         budget = 10L, weight = w, keyCol = "source", idCol = "doc_id")
       try q.processAllAvailable() finally q.stop()
     }
@@ -353,20 +293,138 @@ class StreamsSpec extends SparkSuite {
       assert_true(lit(false)).cast("long")).otherwise($"n")
     intercept[Exception] { drain(poisoned) }
     // nothing from the failed batch leaked into data OR state
-    assert(spark.table("graft_test.chaos_budg").count() == 2)
-    assert(spark.table("graft_test.chaos_budg_st")
+    assert(Versioned.read(spark, acc).count() == 2)
+    assert(Versioned.read(spark, st)
       .filter($"batch_id" >= 1).count() == 0)
     drain(col("n")) // restart with the healthy weight: batch 1 replays
-    val got = spark.table("graft_test.chaos_budg").orderBy("doc_id")
+    val got = Versioned.read(spark, acc).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq
     // one-shot prefix semantics: a: 4,9,10 all fit; b: 12,13 both
     // rejected; c: 3 fits — and nothing double-admitted on replay
     assert(got == Seq((1L, 4L), (2L, 9L), (4L, 10L), (6L, 3L)))
     // state carries exactly one contribution row per (batch, key)
-    val st = spark.table("graft_test.chaos_budg_st")
+    val stRows = Versioned.read(spark, st)
       .groupBy("batch_id", "source").count()
       .collect().map(_.getLong(2)).toSeq
-    assert(st.nonEmpty && st.forall(_ == 1L))
+    assert(stRows.nonEmpty && stRows.forall(_ == 1L))
+  }
+
+  // --------------------------------------------- crash-injection matrix
+
+  /** One streaming writer under the crash matrix: `drain` runs it to
+    * completion on a checkpoint over the same queued input, `rows`
+    * reads its target(s), `heads` are the graft targets' head
+    * versions (empty for the plain-Parquet lake). */
+  private case class CrashRow(drain: String => Unit,
+      rows: () => Seq[String], heads: () => Seq[Option[Int]])
+
+  /** Rows of a graft table, order-insensitive. */
+  private def rowsOf(dir: String): Seq[String] =
+    Versioned.read(spark, dir).collect().map(_.toString).sorted.toSeq
+
+  private def graftRow(table: String)(start: String => StreamingQuery) =
+    CrashRow(ck => { val q = start(ck); try q.processAllAvailable()
+      finally q.stop() }, () => rowsOf(table),
+      () => Seq(Versioned.latestVersion(spark, table)))
+
+  private val crashMatrix: Seq[(String, () => CrashRow)] = Seq(
+    "dedupIngest" -> { () =>
+      implicit val sc = spark.sqlContext
+      val table = tmpDir() + "/acc"
+      Versioned.commit(spark, table, Seq.empty[(Long, String)]
+        .toDF("doc_id", "text")
+        .withColumn("fingerprint", graft.ext.Text.fingerprint($"text")))
+      val in = MemoryStream[(Long, String)]
+      in.addData((10L, "alpha beta"), (11L, "gamma delta"),
+        (12L, "Beta ALPHA!"))
+      graftRow(table)(ck =>
+        Streams.dedupIngest(in.toDF().toDF("doc_id", "text"), table, ck))
+    },
+    // 11 is under minTokens: it has no MinHash bands, so only the
+    // stamp can recognize its replayed admission
+    "nearDedupIngest" -> { () =>
+      implicit val sc = spark.sqlContext
+      val table = tmpDir() + "/nacc"
+      Versioned.commit(spark, table,
+        Seq.empty[(Long, String)].toDF("doc_id", "text"))
+      val in = MemoryStream[(Long, String)]
+      in.addData((10L, "alpha beta gamma delta epsilon zeta"),
+        (11L, "short doc"))
+      graftRow(table)(ck => Streams.nearDedupIngest(
+        in.toDF().toDF("doc_id", "text"), table, ck))
+    },
+    "budgetIngest" -> { () =>
+      implicit val sc = spark.sqlContext
+      val (acc, st) = budgetTables()
+      val in = MemoryStream[(Long, String, Long)]
+      in.addData((1L, "a", 4L), (2L, "a", 5L), (3L, "b", 12L))
+      graftRow(acc)(ck => Streams.budgetIngest(
+        in.toDF().toDF("doc_id", "source", "n"), acc, st, ck,
+        budget = 10L, weight = col("n")))
+        .copy(rows = () => rowsOf(acc) ++ rowsOf(st),
+          heads = () => Seq(acc, st).map(Versioned.latestVersion(spark, _)))
+    },
+    "enrichIngest" -> { () =>
+      implicit val sc = spark.sqlContext
+      val table = tmpDir() + "/enr"
+      val dim = Seq((1L, "gold"), (2L, "silver")).toDF("id", "tier")
+      val in = MemoryStream[(Long, Long, Double)]
+      in.addData((100L, 1L, 0.5), (101L, 3L, 0.7))
+      graftRow(table)(ck => Streams.enrichIngest(
+        in.toDF().toDF("event_id", "uid", "v"), dim, table, ck, "uid", "id"))
+    },
+    "cdcIngest" -> { () =>
+      implicit val sc = spark.sqlContext
+      val table = tmpDir() + "/cdc"
+      val in = MemoryStream[(Long, Long, String, String)]
+      in.addData((1L, 1L, "U", "a"), (2L, 5L, "D", ""), (1L, 0L, "U", "old"))
+      graftRow(table)(ck => Streams.cdcIngest(
+        in.toDF().toDF("k", "seq", "op", "s"), table, ck, "k", Seq("seq"),
+        "op", Seq("s")))
+    },
+    "format(graft) Append" -> { () =>
+      implicit val sc = spark.sqlContext
+      val table = tmpDir() + "/t"
+      val in = MemoryStream[(Long, String)]
+      in.addData((1L, "a"), (2L, "b"))
+      graftRow(table)(ck => in.toDF().toDF("id", "s").writeStream
+        .format("graft").option("path", table)
+        .option("checkpointLocation", ck).start())
+    },
+    "ingestToLake" -> { () =>
+      implicit val sc = spark.sqlContext
+      val lake = tmpDir() + "/lake"
+      val in = MemoryStream[(String, Double)]
+      in.addData(("2023-11-30 14:00:00", 24.3), ("2023-11-30 14:15:00", 24.5))
+      CrashRow(ck => {
+          val q = Streams.ingestToLake(in.toDF().toDF("time_s", "temp")
+            .select(to_timestamp($"time_s").as("time"), $"temp",
+              date_format(to_timestamp($"time_s"), "MM-dd-yy")
+                .as("fecha_partic")), lake, ck, intervalSec = 1)
+          try q.processAllAvailable() finally q.stop()
+        },
+        () => spark.read.parquet(lake).collect().map(_.toString).sorted.toSeq,
+        () => Nil)
+    })
+
+  // the crash window Spark leaves open: batch 0's write published, its
+  // offset commit (`commits/0`) did not — the restart re-runs batch 0
+  // with the same batchId, and the table must end as one clean run
+  crashMatrix.foreach { case (name, mk) =>
+    test(s"crash matrix: $name lands batch 0 once when its offset " +
+        "commit is lost") {
+      val r = mk()
+      val ckpt = tmpDir() + "/ckpt"
+      r.drain(ckpt)
+      val (clean, heads) = (r.rows(), r.heads())
+      Seq("0", ".0.crc").foreach(f =>
+        Files.deleteIfExists(Paths.get(ckpt, "commits", f)))
+      r.drain(ckpt)
+      assert(Files.exists(Paths.get(ckpt, "commits", "0")),
+        "the restart did not re-run batch 0")
+      assert(r.rows() == clean)
+      assert(r.heads() == heads, "a replay must not commit a version")
+    }
   }
 
   test("windowedCounts: watermarked tumbling windows drop late rows (ST5)") {

@@ -20,6 +20,23 @@ import graft.lake.{HttpConditionalPut, Versioned}
   */
 class VersionedCasStoreSpec extends SparkSuite {
 
+  /** The store-side write behind a WON claim: visible in full or not
+    * at all, as an object store never exposes a half-written object.
+    * A plain `Files.write` creates the file before its bytes land, so
+    * a racing reader could parse an empty manifest; the bytes go to a
+    * sibling temp (no `v*.txt` name, so never read as a version) and
+    * a hard link publishes them, refusing an existing target the way
+    * `CREATE_NEW` did. */
+  private def storeWrite(path: String, bytes: Array[Byte]): Unit = {
+    val target = java.nio.file.Paths.get(path)
+    val tmp = java.nio.file.Files.createTempFile(target.getParent,
+      ".store-", ".tmp")
+    try {
+      java.nio.file.Files.write(tmp, bytes)
+      java.nio.file.Files.createLink(target, tmp)
+    } finally java.nio.file.Files.delete(tmp)
+  }
+
   /** Conditional-put double: map claim = the store's atomic
     * create-if-absent; write-through on a won claim only. */
   private final class MemoryConditionalPut
@@ -31,9 +48,7 @@ class VersionedCasStoreSpec extends SparkSuite {
         bytes: Array[Byte]): Boolean = {
       puts.incrementAndGet()
       if (claims.putIfAbsent(key, true) == null) {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(new Path(key).toUri.getPath), bytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
+        storeWrite(new Path(key).toUri.getPath, bytes)
         true
       } else { lost.incrementAndGet(); false }
     }
@@ -138,8 +153,7 @@ class VersionedCasStoreSpec extends SparkSuite {
         sawHeader.incrementAndGet()
       val won = claims.putIfAbsent(key, true) == null
       if (won)
-        java.nio.file.Files.write(java.nio.file.Paths.get(key), bytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
+        storeWrite(key, bytes)
       exchange.sendResponseHeaders(if (won) 200 else 412, -1)
       exchange.close()
     })
@@ -274,8 +288,7 @@ class VersionedCasStoreSpec extends SparkSuite {
         badAuth.incrementAndGet()
       val won = claims.putIfAbsent(key, true) == null
       if (won)
-        java.nio.file.Files.write(java.nio.file.Paths.get(key), bytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
+        storeWrite(key, bytes)
       exchange.sendResponseHeaders(if (won) 200 else 412, -1)
       exchange.close()
     })
@@ -330,8 +343,7 @@ class VersionedCasStoreSpec extends SparkSuite {
       val name = q("name")
       val won = claims.putIfAbsent(name, true) == null
       if (won)
-        java.nio.file.Files.write(java.nio.file.Paths.get(name), bytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
+        storeWrite(name, bytes)
       exchange.sendResponseHeaders(if (won) 200 else 412, -1)
       exchange.close()
     })
@@ -414,8 +426,7 @@ class VersionedCasStoreSpec extends SparkSuite {
       if (auth.isEmpty || auth != rederived) badAuth.incrementAndGet()
       val won = claims.putIfAbsent(key, true) == null
       if (won)
-        java.nio.file.Files.write(java.nio.file.Paths.get(key), bytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
+        storeWrite(key, bytes)
       exchange.sendResponseHeaders(if (won) 200 else 412, -1)
       exchange.close()
     })
