@@ -10,6 +10,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types
 import org.apache.spark.sql.types.{BooleanType, DataType, StructField, StructType}
 
+import ManifestCodec.{Manifest, RawNode, applyDelta}
+
 /** Versioned lake table — manifest-based snapshot isolation and time
   * travel over plain parquet files (the core mechanism of a table
   * format, sized to this engine's single-writer lake).
@@ -96,6 +98,10 @@ import org.apache.spark.sql.types.{BooleanType, DataType, StructField, StructTyp
   * trailer. A table written before those markers existed is refused
   * by name at parse time (see `docs/FORMAT.md`), never read through a
   * fallback.
+  *
+  * The manifest text itself — the state model, the header vocabulary,
+  * the gates, parse and render — is [[ManifestCodec]]'s; this object
+  * does the I/O and decides what each commit publishes.
   */
 object Versioned {
 
@@ -289,285 +295,6 @@ object Versioned {
     }
   }
 
-  /** A parsed manifest: the version's recorded table schema and `#ts`
-    * commit instant, the optional (appId, batchId) transaction stamp
-    * of the commit that created it (streaming exactly-once), and its
-    * data-file lines. An absent `#statcols` / `#bloomcfg` header means
-    * the table declares none. */
-  private final case class Manifest(schema: StructType,
-      txn: Option[(String, Long)], checks: Seq[(String, String)],
-      lines: Seq[String], dvs: Seq[(String, String)] = Nil,
-      blooms: Seq[(String, String, String)] = Nil,
-      op: Option[String] = None,
-      bloomCfg: Seq[(String, Long, Double)] = Nil,
-      statColsPolicy: Seq[String] = Nil,
-      ts: Long,
-      commitUuid: Option[String] = None,
-      chainDepth: Int = 0,
-      colMap: Seq[(String, String)] = Nil,
-      ckptEvery: Option[Int] = None,
-      colDrops: Seq[String] = Nil,
-      colMapMode: Option[String] = None,
-      txnHw: Seq[(String, Long, Option[Long])] = Nil,
-      clusterCols: Seq[String] = Nil,
-      txnRetention: Option[Long] = None,
-      minWriter: Option[Int] = None,
-      writerFeatures: Seq[String] = Nil,
-      schemaEnforce: Boolean = false,
-      maintain: Seq[(String, String)] = Nil,
-      // sidecar byte sizes keyed by sidecar rel path (the `~b`
-      // annotation on `#dv`/`#bloom` lines — optimization round 19):
-      // what lets DV/bloom sidecar reads plan through the
-      // listing-free [[manifestScan]] with ZERO per-file RPCs, the
-      // same way data lines' `~b` already feeds it. Entries missing
-      // (pre-size manifests) fall back to one driver getFileStatus
-      // each — never a listing job.
-      dvSizes: Map[String, Long] = Map.empty,
-      bloomSizes: Map[String, Long] = Map.empty)
-
-  /** One manifest FILE as written, before delta reconstruction: a
-    * snapshot file (`base = None`) holds the version's full state; a
-    * DELTA file (`base = Some((parentVersion, depth))`) holds its full
-    * HEADERS (schema, policy, checks, ts, op, txn — always republished,
-    * they are O(policy) not O(table)) plus only the lines/DV pairs/
-    * bloom pointers it ADDS and `#rmfile`/`#rmdv`/`#rmbloom` records
-    * for what it drops relative to its parent. [[readManifest]] folds
-    * the chain back into the full state.
-    */
-  private final case class RawNode(base: Option[(Int, Int)],
-      rmFiles: Set[String], rmDvs: Set[(String, String)],
-      rmBlooms: Set[(String, String, String)], m: Manifest)
-
-  // header lines start with '#' so file-line consumers skip them by
-  // prefix; the schema rides as Spark's own StructType JSON (control
-  // characters are JSON-escaped, so the header is always one line)
-  private val SchemaHeader = "#schema\t"
-  private val TxnHeader = "#txn\t"
-  private val CheckHeader = "#check\t"
-  // deletion vector: `#dv\t<baseRel>\t<dvRel>` marks rows of data file
-  // <baseRel> as deleted at the (file, pos) pairs recorded in parquet
-  // sidecar <dvRel> (merge-on-read row-level DELETE — the base file is
-  // NOT rewritten; readers anti-join the positions). Rel paths never
-  // contain tabs (uuid dir + parquet part name), so no encoding.
-  private val DvHeader = "#dv\t"
-  // bloom index: `#bloom\t<baseRel>\t<col>\t<sidecarRel>` points data
-  // file <baseRel>'s per-file Bloom filter over column <col> at a row
-  // of parquet sidecar <sidecarRel> (schema [[BloomSchema]]) — the
-  // equality-pruning half of the file-skipping index (min/max prunes
-  // ranges; blooms prune point lookups on high-cardinality/string
-  // keys). Sidecars live beside data files and are referenced files
-  // for [[expire]]/[[restore]], exactly like DV sidecars.
-  private val BloomHeader = "#bloom\t"
-  // bloom index CONFIG: `#bloomcfg\t<col>\t<expectedItems>\t<fpp>` —
-  // the sizing the index was declared with (table policy, carried
-  // like CHECK constraints). Rewrites re-measure filters at THIS
-  // sizing; without it a compaction of a 5M-row-per-file table would
-  // rebuild 100k-item filters that saturate to fpp≈1 and silently
-  // stop pruning.
-  private val BloomCfgHeader = "#bloomcfg\t"
-  // stats POLICY: `#statcols\t<c1>\t<c2>…` (names uri-encoded) — the
-  // columns the TABLE tracks per-file min/max (+null/row-count) stats
-  // for. Carried like CHECK constraints and the bloom config: every
-  // commit — append, replace, DML rewrite, SQL INSERT — measures its
-  // staged files under the union of this policy and its caller's
-  // declaration, so one untracked writer can never silently kill
-  // metadata-only COUNT(*) or degrade the stats pruner toward
-  // O(table).
-  private val StatColsHeader = "#statcols\t"
-  // commit instant: `#ts\t<epochMillis>` — recorded at publish time as
-  // max(wall clock, parent instant + 1), so TIMESTAMP AS OF resolution
-  // is monotonic with version numbers even under cross-process writers
-  // with skewed clocks (manifest file mtimes are NOT so guaranteed:
-  // hard-link publish preserves the tmp's write-time mtime).
-  private val TsHeader = "#ts\t"
-  // operation header: `#op\t<name>` — which commit primitive created
-  // this version (append / replace / stream-append / delete / update /
-  // merge / delete-mor / update-mor / compact / restore / add-check /
-  // drop-check). Pure observability ([[history]] — the audit log every
-  // production format exposes as DESCRIBE HISTORY); absent on
-  // pre-tracking manifests.
-  private val OpHeader = "#op\t"
-  // commit identity: `#commituuid\t<uuid>` — a writer-chosen UUID
-  // stamped on every commit. Its one job is resolving COMMIT
-  // AMBIGUITY on stores whose conditional put can fail
-  // indeterminately (a timeout/5xx AFTER the store durably accepted
-  // the write): a writer whose CAS apparently lost after a transport
-  // error reads the winning manifest back and CLAIMS the version if
-  // self-authored, instead of re-appending the same rows at v+1.
-  private val CommitUuidHeader = "#commituuid\t"
-  // delta-manifest header: `#base\t<parentVersion>\t<depth>` — this
-  // FILE is a delta over its parent's reconstructed state, `depth`
-  // links from the nearest full snapshot (snapshot = no #base =
-  // depth 0). Bounds both write amplification (a commit writes
-  // O(delta) bytes, not O(table files)) and read cost (reconstruction
-  // reads <= checkpoint-interval small files). A full snapshot is
-  // written every [[manifestCheckpointEvery]] commits and whenever
-  // the delta would not be smaller than the snapshot (replace,
-  // restore, compaction).
-  private val BaseHeader = "#base\t"
-  // delta removal records, each relative to the parent state:
-  // `#rmfile\t<rel>` drops the parent data line for <rel> (a rewrite
-  // of the same rel is rmfile + a fresh add line); `#rmdv` / `#rmbloom`
-  // drop one exact DV pair / bloom pointer.
-  private val RmFileHeader = "#rmfile\t"
-  private val RmDvHeader = "#rmdv\t"
-  private val RmBloomHeader = "#rmbloom\t"
-  // aggregated TRANSACTION HIGH-WATER map: `#txnhw\t<enc(appId)>\t<b>`
-  // — one line per replayable writer that has ever stamped a commit,
-  // carrying its highest batchId, republished in full by EVERY commit
-  // (Delta's SetTransaction state, kept live in checkpoints for the
-  // same reason). `#txn` is the commit's OWN stamp (per-version audit
-  // trail); THIS map is what makes the idempotence guard O(1) (one
-  // header read of the head, no history scan) and — the correctness
-  // half — EXPIRE-PROOF: a stalled writer whose last stamped version
-  // was retained out from under it (other writers kept committing,
-  // retention swept its manifest) still finds its high-water in the
-  // head and skips the replay instead of double-appending. Size is
-  // O(distinct writer identities over the table's life) unless the
-  // `#txnretention` horizon below bounds it. Entries are
-  // `enc(appId)\tbatchId[\tlastStampMs]` — the optional third field
-  // feeds the retention sweep.
-  private val TxnHwHeader = "#txnhw\t"
-  // PROTOCOL / FEATURE GATE (Delta's minReaderVersion + reader
-  // features, on this substrate). Unknown header ANNOTATIONS parse
-  // forward-compatibly by design — right for additive metadata, WRONG
-  // for semantics-bearing features: an older reader binary (or a
-  // third-party tool) that skipped a `#dv` pointer would RESURRECT
-  // deleted rows; one that skipped `#colmap`/`#coldrop` would misbind
-  // columns. So any version whose state USES such a feature carries
-  // `#minreader\t<n>` plus one `#feature\t<name>` line per required
-  // reader feature, and every parse refuses loudly — by feature name —
-  // when it sees a name it does not implement or a reader version
-  // above its own. The gate is PER VERSION and derived from state
-  // (not sticky like Delta's protocol action): a version that uses no
-  // gated feature carries no gate lines, so old tables are untouched
-  // and time travel to a pre-feature version needs no waiver.
-  private val MinReaderHeader = "#minreader\t"
-  private val FeatureHeader = "#feature\t"
-  /** This engine's reader version: 1 = the base manifest format,
-    * 2 = feature-gate-aware (understands `#minreader`/`#feature`). */
-  private[graft] val CurrentReaderVersion = 2
-  /** Reader features this engine implements. A gated manifest naming
-    * anything else refuses at parse time. */
-  private[graft] val SupportedReaderFeatures: Set[String] =
-    Set("deletion-vectors", "column-mapping")
-
-  /** The reader features version-state `(dvs, colMap, colDrops,
-    * colMapMode)` actually requires — the derivation both manifest
-    * renderers share. Deletion vectors: skipping a `#dv` resurrects
-    * rows. Column mapping (incl. drops and id-mode): skipping the
-    * indirection misbinds physical columns. */
-  private def requiredFeatures(dvs: Seq[(String, String)],
-      colMap: Seq[(String, String)], colDrops: Seq[String],
-      colMapMode: Option[String]): Seq[String] =
-    (if (dvs.nonEmpty) Seq("deletion-vectors") else Nil) ++
-      (if (colMap.exists(e => e._1 != e._2) || colDrops.nonEmpty ||
-        colMapMode.isDefined) Seq("column-mapping") else Nil)
-
-  // WRITER half of the protocol gate (Delta's minWriterVersion +
-  // writer features). A reader feature gates features a READ would
-  // get wrong; a WRITER feature gates contracts a commit must honor
-  // even though reading is safe — the canonical case is CHECK
-  // constraints: any binary can read a checked table correctly, but
-  // a writer that does not VALIDATE its staged rows against the
-  // declared predicates would silently break the table's data
-  // contract. So a version whose state carries write-side contracts
-  // names them, and every COMMIT refuses unknown names loudly while
-  // reads stay open ([[casPublish]] checks the parent's writer gate —
-  // the one choke point every commit path already goes through).
-  // Like the reader gate, derivation is PER VERSION from state: drop
-  // the last CHECK and the writer gate lifts.
-  private val MinWriterHeader = "#minwriter\t"
-  private val WriterFeatureHeader = "#writerfeature\t"
-  /** This engine's writer version: 1 = plain appends, 2 =
-    * writer-feature-aware. */
-  private[graft] val CurrentWriterVersion = 2
-  /** Writer features this engine implements. Reader features are
-    * implicitly writer features too (a commit reads the parent, so
-    * the reader gate already fences them); this set adds the
-    * write-side-only contracts. */
-  private[graft] val SupportedWriterFeatures: Set[String] =
-    Set("check-constraints", "cluster-by", "txn-retention",
-      "schema-enforce")
-
-  /** The writer features version-state requires — contracts a commit
-    * must honor although reading is safe without them. CHECK
-    * constraints: staged rows must validate. cluster-by / the txn
-    * retention horizon are SOFT write contracts (an ignorant writer
-    * degrades layout / header size, never correctness) but are named
-    * so a third-party writer knows what it is opting out of. */
-  private def requiredWriterFeatures(checks: Seq[(String, String)],
-      clusterCols: Seq[String], txnRetention: Option[Long],
-      schemaEnforce: Boolean): Seq[String] =
-    (if (checks.nonEmpty) Seq("check-constraints") else Nil) ++
-      (if (clusterCols.nonEmpty) Seq("cluster-by") else Nil) ++
-      (if (txnRetention.isDefined) Seq("txn-retention") else Nil) ++
-      (if (schemaEnforce) Seq("schema-enforce") else Nil)
-
-  /** Render the gate block: nothing when no feature is in play (old
-    * tables stay byte-identical), else the version floors plus the
-    * sorted feature names. */
-  private def gateLines(features: Seq[String],
-      writerFeatures: Seq[String] = Nil,
-      minWriterFloor: Option[Int] = None): Seq[String] =
-    (if (features.isEmpty) Nil
-     else s"$MinReaderHeader$CurrentReaderVersion" +:
-       features.distinct.sorted.map(f => s"$FeatureHeader$f")) ++
-      (if (writerFeatures.isEmpty && minWriterFloor.isEmpty) Nil
-       else s"$MinWriterHeader${math.max(CurrentWriterVersion,
-         minWriterFloor.getOrElse(0))}" +:
-         writerFeatures.distinct.sorted
-           .map(f => s"$WriterFeatureHeader$f"))
-
-  // SCHEMA ENFORCEMENT: `#schemaenforce\t1` — the table refuses
-  // IMPLICIT schema evolution (a writer frame carrying columns the
-  // schema does not declare), Delta's schema-enforcement default as
-  // an opt-in policy on this substrate whose default is auto-evolve.
-  // At fleet scale the hazard is a typo'd or drifted upstream field
-  // silently adding a junk column that every later reader carries;
-  // under enforcement only the DECLARED route (ALTER TABLE … ADD
-  // COLUMNS / [[addColumns]]) evolves the schema. Missing columns
-  // still null-fill (old writers keep working); lossless type
-  // widening stays admitted (it loses nothing and blocks no reader).
-  // A REPLACE claims schema authority and is exempt (the
-  // truncate-and-reload shape). Carried like the cadence; named as
-  // the `schema-enforce` WRITER feature so a foreign writer knows
-  // the contract.
-  private val SchemaEnforceHeader = "#schemaenforce\t"
-
-  // LEDGER RETENTION: `#txnretention\t<ms>` — drop `#txnhw` entries
-  // whose LAST stamp is older than this horizon (Delta's
-  // setTransactionRetentionDuration). Without it the ledger grows
-  // O(distinct writer identities over the table's life) — thousands
-  // of short-lived streaming query ids (each restart-from-scratch
-  // checkpoint mints one) would bloat every header. The DOCUMENTED
-  // contract of expiry: a writer silent past the horizon that then
-  // replays an old batch re-appends — size the horizon beyond any
-  // plausible writer stall, exactly as Delta does. To support the
-  // horizon, 3-field `#txnhw` entries carry the writer's last stamp
-  // instant; 2-field (pre-retention) entries age from the first
-  // commit that republishes them under the new release —
-  // conservative: kept a full horizon from then, never dropped early.
-  private val TxnRetentionHeader = "#txnretention\t"
-
-  // MAINTENANCE policy: `#maintain\t<key>\t<value>` (both uri-encoded),
-  // one line per declared threshold — the TBLPROPERTIES
-  // `graft.maintain.*` vocabulary ([[maintain]] consumes it):
-  // `smallfile.bytes` (bin-pack files below this), `dvdebt` (rewrite
-  // files at/above this deleted fraction), `maxfiles` (per-run bite),
-  // `target.bytes` (output sizing). ADVISORY, deliberately not a
-  // writer feature: a writer that ignores it degrades nothing — the
-  // debt just waits for the next maintenance run — so foreign
-  // writers stay unfenced. Carried like the cadence policy; a
-  // restore does not roll it back.
-  private val MaintainHeader = "#maintain\t"
-
-  // `#txnseal\t1` — marks the high-water map COMPLETE (it covers every
-  // stamp in the table's whole history). Fresh tables are sealed from
-  // v0 and every commit inherits the seal; a manifest without it
-  // predates the format epoch and refuses at parse time.
-  private val TxnSealHeader = "#txnseal\t"
-
   /** DEFAULT snapshot cadence of the manifest log: a delta chain never
     * grows past this many links before a commit publishes a full
     * snapshot (Delta's checkpoint-every-N shape). A TABLE overrides it
@@ -576,66 +303,6 @@ object Versioned {
     * table declares 1 and never pays chain reconstruction, a
     * write-hot one declares 10+ and keeps commits O(delta). */
   private val manifestCheckpointEvery = 10
-
-  // manifest-checkpoint cadence header: `#ckptevery\t<n>` — the
-  // TABLE's declared snapshot cadence, carried like the stats/bloom
-  // policy (every commit republishes it in full). Absent = use the
-  // default above.
-  private val CkptEveryHeader = "#ckptevery\t"
-
-  // WRITE-TIME CLUSTERING policy: `#clustercols\t<c1>\t<c2>…` (names
-  // uri-encoded) — Delta's `CLUSTER BY` (liquid-clustering
-  // declaration) on this substrate. Every commit whose staged frame
-  // carries the declared columns range-partitions + sorts its OWN
-  // files on them before writing (the same repartitionByRange +
-  // sortWithinPartitions recipe as [[compactCommit]]'s clusterBy), so
-  // per-file min/max stats are born disjoint and [[readPruned]] plans
-  // O(matching files) from the FIRST append — no OPTIMIZE needed to
-  // fix an append-ordered layout after the fact. This replaces
-  // hive-style partition columns on this substrate: same pruning,
-  // no small-file explosion on high-cardinality keys, no
-  // partition-evolution rewrites. Carried like the cadence policy
-  // (pure writer config — a restore does not roll it back); declared
-  // via TBLPROPERTIES 'graft.cluster.cols' or [[setPolicy]]. A
-  // staged frame MISSING a declared column (an old writer against an
-  // evolved table) skips the layout step — conservative, never
-  // wrong: its files' stats simply overlap until the next compact.
-  private val ClusterColsHeader = "#clustercols\t"
-
-  // column mapping: `#colmap\t<logical>\t<physical>` (names
-  // uri-encoded), one line per RENAMED column — Delta's column-mapping
-  // shape. A column's PHYSICAL name (what its parquet files carry) is
-  // fixed at column birth; RENAME COLUMN is a metadata commit that
-  // changes the logical name and records the indirection here, so
-  // zero data files rewrite and time travel renders every version
-  // under its own names. Identity entries are never written. All
-  // other manifest metadata (stats groups, policy, checks) speaks
-  // LOGICAL names — the rename commit rewrites them — so the mapping
-  // is consulted only at the parquet scan/write boundary.
-  private val ColMapHeader = "#colmap\t"
-
-  // column-mapping MODE: `#colmapmode\tid` — the table mints UUID
-  // physical names for new columns (Delta's `id` mapping mode). With
-  // birth names (the default), a renamed- or dropped-away column's
-  // physical name blocks re-use of that name forever (old files'
-  // bytes would leak in); under `id` the physical namespace is
-  // collision-free by construction, so rename-away + re-add and
-  // drop + re-add both just work. Declared at CREATE (empty table:
-  // every declared column mints) or upgraded later ([[
-  // setColumnMapping]] — existing columns keep their birth names,
-  // columns added AFTER the upgrade mint). Carried like the cadence
-  // policy; a downgrade is refused (files already carry uuids).
-  private val ColMapModeHeader = "#colmapmode\t"
-
-  // dropped-column tombstone: `#coldrop\t<physical>` (uri-encoded),
-  // one line per DROPPED column's PHYSICAL name. DROP COLUMN is a
-  // metadata commit — the physical bytes stay in every data file; the
-  // tombstone is what refuses a later column whose physical name
-  // would collide with them (old files' bytes would leak into the new
-  // column at scan time). Carried like the column mapping: every
-  // commit republishes the full set; a replace claims naming
-  // authority and resets it.
-  private val ColDropHeader = "#coldrop\t"
 
   /** Parse one manifest FILE as written (no delta reconstruction).
     * Header fields are authoritative for the version either way; the
@@ -657,22 +324,12 @@ object Versioned {
       // state of a pre-epoch expire — refuse it by name instead of
       // failing on the missing parent file
       if (!fs.exists(manifestPath(dir, node.base.get._1)))
-        throw preEpoch(dir, v,
+        throw ManifestCodec.preEpoch(dir, v,
           "its delta chain is expired and it has no checkpoint " +
             "sidecar with a valid #eof")
       node
     }
   }
-
-  /** The refusal of a table written before the format epoch (see the
-    * class doc): like the reader gate's refusal of an unknown
-    * feature, it names what is missing instead of reading through a
-    * fallback. */
-  private def preEpoch(dir: String, v: Int,
-      what: String): UnsupportedTableFeatureException =
-    new UnsupportedTableFeatureException(
-      s"$dir v$v predates the graft format epoch ($what); rewrite it " +
-        "with a current release")
 
   // end-of-file trailer of a checkpoint sidecar: `#eof\t<n>` where n
   // counts the non-empty lines before it. Committed manifests land by
@@ -702,7 +359,7 @@ object Versioned {
           case Some(l) if l.startsWith(EofHeader) &&
               l.stripPrefix(EofHeader).trim.toIntOption
                 .contains(raw.length - 1) =>
-            Some(parseManifestLines(raw.init, dir, v))
+            Some(ManifestCodec.parse(raw.init, dir, v))
           case _ => None // torn sidecar: walk the chain
         }
       }
@@ -716,7 +373,7 @@ object Versioned {
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .filter(_.nonEmpty).toList
       finally in.close()
-    parseManifestLines(raw, dir, v)
+    ManifestCodec.parse(raw, dir, v)
   }
 
   /** HEADER-ONLY parse of version `v`'s manifest FILE: reads until the
@@ -733,206 +390,8 @@ object Versioned {
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .filter(_.nonEmpty).takeWhile(_.startsWith("#")).toList
       finally in.close()
-    parseManifestLines(raw, dir, v).m
+    ManifestCodec.parse(raw, dir, v).m
   }
-
-  /** Parse one manifest's (or checkpoint sidecar's) lines — the one
-    * place a header block is read, so both gates below cover
-    * [[readManifest]] and [[readHeaderOnly]] alike. */
-  private def parseManifestLines(raw: List[String], dir: String,
-      v: Int): RawNode = {
-    // THE GATE, checked before anything else is trusted: a version
-    // whose state uses a semantics-bearing feature this engine does
-    // not implement must refuse BY NAME, never parse-and-skip —
-    // runs on every manifest file AND sidecar, so reads, history
-    // folds, and commits (which read the parent) all refuse.
-    val minReader = raw.collectFirst {
-      case l if l.startsWith(MinReaderHeader) =>
-        l.stripPrefix(MinReaderHeader).trim.toIntOption
-          .getOrElse(Int.MaxValue) // unparseable floor = future format
-    }
-    val features = raw.collect { case l if l.startsWith(FeatureHeader) =>
-      l.stripPrefix(FeatureHeader).trim
-    }
-    val unknown = features.filterNot(SupportedReaderFeatures)
-    if (unknown.nonEmpty || minReader.exists(_ > CurrentReaderVersion))
-      throw new UnsupportedTableFeatureException(
-        s"this table version requires reader " +
-          minReader.filter(_ > CurrentReaderVersion)
-            .map(v => s"version $v (this engine reads up to " +
-              s"$CurrentReaderVersion)").getOrElse("features") +
-          (if (unknown.isEmpty) ""
-           else unknown.mkString(" [", ", ", "] this engine does not" +
-             " implement")) +
-          " — upgrade the reader; refusing beats silently skipping" +
-          " semantics-bearing metadata (deleted rows would resurrect," +
-          " mapped columns would misbind)")
-    val schemaLine = raw.find(_.startsWith(SchemaHeader))
-    val txn = raw.collectFirst { case l if l.startsWith(TxnHeader) =>
-      // appId is uri-encoded at write so the two tabs here are the
-      // only tabs on the line
-      val Array(app, batch) = l.stripPrefix(TxnHeader).split('\t')
-      (java.net.URLDecoder.decode(app, "UTF-8"), batch.toLong)
-    }
-    val checks = raw.collect { case l if l.startsWith(CheckHeader) =>
-      // name and expression are uri-encoded at write (an expression
-      // can contain anything), so the single tab here is structural
-      val Array(name, sql) = l.stripPrefix(CheckHeader).split('\t')
-      (java.net.URLDecoder.decode(name, "UTF-8"),
-        java.net.URLDecoder.decode(sql, "UTF-8"))
-    }
-    // trailing `~b<bytes>` annotation (optional — additive metadata,
-    // round 19): the sidecar file's byte size, recorded at stage time
-    // so sidecar reads plan listing-free like data lines do
-    def sizeTok(toks: Array[String], from: Int): Option[Long] =
-      toks.drop(from).collectFirst {
-        case t if t.startsWith("~b") && t.length > 2 &&
-          t.drop(2).forall(_.isDigit) => t.drop(2).toLong
-      }
-    val dvEntries = raw.collect { case l if l.startsWith(DvHeader) =>
-      val toks = l.stripPrefix(DvHeader).split('\t')
-      ((toks(0), toks(1)), sizeTok(toks, 2))
-    }
-    val dvs = dvEntries.map(_._1)
-    val dvSizes = dvEntries.collect {
-      case ((_, d), Some(sz)) => d -> sz }.toMap
-    val bloomEntries = raw.collect { case l if l.startsWith(BloomHeader) =>
-      val toks = l.stripPrefix(BloomHeader).split('\t')
-      ((toks(0), toks(1), toks(2)), sizeTok(toks, 3))
-    }
-    val blooms = bloomEntries.map(_._1)
-    val bloomSizes = bloomEntries.collect {
-      case ((_, _, s), Some(sz)) => s -> sz }.toMap
-    val op = raw.collectFirst { case l if l.startsWith(OpHeader) =>
-      l.stripPrefix(OpHeader)
-    }
-    val bloomCfg = raw.collect { case l if l.startsWith(BloomCfgHeader) =>
-      val Array(c, n, f) = l.stripPrefix(BloomCfgHeader).split('\t')
-      (c, n.toLong, f.toDouble)
-    }
-    val statColsPolicy = raw.collectFirst {
-      case l if l.startsWith(StatColsHeader) =>
-        l.stripPrefix(StatColsHeader).split('\t').toSeq
-          .filter(_.nonEmpty)
-          .map(java.net.URLDecoder.decode(_, "UTF-8"))
-    }.getOrElse(Nil)
-    val tsLine = raw.find(_.startsWith(TsHeader))
-    val commitUuid = raw.collectFirst {
-      case l if l.startsWith(CommitUuidHeader) =>
-        l.stripPrefix(CommitUuidHeader).trim
-    }
-    val base = raw.collectFirst { case l if l.startsWith(BaseHeader) =>
-      val Array(pv, depth) = l.stripPrefix(BaseHeader).split('\t')
-      (pv.toInt, depth.toInt)
-    }
-    val rmFiles = raw.collect { case l if l.startsWith(RmFileHeader) =>
-      l.stripPrefix(RmFileHeader)
-    }.toSet
-    val rmDvs = raw.collect { case l if l.startsWith(RmDvHeader) =>
-      val Array(b, d) = l.stripPrefix(RmDvHeader).split('\t')
-      (b, d)
-    }.toSet
-    val rmBlooms = raw.collect { case l if l.startsWith(RmBloomHeader) =>
-      val Array(b, c, s) = l.stripPrefix(RmBloomHeader).split('\t')
-      (b, c, s)
-    }.toSet
-    val colMap = raw.collect { case l if l.startsWith(ColMapHeader) =>
-      val Array(lg, ph) = l.stripPrefix(ColMapHeader).split('\t')
-      (java.net.URLDecoder.decode(lg, "UTF-8"),
-        java.net.URLDecoder.decode(ph, "UTF-8"))
-    }
-    val ckptEvery = raw.collectFirst {
-      case l if l.startsWith(CkptEveryHeader) =>
-        l.stripPrefix(CkptEveryHeader).trim.toInt
-    }
-    val colDrops = raw.collect { case l if l.startsWith(ColDropHeader) =>
-      java.net.URLDecoder.decode(l.stripPrefix(ColDropHeader), "UTF-8")
-    }
-    val colMapMode = raw.collectFirst {
-      case l if l.startsWith(ColMapModeHeader) =>
-        l.stripPrefix(ColMapModeHeader).trim
-    }
-    val txnHw = raw.collect { case l if l.startsWith(TxnHwHeader) =>
-      // 2-field entries predate last-stamp tracking (ts = unknown);
-      // 3-field carry the writer's last stamp instant for retention
-      l.stripPrefix(TxnHwHeader).split('\t') match {
-        case Array(app, b) =>
-          (java.net.URLDecoder.decode(app, "UTF-8"), b.toLong,
-            None: Option[Long])
-        case Array(app, b, t) =>
-          (java.net.URLDecoder.decode(app, "UTF-8"), b.toLong,
-            t.toLongOption)
-      }
-    }
-    // THE EPOCH: every current writer stamps all three; a manifest
-    // missing one was written before them and refuses by name
-    val missing = Seq(schemaLine.isEmpty -> "#schema",
-      tsLine.isEmpty -> "#ts",
-      !raw.exists(_.startsWith(TxnSealHeader)) -> "#txnseal")
-      .collect { case (true, h) => h }
-    if (missing.nonEmpty)
-      throw preEpoch(dir, v, "no " + missing.mkString(", "))
-    val schema = DataType.fromJson(schemaLine.get.stripPrefix(SchemaHeader))
-      .asInstanceOf[StructType]
-    val ts = tsLine.get.stripPrefix(TsHeader).trim.toLong
-    val txnRetention = raw.collectFirst {
-      case l if l.startsWith(TxnRetentionHeader) =>
-        l.stripPrefix(TxnRetentionHeader).trim.toLong
-    }
-    // the WRITER gate parses without refusing — reading a table whose
-    // write-side contracts this binary cannot honor is safe; the
-    // refusal happens at COMMIT time ([[casPublish]])
-    val minWriter = raw.collectFirst {
-      case l if l.startsWith(MinWriterHeader) =>
-        l.stripPrefix(MinWriterHeader).trim.toIntOption
-          .getOrElse(Int.MaxValue)
-    }
-    val writerFeatures = raw.collect {
-      case l if l.startsWith(WriterFeatureHeader) =>
-        l.stripPrefix(WriterFeatureHeader).trim
-    }
-    val schemaEnforce = raw.exists(_.startsWith(SchemaEnforceHeader))
-    val clusterCols = raw.collectFirst {
-      case l if l.startsWith(ClusterColsHeader) =>
-        l.stripPrefix(ClusterColsHeader).split('\t').toSeq
-          .map(java.net.URLDecoder.decode(_, "UTF-8"))
-    }.getOrElse(Nil)
-    // advisory header: a malformed line from a foreign writer is
-    // DROPPED, never a parse failure — bricking every read over a
-    // hint would invert the "ignoring it degrades nothing" contract
-    val maintain = raw.collect {
-      case l if l.startsWith(MaintainHeader) =>
-        l.stripPrefix(MaintainHeader).split('\t')
-    }.collect { case Array(k, v) =>
-      (java.net.URLDecoder.decode(k, "UTF-8"),
-        java.net.URLDecoder.decode(v, "UTF-8"))
-    }
-    RawNode(base, rmFiles, rmDvs, rmBlooms,
-      Manifest(schema, txn, checks, raw.filterNot(_.startsWith("#")), dvs,
-        blooms, op, bloomCfg, statColsPolicy, ts, commitUuid,
-        chainDepth = base.map(_._2).getOrElse(0), colMap = colMap,
-        ckptEvery = ckptEvery, colDrops = colDrops,
-        colMapMode = colMapMode, txnHw = txnHw,
-        clusterCols = clusterCols, txnRetention = txnRetention,
-        minWriter = minWriter, writerFeatures = writerFeatures,
-        schemaEnforce = schemaEnforce, maintain = maintain,
-        dvSizes = dvSizes, bloomSizes = bloomSizes))
-  }
-
-  /** Apply one delta node to its parent's reconstructed state: removes
-    * first (a stats rewrite of the same rel is rmfile + fresh add),
-    * then adds appended; every header field comes from the delta node
-    * itself (headers are always republished in full). */
-  private def applyDelta(parent: Manifest, d: RawNode): Manifest =
-    d.m.copy(
-      lines = parent.lines.filterNot(l =>
-        d.rmFiles.contains(parseLine(l)._1)) ++ d.m.lines,
-      dvs = parent.dvs.filterNot(d.rmDvs) ++ d.m.dvs,
-      blooms = parent.blooms.filterNot(d.rmBlooms) ++ d.m.blooms,
-      // sidecar rels are uuid-unique, so a permissive union is exact;
-      // stale keys (rm'd sidecars) are never looked up
-      dvSizes = parent.dvSizes ++ d.m.dvSizes,
-      bloomSizes = parent.bloomSizes ++ d.m.bloomSizes)
 
   /** The full reconstructed state of version `v`: a snapshot file is
     * the state; a delta file folds over its parent chain back to the
@@ -1104,12 +563,10 @@ object Versioned {
       val newStatCols = m.statColsPolicy.map(c => if (c == from) to else c)
       val newLines = m.lines.map(renameStatsCol(_, from, to))
       if (publishResolved(fs, dir, head + 1, uuid)(
-          casPublish(fs, dir, head + 1, newSchema, newLines, m.txn,
-            m.checks, m.dvs, m.blooms,
-            op = Some(s"rename-column($from->$to)"),
-            bloomCfg = m.bloomCfg, statColsPolicy = newStatCols,
-            parent = Some(m), commitUuid = Some(uuid),
-            colMap = newColMap, colDrops = m.colDrops)))
+          casPublish(fs, dir, head + 1, m.copy(schema = newSchema,
+            lines = newLines, op = Some(s"rename-column($from->$to)"),
+            statColsPolicy = newStatCols, commitUuid = Some(uuid),
+            colMap = newColMap), Some(m))))
         return head + 1
       attempts += 1
       require(attempts < 1000,
@@ -1253,12 +710,10 @@ object Versioned {
       val newLines = m.lines.map(dropStatsCol(_, name))
       guardColMap(newSchema, newColMap, newColDrops)
       if (publishResolved(fs, dir, head + 1, uuid)(
-          casPublish(fs, dir, head + 1, newSchema, newLines, m.txn,
-            m.checks, m.dvs, m.blooms,
-            op = Some(s"drop-column($name)"),
-            bloomCfg = m.bloomCfg, statColsPolicy = newStatCols,
-            parent = Some(m), commitUuid = Some(uuid),
-            colMap = newColMap, colDrops = newColDrops)))
+          casPublish(fs, dir, head + 1, m.copy(schema = newSchema,
+            lines = newLines, op = Some(s"drop-column($name)"),
+            statColsPolicy = newStatCols, commitUuid = Some(uuid),
+            colMap = newColMap, colDrops = newColDrops), Some(m))))
         return head + 1
       attempts += 1
       require(attempts < 1000,
@@ -1322,15 +777,11 @@ object Versioned {
       // files are swept by expire, like any lost staging.
       val newLines = if (zeroRows) Nil else m.lines
       if (publishResolved(fs, dir, head + 1, uuid)(
-          casPublish(fs, dir, head + 1, schema, newLines, m.txn,
-            m.checks,
-            if (zeroRows) Nil else m.dvs,
-            if (zeroRows) Nil else m.blooms,
-            op = Some("set-column-mapping(id)"),
-            bloomCfg = m.bloomCfg, statColsPolicy = m.statColsPolicy,
-            parent = Some(m), commitUuid = Some(uuid),
-            colMap = newColMap, colDrops = m.colDrops,
-            colMapModeOverride = Some(Some("id")))))
+          casPublish(fs, dir, head + 1, m.copy(lines = newLines,
+            dvs = if (zeroRows) Nil else m.dvs,
+            blooms = if (zeroRows) Nil else m.blooms,
+            op = Some("set-column-mapping(id)"), commitUuid = Some(uuid),
+            colMap = newColMap, colMapMode = Some("id")), Some(m))))
         return head + 1
       attempts += 1
       require(attempts < 1000,
@@ -1551,12 +1002,10 @@ object Versioned {
       // vectors and bloom pointers: a metadata commit that dropped the
       // DVs would silently RESURRECT every MoR-deleted row
       if (publishResolved(fs, dir, head + 1, uuid)(
-          casPublish(fs, dir, head + 1, m.schema, m.lines, m.txn,
-            m.checks :+ ((name, sqlExpr)), m.dvs, m.blooms,
-            op = Some(s"add-check($name)"), bloomCfg = m.bloomCfg,
-            statColsPolicy = m.statColsPolicy, parent = Some(m),
-            commitUuid = Some(uuid), colMap = m.colMap,
-            colDrops = m.colDrops)))
+          casPublish(fs, dir, head + 1, m.copy(
+            checks = m.checks :+ ((name, sqlExpr)),
+            op = Some(s"add-check($name)"), commitUuid = Some(uuid)),
+            Some(m))))
         return head + 1
       attempts += 1   // CAS lost: re-read head, re-validate its rows
       require(attempts < 1000,
@@ -1578,12 +1027,10 @@ object Versioned {
       require(m.checks.exists(_._1 == name),
         s"no CHECK constraint '$name' on $dir")
       if (publishResolved(fs, dir, head + 1, uuid)(
-          casPublish(fs, dir, head + 1, m.schema, m.lines, m.txn,
-            m.checks.filterNot(_._1 == name), m.dvs, m.blooms,
-            op = Some(s"drop-check($name)"), bloomCfg = m.bloomCfg,
-            statColsPolicy = m.statColsPolicy, parent = Some(m),
-            commitUuid = Some(uuid), colMap = m.colMap,
-            colDrops = m.colDrops)))
+          casPublish(fs, dir, head + 1, m.copy(
+            checks = m.checks.filterNot(_._1 == name),
+            op = Some(s"drop-check($name)"), commitUuid = Some(uuid)),
+            Some(m))))
         return head + 1
       attempts += 1
       require(attempts < 1000,
@@ -1681,19 +1128,20 @@ object Versioned {
       m.dvs.size, m.checks.map(_._1), m.statColsPolicy,
       m.bloomCfg.map(_._1), m.clusterCols, m.ckptEvery,
       m.colMapMode, m.txnRetention, m.schemaEnforce,
-      requiredFeatures(m.dvs, m.colMap, m.colDrops, m.colMapMode),
+      ManifestCodec.requiredFeatures(m),
       // declared ∪ derived: a foreign table's writer features must
       // SHOW here — this is the column an operator consults to learn
       // why their commit would refuse
-      (requiredWriterFeatures(m.checks, m.clusterCols, m.txnRetention,
-        m.schemaEnforce) ++ m.writerFeatures).distinct.sorted)
+      (ManifestCodec.requiredWriterFeatures(m) ++ m.writerFeatures)
+        .distinct.sorted)
   }
 
   /** EVERY declared table policy at `version` (default head) from ONE
     * manifest read: `(statCols, bloomCfg, checkpointEvery,
-    * columnMappingMode, clusterCols, txnRetentionMs)` — what
-    * DESCRIBE / SHOW TBLPROPERTIES consult. Six separate accessor
-    * calls would fold the same delta chain six times. */
+    * columnMappingMode, clusterCols, txnRetentionMs, schemaEnforce,
+    * maintain)` — what DESCRIBE / SHOW TBLPROPERTIES consult. Eight
+    * separate accessor calls would fold the same delta chain eight
+    * times. */
   def policyBundle(spark: SparkSession, dir: String,
       version: Option[Int] = None)
       : (Seq[String], Seq[(String, Long, Double)], Option[Int],
@@ -1720,63 +1168,10 @@ object Versioned {
   /** Version `v`'s reconstructed manifest rendered as canonical
     * snapshot text: every header the version carries, then its data
     * lines — what a full-snapshot commit of the same state would have
-    * written (field order matches [[renderHeaders]]). */
+    * written. */
   def manifestSnapshot(spark: SparkSession, dir: String,
       v: Int): Seq[String] =
-    renderManifest(readManifest(fileSystem(spark, dir), dir, v))
-
-  /** The optional `~b<bytes>` tail of a `#dv`/`#bloom` line — the
-    * sidecar's recorded byte size (round 19; absent when unknown). */
-  private def sizeSuffix(sizes: Map[String, Long], rel: String): String =
-    sizes.get(rel).map(sz => s"\t~b$sz").getOrElse("")
-
-  private def renderManifest(m: Manifest): Seq[String] = {
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    Seq(s"$SchemaHeader${m.schema.json}", s"$TsHeader${m.ts}") ++
-      m.op.map(o => s"$OpHeader$o").toSeq ++
-      m.commitUuid.map(u => s"$CommitUuidHeader$u").toSeq ++
-      m.txn.map { case (a, b) => s"$TxnHeader${enc(a)}\t$b" }.toSeq ++
-      (if (m.statColsPolicy.isEmpty) Nil
-       else Seq(m.statColsPolicy.map(enc)
-         .mkString(StatColsHeader, "\t", ""))) ++
-      m.checks.map { case (n, q) => s"$CheckHeader${enc(n)}\t${enc(q)}" } ++
-      m.dvs.map { case (b, d) => s"$DvHeader$b\t$d" + sizeSuffix(m.dvSizes, d) } ++
-      m.blooms.map { case (b, c, s) =>
-        s"$BloomHeader$b\t$c\t$s" + sizeSuffix(m.bloomSizes, s) } ++
-      m.bloomCfg.map { case (c, n, f) => s"$BloomCfgHeader$c\t$n\t$f" } ++
-      m.colMap.filter(e => e._1 != e._2).map { case (lg, ph) =>
-        s"$ColMapHeader${enc(lg)}\t${enc(ph)}"
-      } ++
-      m.ckptEvery.map(n => s"$CkptEveryHeader$n").toSeq ++
-      m.colDrops.map(ph => s"$ColDropHeader${enc(ph)}") ++
-      m.colMapMode.map(md => s"$ColMapModeHeader$md").toSeq ++
-      m.txnHw.map { case (a, b, t) =>
-        s"$TxnHwHeader${enc(a)}\t$b" + t.map("\t" + _).getOrElse("")
-      } ++
-      Seq(s"${TxnSealHeader}1") ++
-      m.txnRetention.map(r => s"$TxnRetentionHeader$r").toSeq ++
-      (if (m.clusterCols.isEmpty) Nil
-       else Seq(m.clusterCols.map(enc)
-         .mkString(ClusterColsHeader, "\t", ""))) ++
-      (if (m.schemaEnforce) Seq(s"${SchemaEnforceHeader}1") else Nil) ++
-      m.maintain.map { case (k, v) =>
-        s"$MaintainHeader${enc(k)}\t${enc(v)}" } ++
-      // the writer gate UNIONS derived with DECLARED: a checkpoint
-      // sidecar of a foreign table (reads are open, so expire /
-      // CALL checkpoint can run) must not strip the #minwriter /
-      // #writerfeature lines the committed manifest carries —
-      // readRaw prefers a valid sidecar, so stripping them would
-      // erase the very commit fence the gate provides. The reader
-      // gate needs no such union: unknown reader features refuse at
-      // parse, so no sidecar of such a table can ever be rendered.
-      gateLines(requiredFeatures(m.dvs, m.colMap, m.colDrops,
-        m.colMapMode),
-        (requiredWriterFeatures(m.checks, m.clusterCols,
-          m.txnRetention, m.schemaEnforce) ++ m.writerFeatures)
-          .distinct,
-        minWriterFloor = m.minWriter) ++
-      m.lines
-  }
+    ManifestCodec.render(readManifest(fileSystem(spark, dir), dir, v))
 
   /** Force a full snapshot of the HEAD manifest's state — as a
     * checkpoint SIDECAR beside the committed file, content-identical,
@@ -1815,7 +1210,7 @@ object Versioned {
     val m = readManifest(fs, dir, v)
     val tmp = new Path(dir,
       f"_manifest/.ckpt-v$v%05d-${java.util.UUID.randomUUID()}.tmp")
-    val body = renderManifest(m)
+    val body = ManifestCodec.render(m)
     val out = fs.create(tmp, false)
     // the #eof trailer is what lets readers trust the sidecar at all:
     // installOverwrite is not atomic everywhere, and a torn sidecar
@@ -1903,19 +1298,18 @@ object Versioned {
       val withClusterStats =
         (newStats ++ clusterBy.getOrElse(m.clusterCols)).distinct
       if (publishResolved(fs, dir, head + 1, uuid)(
-          casPublish(fs, dir, head + 1, schema, m.lines, m.txn,
-            m.checks, m.dvs, m.blooms, op = Some("set-policy"),
+          casPublish(fs, dir, head + 1, m.copy(op = Some("set-policy"),
             bloomCfg = newCfg, statColsPolicy = withClusterStats,
-            parent = Some(m), commitUuid = Some(uuid),
-            colMap = m.colMap, colDrops = m.colDrops,
-            ckptEveryOverride = manifestCheckpointEvery,
-            clusterColsOverride = clusterBy.map(_.distinct),
-            txnRetentionOverride = txnRetention,
-            schemaEnforceOverride = schemaEnforce,
-            maintainOverride =
-              if (maintainSet.isEmpty && maintainUnset.isEmpty) None
-              else Some((m.maintain.toMap -- maintainUnset ++
-                maintainSet).toSeq.sortBy(_._1)))))
+            commitUuid = Some(uuid),
+            ckptEvery = manifestCheckpointEvery.getOrElse(m.ckptEvery),
+            clusterCols = clusterBy.map(_.distinct)
+              .getOrElse(m.clusterCols),
+            txnRetention = txnRetention.getOrElse(m.txnRetention),
+            schemaEnforce = schemaEnforce.getOrElse(m.schemaEnforce),
+            maintain =
+              if (maintainSet.isEmpty && maintainUnset.isEmpty) m.maintain
+              else (m.maintain.toMap -- maintainUnset ++ maintainSet)
+                .toSeq.sortBy(_._1)), Some(m))))
         return head + 1
       attempts += 1
       require(attempts < 1000,
@@ -2652,72 +2046,18 @@ object Versioned {
   private def newCommitUuid(): String =
     java.util.UUID.randomUUID().toString
 
-  /** The header block every manifest file carries IN FULL, snapshot or
-    * delta — headers are O(policy), never O(table files). `dvs` and
-    * `blooms` here are the file's OWN entries (full set in a snapshot,
-    * adds only in a delta). */
-  private def renderHeaders(schema: StructType, ts: Long,
-      op: Option[String], txn: Option[(String, Long)],
-      statColsPolicy: Seq[String], checks: Seq[(String, String)],
-      dvs: Seq[(String, String)],
-      blooms: Seq[(String, String, String)],
-      bloomCfg: Seq[(String, Long, Double)],
-      commitUuid: Option[String],
-      colMap: Seq[(String, String)] = Nil,
-      ckptEvery: Option[Int] = None,
-      colDrops: Seq[String] = Nil,
-      colMapMode: Option[String] = None,
-      txnHw: Seq[(String, Long, Option[Long])] = Nil,
-      clusterCols: Seq[String] = Nil,
-      txnRetention: Option[Long] = None,
-      maintain: Seq[(String, String)] = Nil): Seq[String] = {
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    (s"$SchemaHeader${schema.json}" +:
-      (s"$TsHeader$ts" +:
-      // op rides as the line's tail verbatim; only line breaks could
-      // corrupt the manifest, so they flatten to spaces
-      (op.map(o => s"$OpHeader${o.replaceAll("[\\n\\r]", " ")}").toSeq ++
-      commitUuid.map(u => s"$CommitUuidHeader$u").toSeq ++
-      txn.map { case (app, batch) =>
-        s"$TxnHeader${enc(app)}\t$batch"
-      }.toSeq))) ++
-      (if (statColsPolicy.isEmpty) Nil
-       else Seq(statColsPolicy.distinct.map(enc)
-         .mkString(StatColsHeader, "\t", ""))) ++
-      checks.map { case (name, sql) =>
-        s"$CheckHeader${enc(name)}\t${enc(sql)}"
-      } ++
-      dvs.distinct.map { case (baseRel, dvRel) =>
-        s"$DvHeader$baseRel\t$dvRel"
-      } ++
-      blooms.distinct.map { case (baseRel, c, sideRel) =>
-        s"$BloomHeader$baseRel\t$c\t$sideRel"
-      } ++
-      bloomCfg.distinct.map { case (c, n, f) =>
-        s"$BloomCfgHeader$c\t$n\t$f"
-      } ++
-      colMap.filter(e => e._1 != e._2).distinct.map { case (lg, ph) =>
-        s"$ColMapHeader${enc(lg)}\t${enc(ph)}"
-      } ++
-      ckptEvery.map(n => s"$CkptEveryHeader$n").toSeq ++
-      colDrops.distinct.map(ph => s"$ColDropHeader${enc(ph)}") ++
-      colMapMode.map(md => s"$ColMapModeHeader$md").toSeq ++
-      txnHw.map { case (a, b, t) =>
-        s"$TxnHwHeader${enc(a)}\t$b" + t.map("\t" + _).getOrElse("")
-      } ++
-      Seq(s"${TxnSealHeader}1") ++
-      txnRetention.map(r => s"$TxnRetentionHeader$r").toSeq ++
-      (if (clusterCols.isEmpty) Nil
-       else Seq(clusterCols.distinct.map(enc)
-         .mkString(ClusterColsHeader, "\t", ""))) ++
-      maintain.map { case (k, v) =>
-        s"$MaintainHeader${enc(k)}\t${enc(v)}" }
-  }
-
-  /** Compare-and-swap publish of `lines` as version `next`: true iff
+  /** Compare-and-swap publish of state `m` as version `next`: true iff
     * THIS writer created the version (see class doc for the substrate).
     * The temp file is writer-unique so racing writers never collide on
     * the staging name either.
+    *
+    * `m` is the full next state — each caller builds it as
+    * `parent.copy(<what this commit changes>)`, so every policy field
+    * it does not touch carries. This is the one place that sets what
+    * is computed at publish: the `#ts` instant, the `#txnhw` fold, the
+    * delta-or-snapshot choice (`#base`), and the gate lines (derived
+    * from the published state; a gate copied from the parent is
+    * cleared, so dropping the last CHECK lifts the writer gate).
     *
     * `parent` is the reconstructed state of version `next - 1` (every
     * caller holds it — it read the head to build the new state). When
@@ -2731,35 +2071,8 @@ object Versioned {
     * line, not a ~100 MB relisting.
     */
   private def casPublish(fs: FileSystem, dir: String, next: Int,
-      schema: StructType, lines: Seq[String],
-      txn: Option[(String, Long)] = None,
-      checks: Seq[(String, String)] = Nil,
-      dvs: Seq[(String, String)] = Nil,
-      blooms: Seq[(String, String, String)] = Nil,
-      op: Option[String] = None,
-      bloomCfg: Seq[(String, Long, Double)] = Nil,
-      statColsPolicy: Seq[String] = Nil,
-      parent: Option[Manifest] = None,
-      commitUuid: Option[String] = None,
-      colMap: Seq[(String, String)] = Nil,
-      ckptEveryOverride: Option[Option[Int]] = None,
-      colDrops: Seq[String] = Nil,
-      colMapModeOverride: Option[Option[String]] = None,
-      clusterColsOverride: Option[Seq[String]] = None,
-      txnRetentionOverride: Option[Option[Long]] = None,
-      schemaEnforceOverride: Option[Boolean] = None,
-      maintainOverride: Option[Seq[(String, String)]] = None,
-      // byte sizes of NEWLY staged sidecars (keyed by sidecar rel);
-      // carried pairs' sizes ride in from the parent manifest below
-      dvSizes: Map[String, Long] = Map.empty,
-      bloomSizes: Map[String, Long] = Map.empty): Boolean = {
+      m: Manifest, parent: Option[Manifest]): Boolean = {
     val target = manifestPath(dir, next)
-    // every size known to this commit: the parent's recorded map
-    // (sidecar rels are uuid-unique, stale keys never looked up)
-    // plus the caller's fresh entries
-    val allDvSizes = parent.map(_.dvSizes).getOrElse(Map.empty) ++ dvSizes
-    val allBloomSizes =
-      parent.map(_.bloomSizes).getOrElse(Map.empty) ++ bloomSizes
     val tmp = new Path(dir,
       f"_manifest/.v$next%05d-${java.util.UUID.randomUUID()}.tmp")
     fs.mkdirs(new Path(dir, "_manifest"))
@@ -2769,24 +2082,12 @@ object Versioned {
     // committed at-or-before t
     val ts = math.max(System.currentTimeMillis(),
       parent.map(_.ts + 1).getOrElse(Long.MinValue))
-    // the TABLE's snapshot cadence: carried from the parent like the
-    // stats/bloom policy, overridable only by setPolicy (Some(Some(n))
-    // declares, Some(None) clears back to the default).
-    val ckptEvery: Option[Int] =
-      ckptEveryOverride.getOrElse(parent.flatMap(_.ckptEvery))
-    val every = ckptEvery.getOrElse(manifestCheckpointEvery)
-    // column-mapping mode carries like the cadence: once a table is
-    // `id`, every commit republishes the declaration
-    val colMapMode: Option[String] =
-      colMapModeOverride.getOrElse(parent.flatMap(_.colMapMode))
     // aggregated transaction high-water (the idempotence LEDGER, not
     // table content — a replace/restore resets data, never the
     // ledger: resetting would re-open the double-append hole): the
     // parent's map and this commit's stamp, merged by MAX batchId per
     // appId. The map is complete (`#txnseal`) from v0 on: every
     // commit folds its own stamp into it.
-    val txnRetention: Option[Long] =
-      txnRetentionOverride.getOrElse(parent.flatMap(_.txnRetention))
     val txnHw: Seq[(String, Long, Option[Long])] = {
       // per appId: max batchId wins; its last-stamp instant rides
       // along (an entry with no recorded instant — pre-retention
@@ -2802,7 +2103,7 @@ object Versioned {
           }
         }
       fold(parent.map(_.txnHw).getOrElse(Nil))
-      fold(txn.map { case (a, b) => (a, b, Some(ts)) })
+      fold(m.txn.map { case (a, b) => (a, b, Some(ts)) })
       // instants render ONLY while a retention horizon is declared:
       // an undeclared table keeps the 2-field entries a pre-retention
       // reader parses (byte-compat until the feature is used — the
@@ -2810,7 +2111,7 @@ object Versioned {
       // without an instant age from the first republish under a
       // declared horizon — kept a full horizon from then, never
       // dropped early.
-      txnRetention match {
+      m.txnRetention match {
         case Some(r) =>
           // the retention sweep: entries stamped before the horizon
           // drop (their writers re-append on replay — the documented
@@ -2824,11 +2125,6 @@ object Versioned {
         }.sortBy(_._1)
       }
     }
-    // write-time clustering carries like the cadence: a declared
-    // table keeps its layout contract through every commit until an
-    // explicit re-declaration (Some(Nil) clears)
-    val clusterCols: Seq[String] = clusterColsOverride
-      .getOrElse(parent.map(_.clusterCols).getOrElse(Nil))
     // the WRITER gate: a commit over a parent whose write-side
     // contracts this binary does not implement must refuse BY NAME —
     // publishing would silently drop the contract (unvalidated CHECK
@@ -2836,86 +2132,30 @@ object Versioned {
     // commit is fenced. The current binary knows every feature it
     // can itself write, so this trips only on future/foreign tables.
     parent.foreach { pm =>
-      val unknownW = pm.writerFeatures.filterNot(SupportedWriterFeatures)
+      val unknownW = pm.writerFeatures
+        .filterNot(ManifestCodec.SupportedWriterFeatures)
       if (unknownW.nonEmpty ||
-          pm.minWriter.exists(_ > CurrentWriterVersion))
+          pm.minWriter.exists(_ > ManifestCodec.CurrentWriterVersion))
         throw new UnsupportedTableFeatureException(
           "cannot COMMIT to this table: it requires writer " +
-            pm.minWriter.filter(_ > CurrentWriterVersion)
+            pm.minWriter.filter(_ > ManifestCodec.CurrentWriterVersion)
               .map(v => s"version $v (this engine writes up to " +
-                s"$CurrentWriterVersion)").getOrElse("features") +
+                s"${ManifestCodec.CurrentWriterVersion})")
+              .getOrElse("features") +
             (if (unknownW.isEmpty) ""
              else unknownW.mkString(" [", ", ", "] this engine does" +
                " not implement")) +
             " — reading stays open; upgrade the writer (publishing" +
             " would silently drop a write-side contract)")
     }
-    val schemaEnforce: Boolean = schemaEnforceOverride
-      .getOrElse(parent.exists(_.schemaEnforce))
-    // maintenance thresholds carry like the cadence: declared once,
-    // republished by every commit; Some(Nil) clears
-    val maintain: Seq[(String, String)] = maintainOverride
-      .getOrElse(parent.map(_.maintain).getOrElse(Nil))
-    val headers = renderHeaders(schema, ts, op, txn, statColsPolicy,
-      checks, Nil, Nil, bloomCfg, commitUuid, colMap, ckptEvery,
-      colDrops, colMapMode, txnHw, clusterCols,
-      txnRetention, maintain) ++
-      (if (schemaEnforce) Seq(s"${SchemaEnforceHeader}1") else Nil) ++
-      // the feature gates derive from the FULL state this version
-      // publishes (headers are authoritative per version, delta or
-      // snapshot alike): no gated feature in play → no gate lines
-      gateLines(requiredFeatures(dvs, colMap, colDrops, colMapMode),
-        requiredWriterFeatures(checks, clusterCols, txnRetention,
-          schemaEnforce))
-    // delta vs snapshot: diff against the parent state by exact line
-    // (a stats rewrite of a carried rel encodes as rmfile + fresh add)
-    val body: Seq[String] = parent match {
-      case Some(p) if every > 1 && p.chainDepth + 1 < every =>
-        val pByRel = p.lines.map(l => parseLine(l)._1 -> l).toMap
-        val nByRel = lines.map(l => parseLine(l)._1 -> l).toMap
-        val addLines = lines.filter(l =>
-          !pByRel.get(parseLine(l)._1).contains(l))
-        val rmRels = p.lines.filter(l =>
-          !nByRel.get(parseLine(l)._1).contains(l)).map(parseLine(_)._1)
-        val dvSet = dvs.toSet
-        val pDvSet = p.dvs.toSet
-        val dvAdds = dvs.distinct.filterNot(pDvSet)
-        val dvRms = p.dvs.distinct.filterNot(dvSet)
-        val bloomSet = blooms.toSet
-        val pBloomSet = p.blooms.toSet
-        val bloomAdds = blooms.distinct.filterNot(pBloomSet)
-        val bloomRms = p.blooms.distinct.filterNot(bloomSet)
-        val deltaN = addLines.size + rmRels.size + dvAdds.size +
-          dvRms.size + bloomAdds.size + bloomRms.size
-        val fullN = lines.size + dvs.size + blooms.size
-        // snapshot when it is not bigger than the delta — including
-        // the truncate shape (fullN == 0, deltaN == table): an empty
-        // snapshot beats O(table) #rmfile records
-        if (deltaN * 2 > fullN) Nil // snapshot is smaller
-        else
-          Seq(s"$BaseHeader${next - 1}\t${p.chainDepth + 1}") ++
-            rmRels.map(r => s"$RmFileHeader$r") ++
-            dvRms.map { case (b, d) => s"$RmDvHeader$b\t$d" } ++
-            bloomRms.map { case (b, c, sr) => s"$RmBloomHeader$b\t$c\t$sr" } ++
-            dvAdds.map { case (b, d) =>
-              s"$DvHeader$b\t$d" + sizeSuffix(allDvSizes, d) } ++
-            bloomAdds.map { case (b, c, sr) =>
-              s"$BloomHeader$b\t$c\t$sr" + sizeSuffix(allBloomSizes, sr) } ++
-            addLines
-      case _ => Nil
-    }
-    // the #base line rides in every delta body, so body.nonEmpty IS
-    // "this publish is a delta"; otherwise write the full snapshot
-    val text =
-      if (body.nonEmpty) headers ++ body
-      else headers ++
-        dvs.distinct.map { case (b, d) =>
-          s"$DvHeader$b\t$d" + sizeSuffix(allDvSizes, d) } ++
-        blooms.distinct.map { case (b, c, sr) =>
-          s"$BloomHeader$b\t$c\t$sr" + sizeSuffix(allBloomSizes, sr) } ++
-        lines
+    val pub = m.copy(ts = ts, txnHw = txnHw, writerFeatures = Nil,
+      minWriter = None)
+    // the TABLE's snapshot cadence (`#ckptevery`, else the default)
+    val every = pub.ckptEvery.getOrElse(manifestCheckpointEvery)
+    val delta = parent.filter(p => every > 1 && p.chainDepth + 1 < every)
+      .flatMap(p => ManifestCodec.encodeDelta(p, next - 1, pub))
     val out = fs.create(tmp, false)
-    try out.write(text
+    try out.write(ManifestCodec.render(pub, delta)
       .mkString("", "\n", "\n")
       .getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -3375,13 +2615,17 @@ object Versioned {
         if (replace) Nil else headManifest.map(_.colDrops).getOrElse(Nil)
       guardColMap(schema, pubColMap, pubColDrops)
       val checks = headManifest.map(_.checks).getOrElse(Nil)
+      // the state this commit starts from: every policy field it does
+      // not set below carries from the head
+      val prior = headManifest.getOrElse(Manifest(schema))
       if (!validatedFor.contains(checks)) {
         enforceChecks(spark, dir, newFiles, checks, schema, stageMap)
         validatedFor = Some(checks)
       }
       if (publishResolved(fs, dir, next, uuid)(
-          casPublish(fs, dir, next, schema, carried ++ newFiles, txn,
-            checks, carriedDvs, carriedBlooms ++ newBlooms,
+          casPublish(fs, dir, next, prior.copy(schema = schema,
+            lines = carried ++ newFiles, txn = txn, checks = checks,
+            dvs = carriedDvs, blooms = carriedBlooms ++ newBlooms,
             op = Some(txn.map(_ => "stream-append")
               .getOrElse(if (replace) "replace" else "append")),
             // published policy tracks the PUBLISHED schema: a replace
@@ -3389,9 +2633,10 @@ object Versioned {
             bloomCfg = polCfg.filter(c =>
               schema.fieldNames.contains(c._1)),
             statColsPolicy = polStats.filter(schema.fieldNames.contains),
-            parent = headManifest, commitUuid = Some(uuid),
-            colMap = pubColMap, colDrops = pubColDrops,
-            bloomSizes = newBloomSizes)))
+            commitUuid = Some(uuid), colMap = pubColMap,
+            colDrops = pubColDrops,
+            bloomSizes = prior.bloomSizes ++ newBloomSizes),
+            headManifest)))
         return next
       // CAS lost: an append re-reads head and retries (appends commute);
       // a plain replace cannot merge with the commit it never saw
@@ -3799,18 +3044,16 @@ object Versioned {
       // (interleaved append with new columns): publish the union —
       // staged files simply null-fill the columns they predate
       val schema = evolveSchema(headM.schema, stagedSchema)
-      val pubColMap = headM.colMap
-      val pubColDrops = headM.colDrops
-      guardColMap(schema, pubColMap, pubColDrops)
+      guardColMap(schema, headM.colMap, headM.colDrops)
       if (publishResolved(fs, dir, next, uuid)(
-          casPublish(fs, dir, next, schema, newLines,
-            checks = headM.checks, dvs = newDvs, blooms = newBlooms,
-            op = Some("compact-subset"), bloomCfg = headM.bloomCfg,
+          casPublish(fs, dir, next, headM.copy(schema = schema,
+            lines = newLines, txn = None, dvs = newDvs, blooms = newBlooms,
+            op = Some("compact-subset"),
             statColsPolicy = headM.statColsPolicy
               .filter(schema.fieldNames.contains),
-            parent = Some(headM), commitUuid = Some(uuid),
-            colMap = pubColMap, colDrops = pubColDrops,
-            bloomSizes = stagedBloomSizes)))
+            commitUuid = Some(uuid),
+            bloomSizes = headM.bloomSizes ++ stagedBloomSizes),
+            Some(headM))))
         return next
       attempts += 1
       require(attempts < 1000,
@@ -3876,15 +3119,8 @@ object Versioned {
     // if it should survive — [[addCheck]] then validates the restored
     // data against it explicitly.
     replaceLoop(spark, dir, m.lines, latestVersion(spark, dir),
-      keyCols = None, stagedSchema = schema,
-      checksOverride = Some(m.checks), validateChecks = false,
-      stagedDvs = m.dvs, stagedDvSizes = m.dvSizes, dvAuthority = true,
-      stagedBlooms = m.blooms, stagedBloomSizes = m.bloomSizes,
-      op = s"restore(v$version)",
-      bloomCfgOverride = Some(m.bloomCfg),
-      statColsOverride = Some(m.statColsPolicy),
-      colMapOverride = Some(m.colMap),
-      colDropsOverride = Some(m.colDrops))
+      keyCols = None, stagedSchema = schema, validateChecks = false,
+      op = s"restore(v$version)", restoreTo = Some(m))
   }
 
   // ----------------------------------------------------- row-level DML
@@ -4684,15 +3920,14 @@ object Versioned {
           else {
             val uuid = newCommitUuid()
             if (publishResolved(fs, dir, head + 1, uuid)(
-                casPublish(fs, dir, head + 1, hm.schema,
-                  hm.lines ++ st.staged, checks = hm.checks,
+                casPublish(fs, dir, head + 1, hm.copy(
+                  lines = hm.lines ++ st.staged, txn = None,
                   dvs = hm.dvs ++ st.pairs,
                   blooms = hm.blooms ++ st.stagedBlooms,
-                  op = Some("update-mor"), bloomCfg = hm.bloomCfg,
-                  statColsPolicy = hm.statColsPolicy, parent = Some(hm),
-                  commitUuid = Some(uuid), colMap = hm.colMap,
-                  colDrops = hm.colDrops,
-                  dvSizes = st.dvSizes, bloomSizes = st.bloomSizes)))
+                  op = Some("update-mor"), commitUuid = Some(uuid),
+                  dvSizes = hm.dvSizes ++ st.dvSizes,
+                  bloomSizes = hm.bloomSizes ++ st.bloomSizes),
+                  Some(hm))))
               return head + 1
           }
       }
@@ -4769,14 +4004,11 @@ object Versioned {
     enforceChecks(spark, dir, staged, m.checks, schema)
     val attemptUuid = newCommitUuid()
     val published = publishResolved(fs, dir, base + 1, attemptUuid)(
-      casPublish(fs, dir, base + 1, schema,
-        m.lines ++ staged, checks = m.checks, dvs = m.dvs ++ pairs,
+      casPublish(fs, dir, base + 1, m.copy(lines = m.lines ++ staged,
+        txn = None, dvs = m.dvs ++ pairs,
         blooms = m.blooms ++ stagedBlooms._1, op = Some("update-mor"),
-        bloomCfg = m.bloomCfg,
-        statColsPolicy = m.statColsPolicy, parent = Some(m),
-        commitUuid = Some(attemptUuid), colMap = m.colMap,
-        colDrops = m.colDrops,
-        dvSizes = dvSizes, bloomSizes = stagedBlooms._2))
+        commitUuid = Some(attemptUuid), dvSizes = m.dvSizes ++ dvSizes,
+        bloomSizes = m.bloomSizes ++ stagedBlooms._2), Some(m)))
     if (published) Right(base + 1)
     else Left(MorStaged(
       scanned = affected,
@@ -5006,6 +4238,12 @@ object Versioned {
     * disorder a late update older than an already-applied delete
     * would re-insert — the tombstone shape exists for exactly that.
     *
+    * Keys must not be NULL (the load contract: no corpus carries a
+    * NULL event key). The merge matches on SQL equality, where a NULL
+    * key matches nothing and would insert again on every later batch
+    * — compactLog keeps one winner for it instead — so a NULL key
+    * fails the batch's first job, naming the key column.
+    *
     * Scale shape: O(files holding a matched key) via [[mergeApply]]'s
     * stat-prune → refine path; the idempotence guard is the O(1)
     * sealed-ledger read. Returns None on a replayed batchId.
@@ -5014,7 +4252,7 @@ object Versioned {
       source: DataFrame, keyCols: Seq[String], seqCols: Seq[String],
       opCol: String, deleteOp: String, appId: String, batchId: Long,
       retainTombstones: Boolean = true): Option[Int] = {
-    import org.apache.spark.sql.functions.{col, struct}
+    import org.apache.spark.sql.functions.{col, lit, raise_error, struct, when}
     require(appId.nonEmpty, "idempotentMergeCdc needs a non-empty appId")
     require(seqCols.nonEmpty, "idempotentMergeCdc needs a seq column")
     (seqCols :+ opCol).foreach(c => require(source.columns.contains(c),
@@ -5032,7 +4270,17 @@ object Versioned {
     // ChangeApply.compactLog's `ordered` (seq, then op/payload as the
     // deterministic tiebreak a malformed duplicate-seq feed needs)
     val ordered = seqCols ++ (opCol +: payload)
+    // the NULL-key refusal rides in the projection (no job of its
+    // own); a non-nullable key needs none and keeps its nullability
     val compacted = compactByKey(source, keyCols, ordered)
+      .select(source.columns.toSeq.map { c =>
+        if (keyCols.contains(c) && source.schema(c).nullable)
+          when(col(s"`$c`").isNull, raise_error(lit(
+            s"CDC key column '$c' is NULL: a NULL key matches no row " +
+              "and cannot be merged")))
+            .otherwise(col(s"`$c`")).as(c)
+        else col(s"`$c`")
+      }: _*)
     val stamp = Some((appId, batchId))
     latestVersion(spark, dir) match {
       case None =>
@@ -5574,27 +4822,29 @@ object Versioned {
     * must stay delta-sized. `keyProbe` narrows the overlap probe to an
     * explicit key frame (a merge conflicts only with appends touching
     * its SOURCE keys, not every key it happens to carry forward).
+    *
+    * `restoreTo` is [[restore]]'s target state: the commit publishes
+    * exactly its DV pairs and bloom pointers (any head DV unseen at the
+    * base conflicts), and rolls back its CHECK constraints, bloom
+    * config, stat policy and column mapping with the data. Writer
+    * config (cadence, clustering, ledger retention, enforcement,
+    * maintenance) carries from the head like any commit's.
     */
   private def replaceLoop(spark: SparkSession, dir: String,
       staged: Seq[String], base: Option[Int],
       keyCols: Option[Seq[String]], stagedSchema: StructType,
-      checksOverride: Option[Seq[(String, String)]] = None,
       validateChecks: Boolean = true,
       carried: Seq[String] = Nil,
       keyProbe: Option[DataFrame] = None,
       stagedDvs: Seq[(String, String)] = Nil,
       stagedDvSizes: Map[String, Long] = Map.empty,
-      dvAuthority: Boolean = false,
       morScanned: Option[Set[String]] = None,
       stagedBlooms: Seq[(String, String, String)] = Nil,
       stagedBloomSizes: Map[String, Long] = Map.empty,
       op: String = "replace",
-      bloomCfgOverride: Option[Seq[(String, Long, Double)]] = None,
-      statColsOverride: Option[Seq[String]] = None,
-      colMapOverride: Option[Seq[(String, String)]] = None,
-      colDropsOverride: Option[Seq[String]] = None,
       colMapExtra: Seq[(String, String)] = Nil,
-      txn: Option[(String, Long)] = None): Int = {
+      txn: Option[(String, Long)] = None,
+      restoreTo: Option[Manifest] = None): Int = {
     val fs = fileSystem(spark, dir)
     val baseM = base.map(readManifest(fs, dir, _))
     // staged files were written under the BASE's column mapping
@@ -5617,10 +4867,11 @@ object Versioned {
       val headM = head.map(readManifest(fs, dir, _))
       val headLines = headM.map(_.lines).getOrElse(Nil)
       val headFiles = headLines.map(parseLine(_)._1).toSet
-      // CHECK constraints survive a replace (table policy, not data) —
-      // unless the caller rolls policy back with state ([[restore]])
-      val checks = checksOverride
-        .getOrElse(headM.map(_.checks).getOrElse(Nil))
+      // CHECK constraints, the bloom config and the stat policy
+      // survive a replace (table policy, not data) — unless the caller
+      // rolls policy back with state ([[restore]])
+      val policy = restoreTo.orElse(headM)
+      val checks = policy.map(_.checks).getOrElse(Nil)
       if (!baseFiles.subsetOf(headFiles))
         throw new CommitConflictException(
           s"replace of $dir based on version $base conflicts with an " +
@@ -5682,12 +4933,12 @@ object Versioned {
       // rewritten copies — a lost update, so a conflict (same class
       // as the key overlap above). A pair the base already carried is
       // fine: the rewrite scan applied it (materialization, not
-      // loss). Under `dvAuthority` (restore: the published DV set is
-      // exactly the restored version's) ANY unseen pair conflicts —
+      // loss). Under a restore (the published DV set is exactly the
+      // restored version's) ANY unseen pair conflicts —
       // the restore must re-derive knowing about the delete it would
       // otherwise override.
       val lostDeletes = headDvs.filter { case pair @ (baseRel, _) =>
-        !baseDvs.contains(pair) && (dvAuthority ||
+        !baseDvs.contains(pair) && (restoreTo.isDefined ||
           (headFiles.contains(baseRel) && !newRels.contains(baseRel)))
       }
       if (lostDeletes.nonEmpty)
@@ -5723,25 +4974,17 @@ object Versioned {
         }
       }
       // DVs survive on every file that survives (carried or
-      // interleaved), plus the caller's fresh pairs; a DV-authority
-      // commit publishes exactly the caller's set
-      val newDvs =
-        if (dvAuthority) stagedDvs
-        else headDvs.filter(d => newRels.contains(d._1)) ++ stagedDvs
+      // interleaved), plus the caller's fresh pairs; a restore
+      // publishes exactly its target's set
+      val newDvs = restoreTo.map(_.dvs).getOrElse(
+        headDvs.filter(d => newRels.contains(d._1)) ++ stagedDvs)
       // bloom pointers follow their data files: filters survive on
       // every file that survives, rewritten/dropped files lose theirs
-      // (the caller staged fresh ones when it re-measured); a
-      // DV-authority commit (restore) publishes exactly its own set
-      val newBlooms =
-        if (dvAuthority) stagedBlooms
-        else headM.map(_.blooms).getOrElse(Nil)
-          .filter(b => newRels.contains(b._1)) ++ stagedBlooms
-      // index config and stat policy carry like the CHECK policy; a
-      // restore rolls them back with the state it republishes
-      val cfg = bloomCfgOverride
-        .getOrElse(headM.map(_.bloomCfg).getOrElse(Nil))
-      val statPol = statColsOverride
-        .getOrElse(headM.map(_.statColsPolicy).getOrElse(Nil))
+      // (the caller staged fresh ones when it re-measured); a restore
+      // publishes exactly its target's set
+      val newBlooms = restoreTo.map(_.blooms).getOrElse(
+        headM.map(_.blooms).getOrElse(Nil)
+          .filter(b => newRels.contains(b._1)) ++ stagedBlooms)
       // id-mode mints this commit's staged files carry (mergeInto's
       // evolved columns): a racing commit that introduced the same
       // column under its own physical invalidates the staged bytes —
@@ -5760,20 +5003,26 @@ object Versioned {
             "evolution: a column this commit minted a physical name " +
             "for was introduced by another writer under a different " +
             "one — re-derive from the new head")
-      val pubColMap = colMapOverride
-        .getOrElse(headM.map(_.colMap).getOrElse(Nil) ++
+      val pubColMap = restoreTo.map(_.colMap).getOrElse(
+        headM.map(_.colMap).getOrElse(Nil) ++
           colMapExtra.filterNot(e => headMap.contains(e._1)))
-      val pubColDrops = colDropsOverride
-        .getOrElse(headM.map(_.colDrops).getOrElse(Nil))
+      val pubColDrops = policy.map(_.colDrops).getOrElse(Nil)
       guardColMap(schema, pubColMap, pubColDrops)
+      val prior = headM.getOrElse(Manifest(schema))
       if (publishResolved(fs, dir, next, uuid)(
-          casPublish(fs, dir, next, schema, newLines, txn = txn,
-            checks = checks, dvs = newDvs, blooms = newBlooms,
-            op = Some(op), bloomCfg = cfg,
-            statColsPolicy = statPol.filter(schema.fieldNames.contains),
-            parent = headM, commitUuid = Some(uuid),
-            colMap = pubColMap, colDrops = pubColDrops,
-            dvSizes = stagedDvSizes, bloomSizes = stagedBloomSizes)))
+          casPublish(fs, dir, next, prior.copy(schema = schema,
+            lines = newLines, txn = txn, checks = checks, dvs = newDvs,
+            blooms = newBlooms, op = Some(op),
+            bloomCfg = policy.map(_.bloomCfg).getOrElse(Nil),
+            statColsPolicy = policy.map(_.statColsPolicy).getOrElse(Nil)
+              .filter(schema.fieldNames.contains),
+            commitUuid = Some(uuid), colMap = pubColMap,
+            colDrops = pubColDrops,
+            dvSizes = prior.dvSizes ++ stagedDvSizes ++
+              restoreTo.map(_.dvSizes).getOrElse(Map.empty),
+            bloomSizes = prior.bloomSizes ++ stagedBloomSizes ++
+              restoreTo.map(_.bloomSizes).getOrElse(Map.empty)),
+            headM)))
         return next
       attempts += 1
       require(attempts < 1000,
@@ -6527,6 +5776,19 @@ object Versioned {
       version: Int): Int =
     readManifest(fileSystem(spark, dir), dir, version).lines.size
 
+  /** Version `version` (default: head) of the table at `dir` and its
+    * reconstructed manifest — the readers' shared preamble. The
+    * `exists` probe names a version that was never committed (or is
+    * expired) before the read fails on it. */
+  private def manifestAt(spark: SparkSession, dir: String,
+      version: Option[Int]): (Int, Manifest) = {
+    val fs = fileSystem(spark, dir)
+    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
+      throw new IllegalArgumentException(s"no committed version in $dir"))
+    require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
+    (v, readManifest(fs, dir, v))
+  }
+
   /** Read a specific version (time travel), or the latest when
     * `version` is None. Immutable: committing later versions never
     * changes what this returns.
@@ -6540,11 +5802,7 @@ object Versioned {
     */
   def read(spark: SparkSession, dir: String,
       version: Option[Int] = None): DataFrame = {
-    val fs = fileSystem(spark, dir)
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $dir"))
-    require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
-    val m = readManifest(fs, dir, v)
+    val m = manifestAt(spark, dir, version)._2
     if (m.lines.isEmpty)
       // an empty version (truncate-to-empty replace, or an empty
       // pipeline run's first commit) is still a READABLE table: the
@@ -6571,11 +5829,7 @@ object Versioned {
       lo: Long, hi: Long, version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     require(hi >= lo, s"need hi >= lo: [$lo, $hi]")
-    val fs = fileSystem(spark, dir)
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $dir"))
-    require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
-    val m = readManifest(fs, dir, v)
+    val (v, m) = manifestAt(spark, dir, version)
     require(m.lines.nonEmpty, s"version $v of $dir is empty")
     // keep full LINES (not bare rels): the `~b` size annotations ride
     // into [[scanVisible]]'s listing-free scan
@@ -6605,11 +5859,7 @@ object Versioned {
     * set without scanning anything. */
   private[graft] def plannedFilesEq(spark: SparkSession, dir: String,
       predicate: Column, version: Option[Int] = None): Seq[String] = {
-    val fs = fileSystem(spark, dir)
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $dir"))
-    require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
-    val m = readManifest(fs, dir, v)
+    val m = manifestAt(spark, dir, version)._2
     val pred = resolvedPredicate(spark, m.schema, predicate)
     pruneWithIndex(spark, dir, m, pred).map(parseLine(_)._1)
   }
@@ -6627,11 +5877,7 @@ object Versioned {
     */
   def readEq(spark: SparkSession, dir: String, predicate: Column,
       version: Option[Int] = None): DataFrame = {
-    val fs = fileSystem(spark, dir)
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $dir"))
-    require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
-    val m = readManifest(fs, dir, v)
+    val m = manifestAt(spark, dir, version)._2
     val schema = m.schema
     val pred = resolvedPredicate(spark, schema, predicate)
     val kept = pruneWithIndex(spark, dir, m, pred)
@@ -6659,11 +5905,7 @@ object Versioned {
   def rowCountFromMetadata(spark: SparkSession, dir: String,
       version: Option[Int] = None): Option[Long] = {
     import org.apache.spark.sql.functions.col
-    val fs = fileSystem(spark, dir)
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $dir"))
-    require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
-    val m = readManifest(fs, dir, v)
+    val m = manifestAt(spark, dir, version)._2
     val perFile = m.lines.map { l =>
       parseStatsFull(l)._2.flatMap(_.rows).headOption
     }
@@ -6709,11 +5951,7 @@ object Versioned {
       version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, count}
     import spark.implicits._
-    val fs = fileSystem(spark, dir)
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $dir"))
-    require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
-    val m = readManifest(fs, dir, v)
+    val m = manifestAt(spark, dir, version)._2
     val rowsPerFile: Seq[(String, Option[Long])] = m.lines.map { l =>
       val (rel, gs) = parseStatsFull(l)
       (rel, gs.flatMap(_.rows).headOption)
@@ -6796,10 +6034,7 @@ object Versioned {
       version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
     val fs = fileSystem(spark, dir)
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $dir"))
-    require(fs.exists(manifestPath(dir, v)), s"version $v not found in $dir")
-    val m = readManifest(fs, dir, v)
+    val (v, m) = manifestAt(spark, dir, version)
     val bytesOf: Map[String, Long] = m.lines.map { l =>
       val rel = parseLine(l)._1
       rel -> fs.getFileStatus(new Path(dir, rel)).getLen
@@ -7274,7 +6509,7 @@ object Versioned {
     val tableSchema = tail.schema
     val feedMap = tail.colMap
     var prev: Option[(Int, Manifest)] = None
-    def manifestAt(v: Int): Manifest = {
+    def foldedAt(v: Int): Manifest = {
       val node = readRaw(fs, dir, v)
       val m = node.base match {
         case Some((pv, depth)) if prev.exists(_._1 == pv) =>
@@ -7288,12 +6523,12 @@ object Versioned {
     // fromVersion may be -1 (a stream anchored on an about-to-be-
     // created table): version 0's full content is then the first
     // "append", diffed against an empty state
-    if (fromVersion >= 0) manifestAt(fromVersion)
+    if (fromVersion >= 0) foldedAt(fromVersion)
     val parts = ((fromVersion + 1).max(0) to toVersion)
       .flatMap { v =>
         val prevLines = prev.map(_._2.lines).getOrElse(Nil)
         val prevDvs = prev.map(_._2.dvs).getOrElse(Nil)
-        val curM = manifestAt(v)
+        val curM = foldedAt(v)
         val prevRels = prevLines.map(parseLine(_)._1).toSet
         val curRels = curM.lines.map(parseLine(_)._1).toSet
         val added = curM.lines.filterNot(l =>

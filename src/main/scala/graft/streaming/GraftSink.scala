@@ -59,6 +59,9 @@ import graft.lake.Versioned
   * wins, and tombstones are retained by default so a late update
   * older than an applied delete cannot resurrect the key (read the
   * live view with `op <> deleteOp`; `deleteOp` defaults to "D").
+  * Key columns must not be NULL: a NULL-keyed row fails its batch,
+  * naming the key column (under SQL equality it would match nothing
+  * and insert again on every later batch).
   * `.option("tombstones", "drop")` is the live-table shape instead:
   * a winning delete removes the row — correct when the feed's seq is
   * per-key monotone across batches. `seqColumn` WITHOUT `opColumn`
